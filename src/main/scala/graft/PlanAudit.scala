@@ -112,6 +112,17 @@ object PlanAudit {
       "mr_wordcount" -> Map(
         "partial count before shuffle" -> (_.contains("partial_count")),
         "only text column read" -> (p => !p.contains("doc_id"))),
+      // the engine's job shape: in-mapper combine, then ONE
+      // hash(key) mod R exchange into a key-run walk — never a typed
+      // aggregate around a shuffle, nor a second round-robin exchange
+      // (the final orderBy's range exchange is the query's own)
+      "mr_wordcount_engine" -> Map(
+        "single hash exchange" -> { p =>
+          val physical = p.split("Found \\d+ WholeStageCodegen subtree").head
+          "Exchange hashpartitioning".r.findAllIn(physical).size == 1 &&
+            !physical.contains("RoundRobinPartitioning")
+        },
+        "no ObjectHashAggregate" -> (p => !p.contains("ObjectHashAggregate"))),
       "q9_profit_by_nation" -> Map(
         "part/supplier/nation dims broadcast" ->
           (p => "BroadcastHashJoin".r.findAllIn(p).size >= 3),

@@ -1,9 +1,9 @@
 package graft.mr
 
 import java.util.UUID
-import java.util.concurrent.{ConcurrentHashMap, Executors}
+import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, Executors, TimeUnit, TimeoutException}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Job lifecycle + stats parity with the reference's
@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   *   Start(body) → jobId      (async, like MapReduceNode.Start)
   *   Status(jobId) → Boolean  (isCompleted)
   *   Done(jobId)              (frees tracking state)
-  *   Stats(jobId)             (wall time, Spark job/task counts,
+  *   Stats(jobId)             (wall time, Spark job and launched-task counts,
   *                             per-task duration p50/p95 — the
   *                             statsManager.go:30 per-task timings —
   *                             and the failure cause when one exists)
@@ -61,6 +61,12 @@ final class JobTracker(spark: SparkSession) {
   // stage → owning job group, so task-end events (which carry only a
   // stageId) can be attributed to the tracked job
   private val stageToJob = new ConcurrentHashMap[Int, String]()
+  // Spark job → owning group while the listener has seen its start but
+  // not its end; the worker waits for a group's entries to drain so its
+  // stats are complete before the job is reported terminal
+  private val openSparkJobs = new ConcurrentHashMap[Int, String]()
+  // completed by the worker once the job's terminal state is recorded
+  private val finished = new ConcurrentHashMap[String, CompletableFuture[Unit]]()
   private val pool = Executors.newCachedThreadPool()
 
   private val listener = new SparkListener {
@@ -68,17 +74,24 @@ final class JobTracker(spark: SparkSession) {
       val group = Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
       if (group != null && jobs.containsKey(group)) {
         js.stageInfos.foreach(si => stageToJob.put(si.stageId, group))
+        openSparkJobs.put(js.jobId, group)
         jobs.computeIfPresent(group, (_, st) => st.copy(
           status = "working",
-          sparkJobs = st.sparkJobs + 1,
-          tasks = st.tasks + js.stageInfos.map(_.numTasks).sum))
+          sparkJobs = st.sparkJobs + 1))
       }
     }
+    override def onJobEnd(je: SparkListenerJobEnd): Unit =
+      if (openSparkJobs.remove(je.jobId) != null) openSparkJobs.synchronized {
+        openSparkJobs.notifyAll()
+      }
+    // counted per finished task, not from the job's stage list: stages
+    // skipped because their output already exists launch no tasks
     override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
       val group = stageToJob.get(te.stageId)
       if (group != null && te.taskInfo != null) {
         jobs.computeIfPresent(group, (_, st) =>
           st.copy(
+            tasks = st.tasks + 1,
             taskDurationsMs = st.taskDurationsMs :+ te.taskInfo.duration,
             taskExecutors = st.taskExecutors :+
               ((te.taskInfo.executorId, te.taskInfo.duration))))
@@ -91,25 +104,45 @@ final class JobTracker(spark: SparkSession) {
   def start(body: => Unit): String = {
     val jobId = UUID.randomUUID().toString
     jobs.put(jobId, JobStats(jobId, "starting", System.currentTimeMillis(), 0L, 0, 0))
+    val signal = new CompletableFuture[Unit]()
+    finished.put(jobId, signal)
     pool.submit(new Runnable {
       override def run(): Unit = {
         spark.sparkContext.setJobGroup(jobId, s"graft-mr-$jobId")
         try {
-          body
-          jobs.computeIfPresent(jobId, (_, st) =>
-            st.copy(status = "completed", endMs = System.currentTimeMillis()))
-        } catch {
-          case e: Throwable =>
-            // keep the cause: the reference surfaces job failure state
-            // to Status() pollers, and a swallowed message made the r2
-            // tracker useless for diagnosing WHY (VERDICT r2 item 3)
-            jobs.computeIfPresent(jobId, (_, st) =>
-              st.copy(status = "failed", endMs = System.currentTimeMillis(),
-                failure = Option(e.getMessage).orElse(Some(e.getClass.getName))))
-        } finally spark.sparkContext.clearJobGroup()
+          // keep the cause: the reference surfaces job failure state
+          // to Status() pollers, and a swallowed message made the r2
+          // tracker useless for diagnosing WHY (VERDICT r2 item 3)
+          val failure =
+            try { body; None }
+            catch {
+              case e: Throwable => Some(Option(e.getMessage).getOrElse(e.getClass.getName))
+            }
+          awaitListener(jobId)
+          jobs.computeIfPresent(jobId, (_, st) => st.copy(
+            status = if (failure.isEmpty) "completed" else "failed",
+            endMs = System.currentTimeMillis(), failure = failure))
+        } finally {
+          spark.sparkContext.clearJobGroup()
+          signal.complete(())
+        }
       }
     })
     jobId
+  }
+
+  /** Listener events are delivered asynchronously, but Spark posts a
+    * job's task-end events before its job-end event, and both before
+    * the action returns. Waiting until every Spark job of the group
+    * whose start the listener saw has also ended therefore makes the
+    * job's stats complete before it is reported terminal. Bounded, so
+    * a stalled listener bus can only delay the report. */
+  private def awaitListener(jobId: String): Unit = {
+    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(2)
+    openSparkJobs.synchronized {
+      while (openSparkJobs.containsValue(jobId) && System.nanoTime() < deadline)
+        openSparkJobs.wait(math.max(1L, TimeUnit.NANOSECONDS.toMillis(deadline - System.nanoTime())))
+    }
   }
 
   /** Per-job cancel — parity with the reference's `Kill()`
@@ -136,14 +169,19 @@ final class JobTracker(spark: SparkSession) {
   /** Parity with MapReduceNode.Done — release tracking state. */
   def done(jobId: String): Unit = {
     jobs.remove(jobId)
+    finished.remove(jobId)
     stageToJob.entrySet().removeIf(e => e.getValue == jobId)
   }
 
-  /** Block until the job completes (test helper; the reference's test
-    * polls Status in a sleep loop, pkg_test.go:73). */
+  /** Block until the job completes or `timeoutMs` passes; returns
+    * [[status]]. Wakes on the worker's completion signal rather than
+    * polling (the reference's test polls Status in a sleep loop,
+    * pkg_test.go:73). */
   def await(jobId: String, timeoutMs: Long = 120000L): Boolean = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    while (!status(jobId) && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    Option(finished.get(jobId)).foreach { f =>
+      try f.get(timeoutMs, TimeUnit.MILLISECONDS)
+      catch { case _: TimeoutException => () }
+    }
     status(jobId)
   }
 

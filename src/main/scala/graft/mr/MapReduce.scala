@@ -1,8 +1,10 @@
 package graft.mr
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Dataset, Encoder}
+import org.apache.spark.sql.{Column, Dataset, Encoder}
+import org.apache.spark.sql.functions.col
 
 /** The reference's programming model (Mapper/Reducer/Emitter,
   * /root/reference/mapper.go:13, reducer.go:13, emitter.go:17),
@@ -13,16 +15,22 @@ import org.apache.spark.sql.{Dataset, Encoder}
   * emittedStore.go), task assignment, retry, completion tracking
   * (taskManager.go, mapreduce.go) — maps 1:1 onto Spark's input
   * splits, shuffle, and DAG scheduler, so the engine here is only the
-  * semantic core: flatMap → (optional map-side combine) → grouped
-  * reduce.
+  * semantic core. Every job compiles to the reference's own shape:
+  *
+  *   map tasks (+ in-mapper combine) → ONE exchange,
+  *   hashpartitioning(key, R) → per-partition sort on key → one
+  *   streaming walk over the key runs that calls the reducer.
   *
   * Scale note: always supply a [[Combiner]] when the reduction is
-  * associative — that path compiles to `reduceGroups`, whose physical
-  * plan does partial aggregation before the shuffle (the difference
-  * between shuffling one pair per (mapper, word) and one pair per
-  * word occurrence at 100 TB). The combiner-less path streams each
-  * key's values through the reducer exactly once, like the
-  * reference's ReduceTask.execute (tasks.go:139).
+  * associative. Each map task then folds its pairs into a bounded
+  * per-task hash table (in-mapper combining: one pair per (mapper,
+  * key) crosses the shuffle instead of one per emit), and the reduce
+  * side folds each key run before calling the reducer once with the
+  * combined value. The combiner-less path streams each key's values
+  * through the reducer exactly once, like the reference's
+  * ReduceTask.execute (tasks.go:139). Neither path adds a typed
+  * aggregate or a second exchange (PlanAudit checks the shape on
+  * `mr_wordcount_engine`).
   */
 trait Emitter[K2, V2] {
   def emit(key: K2, value: V2): Unit
@@ -44,15 +52,17 @@ trait Combiner[V2] extends Serializable {
 }
 
 /** Full-field parity with the reference's JobConfig (jobConfig.go:6).
-  * `m` (map task count) is advisory only — Spark derives input splits
-  * from the source; `r` (reduce partitions) controls the partitioning
-  * of the result, like the reference's one-output-object-per-reduce-
-  * partition. 0 = let Spark/AQE decide. The input/output fields
-  * resolve to Inputers/Outputers exactly like the reference wires
-  * them: a prechunked `inputFolder` reads one value per stored chunk
-  * object; a monolithic `inputFile` is split into ~`m` line-boundary
-  * chunks on the fly (the reference calls SplitFileIntoChunks up
-  * front instead); `outputFolder` gets one object per reduced key
+  * `m` (map task count) sizes the chunks of a monolithic input file;
+  * other inputs keep their source's splits. `r` is the number of
+  * reduce tasks, exactly as in the reference: intermediate keys go
+  * to partition hash(key) mod r, and the result has r partitions (one
+  * output file per reduce partition). 0 = one reduce task per core
+  * slot (`defaultParallelism`). The input/output fields resolve to
+  * Inputers/Outputers exactly like the reference wires them: a
+  * prechunked `inputFolder` reads one value per stored chunk object;
+  * a monolithic `inputFile` is split into ~`m` line-boundary chunks
+  * on the fly (the reference calls SplitFileIntoChunks up front
+  * instead); `outputFolder` gets one object per reduced key
   * (S3Outputer parity). */
 final case class JobConfig(
     m: Int = 0,
@@ -74,6 +84,12 @@ final case class JobConfig(
 
 object MapReduceJob {
 
+  /** Entries a map task's combine table holds before it is flushed
+    * downstream: bounds map-side memory whatever the key cardinality.
+    * A flush only costs combining (a key may then cross the shuffle
+    * more than once per task); the reduce side folds the rest. */
+  private[mr] val CombineCap = 1 << 16
+
   /** Run a map-reduce job over a keyed dataset. */
   def run[K1, V1, K2, V2, Out](
       input: Dataset[(K1, V1)],
@@ -81,74 +97,45 @@ object MapReduceJob {
       reducer: Reducer[K2, V2, Out],
       combiner: Option[Combiner[V2]] = None,
       config: JobConfig = JobConfig())(implicit
-      kEnc: Encoder[K2],
       kvEnc: Encoder[(K2, V2)],
-      vEnc: Encoder[V2],
       outEnc: Encoder[(K2, Out)]): Dataset[(K2, Out)] = {
 
     val mapped = input.mapPartitions { it =>
-      it.flatMap { case (k, v) =>
-        val buf = ArrayBuffer.empty[(K2, V2)]
-        mapper.map(k, v, (k2: K2, v2: V2) => { buf += ((k2, v2)); () })
-        buf
+      combiner match {
+        case Some(c) => new CombiningMapIterator(it, mapper, c)
+        case None =>
+          it.flatMap { case (k, v) =>
+            val buf = ArrayBuffer.empty[(K2, V2)]
+            mapper.map(k, v, (k2: K2, v2: V2) => { buf += ((k2, v2)); () })
+            buf
+          }
       }
     }
-
-    val grouped = mapped.groupByKey(_._1)
-    val reduced = combiner match {
-      case Some(c) =>
-        grouped
-          .mapValues(_._2)
-          .reduceGroups((a: V2, b: V2) => c.combine(a, b))
-          .map { case (k, v) => (k, reducer.reduce(k, Iterator.single(v))) }
-      case None =>
-        grouped.mapGroups { (k, it) => (k, reducer.reduce(k, it.map(_._2))) }
+    val reduce: (K2, Iterator[V2]) => Out = combiner match {
+      case Some(c) => (k, vs) => reducer.reduce(k, Iterator.single(vs.reduce(c.combine)))
+      case None    => reducer.reduce
     }
-    if (config.r > 0) reduced.repartition(config.r) else reduced
+    reduceKeyRuns(mapped, Seq(col("_1")), config)(reduce)
   }
 
   /** Secondary sort: the reducer sees each key's values in
     * `sortCols` order — the classic Hadoop composite-key pattern
     * (partition by natural key, sort by (key, value-fields), walk key
-    * runs). Compiled to `repartition(key)` + `sortWithinPartitions`,
-    * so ordering comes from the shuffle's sort machinery (spillable,
-    * O(1) memory per group) — values are streamed to the reducer, not
-    * buffered per key, exactly like Hadoop's grouping comparator.
-    * `sortCols` must order by `_1` first; ties across the remaining
-    * columns should be broken to a total order for determinism. */
+    * runs). It is the same exchange and key-run walk as [[run]], with
+    * a longer sort key, so ordering comes from the shuffle's sort
+    * machinery (spillable, O(1) memory per group) — values are
+    * streamed to the reducer, not buffered per key, exactly like
+    * Hadoop's grouping comparator. `sortCols` must order by `_1`
+    * first; ties across the remaining columns should be broken to a
+    * total order for determinism. */
   def runSecondarySort[K2, V2, Out](
       input: Dataset[(K2, V2)],
       reducer: Reducer[K2, V2, Out],
-      sortCols: Seq[org.apache.spark.sql.Column],
+      sortCols: Seq[Column],
       config: JobConfig = JobConfig())(implicit
       kvEnc: Encoder[(K2, V2)],
-      outEnc: Encoder[(K2, Out)]): Dataset[(K2, Out)] = {
-    val parts =
-      if (config.r > 0) config.r
-      else input.sparkSession.sessionState.conf.numShufflePartitions
-    // normalize column names so sortCols can address `_1` / `_2.field`
-    // regardless of what the caller's select named them
-    val kv = input.toDF("_1", "_2").as[(K2, V2)]
-    val sorted = kv
-      .repartition(parts, kv.col("_1"))
-      .sortWithinPartitions(sortCols: _*)
-    sorted.mapPartitions { it =>
-      val buf = it.buffered
-      new scala.collection.AbstractIterator[(K2, Out)] {
-        def hasNext: Boolean = buf.hasNext
-        def next(): (K2, Out) = {
-          val k = buf.head._1
-          val vals: Iterator[V2] = new scala.collection.AbstractIterator[V2] {
-            def hasNext: Boolean = buf.hasNext && buf.head._1 == k
-            def next(): V2 = buf.next()._2
-          }
-          val out = reducer.reduce(k, vals)
-          while (vals.hasNext) vals.next() // drain any unconsumed tail
-          (k, out)
-        }
-      }
-    }
-  }
+      outEnc: Encoder[(K2, Out)]): Dataset[(K2, Out)] =
+    reduceKeyRuns(input, sortCols, config)(reducer.reduce)
 
   /** End-to-end parity with the reference's `Start(config, ...)`
     * (mapreduce.go): resolve the config's Inputer, run the job, write
@@ -161,12 +148,85 @@ object MapReduceJob {
       reducer: Reducer[String, V2, Out],
       combiner: Option[Combiner[V2]] = None)(implicit
       kvEnc: Encoder[(String, V2)],
-      vEnc: Encoder[V2],
       outEnc: Encoder[(String, Out)]): Unit = {
-    import spark.implicits.newStringEncoder
     val out = run(config.inputer.toDataset(spark), mapper, reducer, combiner, config)
     config.outputer.write(out)
   }
+
+  /** The reduce side every job shares: one exchange,
+    * hashpartitioning(`_1`, R), a per-partition sort on `sortCols`,
+    * then one pass that hands each run of equal keys to `reduce`.
+    * R is `config.r`, else one reduce task per core slot — never the
+    * SQL-wide `spark.sql.shuffle.partitions` default. */
+  private def reduceKeyRuns[K2, V2, Out](
+      pairs: Dataset[(K2, V2)], sortCols: Seq[Column], config: JobConfig)(
+      reduce: (K2, Iterator[V2]) => Out)(implicit
+      kvEnc: Encoder[(K2, V2)],
+      outEnc: Encoder[(K2, Out)]): Dataset[(K2, Out)] = {
+    // normalize column names so sortCols can address `_1` / `_2.field`
+    // regardless of what the caller's select named them
+    val kv = pairs.toDF("_1", "_2").as[(K2, V2)]
+    val r = if (config.r > 0) config.r else kv.sparkSession.sparkContext.defaultParallelism
+    kv.repartition(r, kv.col("_1"))
+      .sortWithinPartitions(sortCols: _*)
+      .mapPartitions(it => new KeyRunIterator(it.buffered, reduce))
+  }
+}
+
+/** Walks a key-sorted partition one run of equal keys at a time; the
+  * run's values are streamed to `reduce`, and whatever it leaves
+  * unconsumed is drained so the next run starts at its own key. */
+private final class KeyRunIterator[K2, V2, Out](
+    buf: BufferedIterator[(K2, V2)], reduce: (K2, Iterator[V2]) => Out)
+    extends scala.collection.AbstractIterator[(K2, Out)] {
+  def hasNext: Boolean = buf.hasNext
+  def next(): (K2, Out) = {
+    val k = buf.head._1
+    val vals: Iterator[V2] = new scala.collection.AbstractIterator[V2] {
+      def hasNext: Boolean = buf.hasNext && buf.head._1 == k
+      def next(): V2 = buf.next()._2
+    }
+    val out = reduce(k, vals)
+    while (vals.hasNext) vals.next() // drain any unconsumed tail
+    (k, out)
+  }
+}
+
+/** In-mapper combining: a map task's emits fold into one hash table
+  * per task, which is flushed downstream whenever it reaches
+  * [[MapReduceJob.CombineCap]] entries and once more at the end of
+  * the input. */
+private final class CombiningMapIterator[K1, V1, K2, V2](
+    in: Iterator[(K1, V1)], mapper: Mapper[K1, V1, K2, V2], c: Combiner[V2])
+    extends scala.collection.AbstractIterator[(K2, V2)] with Emitter[K2, V2] {
+  private var table = new java.util.HashMap[K2, V2]()
+  private var out: Iterator[(K2, V2)] = Iterator.empty
+
+  def emit(key: K2, value: V2): Unit = {
+    val prev = table.get(key)
+    if (prev == null && !table.containsKey(key)) {
+      table.put(key, value)
+      if (table.size >= MapReduceJob.CombineCap) flush()
+    } else table.put(key, c.combine(prev, value))
+  }
+
+  private def flush(): Unit = {
+    val full = table
+    table = new java.util.HashMap[K2, V2]()
+    out = out ++ full.entrySet().iterator().asScala.map(e => (e.getKey, e.getValue))
+  }
+
+  def hasNext: Boolean = {
+    while (!out.hasNext && in.hasNext) {
+      val (k, v) = in.next()
+      mapper.map(k, v, this)
+    }
+    if (!out.hasNext && !table.isEmpty) flush()
+    out.hasNext
+  }
+
+  def next(): (K2, V2) =
+    if (hasNext) out.next() else throw new NoSuchElementException("end of map output")
 }
 
 /** The reference's demo job: word-frequency counting

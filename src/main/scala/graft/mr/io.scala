@@ -1,5 +1,9 @@
 package graft.mr
 
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.fs.{FSDataInputStream, Path}
+import org.apache.spark.SerializableWritable
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -64,9 +68,11 @@ final case class TextDirInputer(dir: String, prefix: String = "") extends Inpute
 
 /** Line-boundary chunking parity (SplitFileIntoChunks,
   * /root/reference/s3_utils.go:71): the file is split into ~chunkBytes
-  * pieces at line boundaries; key = chunk number. On Spark the split
-  * is done by the text source's own partitioning
-  * (`maxPartitionBytes`), so chunking never touches the driver. */
+  * pieces at line boundaries; key = chunk number. Chunk i starts after
+  * the first newline at or past byte i·chunkBytes − 1 (chunk 0 at byte
+  * 0), so the chunks are the file's bytes exactly, in order, every
+  * line whole. Each map task reads only its own byte range; chunking
+  * never touches the driver and never changes session settings. */
 final case class ChunkedTextInputer(path: String, chunkBytes: Long) extends Inputer {
   override def listKeys(spark: SparkSession): Seq[String] =
     (0 until toDataset(spark).rdd.getNumPartitions).map(_.toString)
@@ -79,22 +85,45 @@ final case class ChunkedTextInputer(path: String, chunkBytes: Long) extends Inpu
     toDataset(spark).filter(col("_1") === key).head()._2
   override def toDataset(spark: SparkSession): Dataset[(String, String)] = {
     import spark.implicits._
-    val prev = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", chunkBytes.toString)
-    try {
-      val lines = spark.read.textFile(path)
-      lines.rdd
-        .mapPartitionsWithIndex { (i, it) =>
-          val sb = new StringBuilder
-          it.foreach { l => sb.append(l).append('\n') }
-          if (sb.isEmpty) Iterator.empty else Iterator((i.toString, sb.toString))
-        }
-        .toDS()
-    } finally {
-      prev.fold(spark.conf.unset("spark.sql.files.maxPartitionBytes"))(v =>
-        spark.conf.set("spark.sql.files.maxPartitionBytes", v))
-    }
+    val size = Fs.len(path)
+    val step = math.max(1L, chunkBytes)
+    val n = math.max(1L, (size + step - 1) / step).toInt
+    val conf = spark.sparkContext.broadcast(
+      new SerializableWritable(spark.sessionState.newHadoopConf()))
+    val file = path
+    spark.sparkContext.parallelize(0 until n, n)
+      .mapPartitions(_.flatMap { i =>
+        val p = new Path(file)
+        val in = p.getFileSystem(conf.value.value).open(p)
+        try {
+          val start = ChunkedTextInputer.lineStart(in, i * step, size)
+          val end = ChunkedTextInputer.lineStart(in, (i + 1) * step, size)
+          if (end <= start) None
+          else {
+            val bytes = new Array[Byte]((end - start).toInt)
+            in.readFully(start, bytes)
+            Some((i.toString, new String(bytes, StandardCharsets.UTF_8)))
+          }
+        } finally in.close()
+      })
+      .toDS()
   }
+}
+
+object ChunkedTextInputer {
+  /** Offset of the first line that starts at or after `pos`: 0 for
+    * pos ≤ 0, else the byte after the first newline at or past
+    * pos − 1, or `size` when there is none. */
+  private def lineStart(in: FSDataInputStream, pos: Long, size: Long): Long =
+    if (pos <= 0L) 0L
+    else if (pos >= size) size
+    else {
+      in.seek(pos - 1)
+      var at = pos - 1
+      var b = in.read()
+      while (b >= 0 && b != '\n') { at += 1; b = in.read() }
+      if (b < 0) size else at + 1
+    }
 }
 
 /** Structured table as keyed input (parquet/csv/json/orc):

@@ -103,9 +103,12 @@ class ChaosSpec extends SparkTestBase {
       val input = graft.Tables.documents(s, sfDir)
         .select($"doc_id".cast("string"), $"text").as[(String, String)]
         .repartition(16) // multi-task map stages (the corpus is 1 file)
+      // the engine sizes its reduce side from JobConfig.r, not from
+      // spark.sql.shuffle.partitions: ask for the same 16-wide breadth
+      val wide = JobConfig(r = 16)
       val counts = MapReduceJob.run(input,
         new WordCount.WordCountMapper, new WordCount.SumReducer,
-        Some(WordCount.SumCombiner))
+        Some(WordCount.SumCombiner), wide)
       val freqMapper = new Mapper[String, Long, Long, Long] {
         def map(k: String, v: Long, e: Emitter[Long, Long]): Unit = e.emit(v, 1L)
       }
@@ -115,7 +118,7 @@ class ChaosSpec extends SparkTestBase {
       MapReduceJob.run(counts, freqMapper, sumReducer,
           Some(new Combiner[Long] {
             def combine(a: Long, b: Long): Long = a + b
-          }))
+          }), wide)
         .collect().map(_.toString).sorted
     }
     val (clean, chaotic, injected, tasks) = cleanVsChaos(0.1)(run)

@@ -2,6 +2,10 @@ package graft.mr
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.functions._
 
 import graft.{SparkTestBase, Tables}
@@ -59,9 +63,78 @@ class MapReduceSpec extends SparkTestBase {
 
   test("JobConfig.r controls output partitioning") {
     import spark.implicits._
-    val out = MapReduceJob.run(docsInput, new WordCount.WordCountMapper,
-      new WordCount.SumReducer, Some(WordCount.SumCombiner), JobConfig(r = 3))
-    assert(out.rdd.getNumPartitions == 3)
+    def parts(r: Int, combiner: Option[Combiner[Long]]) =
+      MapReduceJob.run(docsInput, new WordCount.WordCountMapper,
+        new WordCount.SumReducer, combiner, JobConfig(r = r)).rdd.getNumPartitions
+    for (c <- Seq(Some(WordCount.SumCombiner), None)) {
+      assert(parts(3, c) == 3)
+      // r = 0: one reduce task per core slot, not spark.sql.shuffle.partitions
+      assert(parts(0, c) == spark.sparkContext.defaultParallelism)
+    }
+  }
+
+  test("combine table flushes at its cap: exact counts past the cap, == no-combiner") {
+    import spark.implicits._
+    val distinct = MapReduceJob.CombineCap * 2 + 123
+    // ONE input record (so one map task, one combine table) emitting
+    // every key twice: the table must flush at least twice mid-record
+    val input = Seq(("only", distinct.toString)).toDS().repartition(1)
+    val mapper = new Mapper[String, String, Int, Long] {
+      override def map(k: String, v: String, em: Emitter[Int, Long]): Unit = {
+        val n = v.toInt
+        (0 until n).foreach(i => em.emit(i, 1L))
+        (0 until n).foreach(i => em.emit(i, (i % 3).toLong))
+      }
+    }
+    val sum = new Reducer[Int, Long, Long] {
+      override def reduce(k: Int, vs: Iterator[Long]): Long = vs.sum
+    }
+    val withC = MapReduceJob.run(input, mapper, sum,
+      Some(new Combiner[Long] { def combine(a: Long, b: Long): Long = a + b }))
+      .collect().toMap
+    val withoutC = MapReduceJob.run(input, mapper, sum).collect().toMap
+    assert(withC.size == distinct)
+    assert(withC.forall { case (k, n) => n == 1L + k % 3 }, "combined counts are not exact")
+    assert(withC == withoutC)
+  }
+
+  test("run compiles to exactly one hash exchange, with and without a combiner") {
+    import spark.implicits._
+    object Plans extends AdaptiveSparkPlanHelper
+    val input = Seq(("a", "x y x"), ("b", "y z")).toDS()
+    for (c <- Seq(Some(WordCount.SumCombiner), None)) {
+      val out = MapReduceJob.run(input, new WordCount.WordCountMapper,
+        new WordCount.SumReducer, c, JobConfig(r = 3))
+      assert(out.collect().toMap == Map("x" -> 2L, "y" -> 2L, "z" -> 1L))
+      val plan = out.queryExecution.executedPlan
+      val exchanges = Plans.collect(plan) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size == 1, s"combiner=${c.isDefined}: $plan")
+      exchanges.head.outputPartitioning match {
+        case h: HashPartitioning => assert(h.numPartitions == 3)
+        case other => fail(s"expected hashpartitioning, got $other")
+      }
+      assert(Plans.collect(plan) { case a: ObjectHashAggregateExec => a }.isEmpty, plan.toString)
+      assert(!plan.toString.contains("RoundRobinPartitioning"), plan.toString)
+    }
+  }
+
+  test("combiner-less reducer sees every value of its key exactly once") {
+    import spark.implicits._
+    val input = Tables.documents(spark, sfDir)
+      .select($"lang", $"doc_id".cast("string")).as[(String, String)]
+    val mapper = new Mapper[String, String, String, String] {
+      override def map(k: String, v: String, em: Emitter[String, String]): Unit = em.emit(k, v)
+    }
+    val collectAll = new Reducer[String, String, Seq[String]] {
+      override def reduce(k: String, vs: Iterator[String]): Seq[String] = vs.toVector.sorted
+    }
+    val got = MapReduceJob.run(input, mapper, collectAll).collect().toMap
+    val expected = Tables.documents(spark, sfDir)
+      .groupBy($"lang").agg(collect_list($"doc_id".cast("string")).as("ids"))
+      .as[(String, Seq[String])].collect()
+      .map { case (k, ids) => k -> ids.sorted }.toMap
+    assert(got.nonEmpty)
+    assert(got == expected)
   }
 
   test("JobTracker lifecycle: start → working → completed, stats counted") {
@@ -207,6 +280,40 @@ class MapReduceSpec extends SparkTestBase {
     assert(chunks.length > 1, "expected multiple chunks for 2KB chunk size")
     val reassembled = chunks.sortBy(_._1.toInt).map(_._2).mkString
     assert(reassembled.split("\n").toSeq == lines)
+  }
+
+  test("ChunkedTextInputer: chunks are the file's exact bytes") {
+    val f = Files.createTempFile("graft-chunk-bytes", ".txt")
+    // CRLF and LF endings, a multi-byte character, a blank line and no
+    // trailing newline: concatenating the chunks must give the file back
+    val text = (1 to 400).map(i => if (i % 7 == 0) s"zeile-$i ü\r" else s"line-$i")
+      .mkString("", "\n", "\n\nlast line, no newline")
+    Files.writeString(f, text)
+    for (chunk <- Seq(1L, 64L, 1000L, 1L << 20)) {
+      val chunks = ChunkedTextInputer(f.toString, chunk).toDataset(spark).collect()
+      assert(chunks.map(_._2).forall(_.nonEmpty))
+      assert(chunks.sortBy(_._1.toInt).map(_._2).mkString == text, s"chunkBytes=$chunk")
+      // every chunk but the last ends at a line boundary
+      assert(chunks.sortBy(_._1.toInt).init.forall(_._2.endsWith("\n")))
+    }
+  }
+
+  test("concurrent ChunkedTextInputer.toDataset calls leave maxPartitionBytes untouched") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val key = "spark.sql.files.maxPartitionBytes"
+    val f = Files.createTempFile("graft-chunk-conf", ".txt")
+    Files.writeString(f, (1 to 2000).map(i => s"w$i w${i % 10}").mkString("\n"))
+    val before = spark.conf.getOption(key)
+    val calls = Future.sequence((1 to 4).map { i =>
+      Future(ChunkedTextInputer(f.toString, 512L * i).toDataset(spark).count())
+    })
+    val seen = scala.collection.mutable.Set[Option[String]]()
+    while (!calls.isCompleted) { seen += spark.conf.getOption(key); Thread.sleep(1) }
+    assert(Await.result(calls, 2.minutes).forall(_ > 1))
+    seen += spark.conf.getOption(key)
+    assert(seen == Set(before), s"$key changed while chunking: $seen")
   }
 
   test("outputers round-trip") {
