@@ -224,9 +224,13 @@ object PlanAudit {
         "shortlist via native TopKPerKey" -> (_.contains("TopKPerKey")),
         "no cartesian" -> (p => !p.contains("CartesianProduct"))),
       "dedup_incremental" -> Map(
-        // the corpus side must come from the persisted index files,
-        // not a recomputation over the corpus text
-        "reads persisted corpus index" -> (_.contains("graft-incidx")),
+        // the corpus side must come from the committed index attempt,
+        // not a recomputation over the corpus text (scan locations
+        // print abbreviated: match the index root + its attempt dir)
+        "reads persisted corpus index" -> (p => operators.IndexStore.committed(
+          operators.DedupOps.IncrementalIndex.Name,
+          operators.DedupOps.IncrementalIndex.key(sfDir, 0.5)).exists(a =>
+            p.contains(new org.apache.hadoop.fs.Path(a).getParent.getName + "/a-"))),
         "no cartesian" -> (p => !p.contains("CartesianProduct"))),
       "mm_mp4_meta" -> Map(
         // parse is map-only per payload: container bytes never

@@ -15,10 +15,10 @@ import org.apache.spark.sql.SparkSession
   * code serves local runs and object stores.
   *
   * S3/S3A semantics assumptions, made explicit:
-  *  - `_READY` markers are created AFTER their data is fully
-  *    written; S3 has been strongly read-after-write and
-  *    list-after-write consistent since 2020, so marker-gated reads
-  *    need no rename-commit tricks;
+  *  - commit markers (graft.operators.IndexStore) are created AFTER
+  *    their data is fully written; S3 has been strongly
+  *    read-after-write and list-after-write consistent since 2020,
+  *    so marker-gated reads need no rename-commit tricks;
   *  - nothing here renames — writes are overwrite-by-path, the
   *    discipline S3A requires (rename is copy+delete there);
   *  - fingerprints consume (name, size, mtime) from LIST results,
@@ -26,8 +26,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Fs {
 
-  /** Root prefix for the persisted-index side-channels (IVF cells,
-    * incremental dedup shingles): `GRAFT_INDEX_ROOT` at launch — an
+  /** Root prefix for the persisted indexes
+    * (graft.operators.IndexStore): `GRAFT_INDEX_ROOT` at launch — an
     * `s3a://bucket/prefix` on a cluster — defaulting to local /tmp.
     * Test-visible override so the no-rename harness can route index
     * builds through an instrumented filesystem scheme. */

@@ -28,7 +28,8 @@ import org.apache.hadoop.util.Progressable
   *     much data-path traffic would pay the S3A rename tax.
   *   - STRONG CONSISTENCY: list-after-write and read-after-write are
   *     immediately consistent (S3 post-2020), which is the
-  *     consistency level Fs.scala's `_READY` discipline assumes.
+  *     consistency level IndexStore's marker-then-pointer commit
+  *     assumes.
   *
   * In-memory bytes mean any code path that escapes to `java.io.File`
   * on a path string fails loudly here — the exact bug class a

@@ -74,8 +74,10 @@ final case class TextDirInputer(dir: String, prefix: String = "") extends Inpute
   * line whole. Each map task reads only its own byte range; chunking
   * never touches the driver and never changes session settings. */
 final case class ChunkedTextInputer(path: String, chunkBytes: Long) extends Inputer {
+  /** Exactly the chunks `toDataset` yields: a range that starts
+    * inside a line longer than `chunkBytes` is empty and dropped. */
   override def listKeys(spark: SparkSession): Seq[String] =
-    (0 until toDataset(spark).rdd.getNumPartitions).map(_.toString)
+    toDataset(spark).rdd.map(_._1).collect().toSeq
   // SCALE NOTE: listKeys/getValue are the reference's one-object-at-a-
   // time client face (inputer.go:11) kept for API parity — getValue
   // re-scans the file to serve ONE chunk. Jobs must consume

@@ -657,23 +657,27 @@ object AnnOps {
     * partitioned by vec_id, which shuffled the whole corpus × cells;
     * PlanAudit asserts the shuffle-free shape now). Probes pick their
     * `IvfProbeCells` nearest cells the same map-side way. */
-  /** Coarse-quantizer centroids: per-label elementwise mean,
-    * decimal-exact (per-element float→double is bit-identical across
-    * engines and decimal accumulation is order-independent, so a
-    * DuckDB oracle recomputes the SAME centroids — plain avg() would
-    * expose partial-agg float association). Tiny by construction →
-    * collected and embedded as literals. */
-  private[operators] def ivfCentroids(s: SparkSession, dir: String): Seq[(Int, Seq[Double])] =
-    Tables.embeddings(s, dir)
+  /** Coarse-quantizer (cell, centroid) rows of `vecs`: per-label
+    * elementwise mean, decimal-exact (per-element float→double is
+    * bit-identical across engines and decimal accumulation is
+    * order-independent, so a DuckDB oracle recomputes the SAME
+    * centroids — plain avg() would expose partial-agg float
+    * association). Tiny by construction → collected and embedded as
+    * literals. */
+  private def centroidRows(vecs: DataFrame): DataFrame =
+    vecs
       .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
       .groupBy(col("label"), col("pos"))
       .agg((sum(col("x").cast("decimal(27,10)")).cast("double") / count(lit(1))).as("m"))
       .groupBy(col("label")).agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
       .select(col("label").cast("int").as("cell"),
         transform(col("pm"), p => p.getField("m")).as("centroid"))
-      .collect().toSeq
-      .map(r => (r.getInt(0), r.getSeq[Double](1)))
-      .sortBy(_._1)
+
+  private def collectCentroids(rows: DataFrame): Seq[(Int, Seq[Double])] =
+    rows.collect().toSeq.map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
+
+  private[operators] def ivfCentroids(s: SparkSession, dir: String): Seq[(Int, Seq[Double])] =
+    collectCentroids(centroidRows(Tables.embeddings(s, dir)))
 
   /** Per-cell (sim, cell) structs for one embedding column. Always
     * materialize the result in its own select before any multi-use
@@ -1346,52 +1350,35 @@ object AnnOps {
   }
 
   /** Persisted IVF index state for [[annIncrementalTopk]] — built once
-    * per corpus and kept on disk, exactly like the dedup suite's
-    * `IncrementalIndex`: the frozen coarse quantizer (k×d centroid
-    * rows, trained on the BASE corpus only with decimal-exact means)
-    * and the base vectors persisted CELL-PARTITIONED — the on-disk
-    * layout a production IVF index actually uses, so a probed-cell
-    * read prunes every unprobed partition at the parquet-listing
-    * level. Path keyed by a (name,size,mtime) fingerprint of the
-    * corpus files so a regenerated corpus can never serve stale
-    * state. */
+    * per corpus and committed through [[IndexStore]] like every other
+    * persisted index: the frozen coarse quantizer (`cent`, k×d
+    * centroid rows, trained on the BASE corpus only with
+    * decimal-exact means) and the base vectors (`vecs`) persisted
+    * CELL-PARTITIONED — the on-disk layout a production IVF index
+    * actually uses, so a probed-cell read prunes every unprobed
+    * partition at the parquet-listing level. Keyed by a
+    * (name,size,mtime) fingerprint of the corpus files so a
+    * regenerated corpus can never serve stale state. */
   private[operators] object IvfIndex {
+    val Name = "ivf"
     private val Version = "v1"
 
-    def root(dir: String): String = {
-      // scheme-agnostic fingerprint (graft.mr.Fs): works identically
-      // for a local dir and an s3a:// corpus prefix
-      val fp = dir + graft.mr.Fs.fingerprint(dir + "/embeddings.parquet")
-      graft.mr.Fs.indexRoot + "/graft-ivfidx-" + Version + "-" +
-        java.lang.Long.toHexString(graft.functions.Hashes.fnv64(fp))
-    }
+    def key(dir: String): String =
+      Version + ":" + dir + graft.mr.Fs.fingerprint(dir + "/embeddings.parquet")
 
     def ensure(s: SparkSession, dir: String): String = synchronized {
-      val base = root(dir)
-      if (!graft.mr.Fs.exists(base + "/_READY")) {
+      IndexStore.commit(Name, key(dir)) { out =>
         val baseVecs = Tables.embeddings(s, dir).where(col("vec_id") % 10 =!= 0)
-        baseVecs
-          .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
-          .groupBy(col("label"), col("pos"))
-          .agg((sum(col("x").cast("decimal(27,10)")).cast("double") /
-            count(lit(1))).as("m"))
-          .groupBy(col("label"))
-          .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-          .select(col("label").cast("int").as("cell"),
-            transform(col("pm"), p => p.getField("m")).as("centroid"))
-          .write.mode("overwrite").parquet(s"$base/cent")
+        centroidRows(baseVecs).write.parquet(s"$out/cent")
         baseVecs
           .select(col("vec_id"), col("embedding"),
-            cellAssignUdf(centroids(s, base))(col("embedding")).as("cell"))
-          .write.mode("overwrite").partitionBy("cell").parquet(s"$base/vecs")
-        graft.mr.Fs.touch(base + "/_READY")
+            cellAssignUdf(centroids(s, out))(col("embedding")).as("cell"))
+          .write.partitionBy("cell").parquet(s"$out/vecs")
       }
-      base
     }
 
-    def centroids(s: SparkSession, base: String): Seq[(Int, Seq[Double])] =
-      s.read.parquet(s"$base/cent").collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
+    def centroids(s: SparkSession, idx: String): Seq[(Int, Seq[Double])] =
+      collectCentroids(s.read.parquet(s"$idx/cent"))
   }
 
   /** Incremental ANN serving — the index LIFECYCLE at scale: a

@@ -707,18 +707,18 @@ object DedupOps {
   }
 
   /** Corpus-side state for [[dedupIncremental]], built ONCE per corpus
-    * and persisted (what a daily-ingest pipeline precomputes and keeps
-    * next to the corpus): the exact-dedup fingerprint keep-list, the
-    * shingle sets, the shingle document frequencies, and the
-    * prefix-filter index derived from them. Re-runs read the parquet
-    * back, so the measured cost of the query is the BATCH-side work —
-    * the claimed incremental cost — not a corpus rebuild. The path is
-    * keyed by corpus dir + shingle/τ parameters; bump `Version` when
-    * the shingling or prefix logic changes. All four frames are small
-    * relative to the corpus (ids + 8-byte hashes), and every join
+    * and committed through [[IndexStore]] (what a daily-ingest
+    * pipeline precomputes and keeps next to the corpus): the
+    * exact-dedup fingerprint keep-list, the shingle sets, the shingle
+    * document frequencies, and the prefix-filter index derived from
+    * them. Re-runs read the parquet back, so the measured cost of the
+    * query is the BATCH-side work — the claimed incremental cost —
+    * not a corpus rebuild. The key holds corpus dir + shingle/τ
+    * parameters; bump `Version` when the shingling or prefix logic
+    * changes. All four frames are small relative to the corpus (ids + 8-byte hashes), and every join
     * against them in the query has the tiny batch on the other side,
     * so AQE broadcasts the batch and the index never shuffles. */
-  private[operators] object IncrementalIndex {
+  private[graft] object IncrementalIndex {
     // v2: shingle hash switched from xxhash64 chains to FNV-1a n-grams
     // (FnvShinglesExpr) — an index persisted under v1 holds hashes no
     // current query can match
@@ -735,62 +735,53 @@ object DedupOps {
     // argument as long as both sides sort by it), and J(A,B) is a
     // function of the contents alone, so expansion is exact.
     private val Version = "v4"
+    val Name = "dedup_incremental"
 
     /** 64-bit shingle-set fingerprint — same collision budget as the
       * shingle hashes themselves (see [[shingled]]). */
     private[operators] def contentFp(c: org.apache.spark.sql.Column) =
       concat_ws(":", size(c), xxhash64(c))
 
-    /** The path is keyed by a fingerprint of the corpus FILES (name,
-      * size, mtime), not just the directory name: the test corpus is
+    /** Keyed by a fingerprint of the corpus FILES (name, size,
+      * mtime), not just the directory name: the test corpus is
       * regenerated in place between rounds, and an index keyed by
-      * path alone would silently serve stale state for new data. A
-      * production pipeline gets this for free from immutable
-      * date-partitioned corpora. */
-    def root(dir: String, tau: Double): String = {
-      // scheme-agnostic fingerprint (graft.mr.Fs): local dir and
-      // s3a:// corpus prefix alike
-      val fp = dir + graft.mr.Fs.fingerprint(dir + "/documents.parquet")
-      graft.mr.Fs.indexRoot + "/graft-incidx-" + Version + "-s" + ShingleSize +
-        "-t" + (tau * 100).toInt + "-" +
-        java.lang.Long.toHexString(graft.functions.Hashes.fnv64(fp))
-    }
+      * path alone would silently serve stale state for new data. */
+    def key(dir: String, tau: Double): String =
+      s"$Version:s$ShingleSize:t${(tau * 100).toInt}:" + dir +
+        graft.mr.Fs.fingerprint(dir + "/documents.parquet")
 
     def ensure(
         s: org.apache.spark.sql.SparkSession, dir: String, tau: Double,
         isNewId: org.apache.spark.sql.Column => org.apache.spark.sql.Column): String =
       synchronized {
-        val base = root(dir, tau)
-        if (!graft.mr.Fs.exists(base + "/_READY")) {
+        IndexStore.commit(Name, key(dir, tau)) { base =>
           val old = Tables.documents(s, dir).where(!isNewId(col("doc_id")))
           old.select(col("doc_id"), md5(normText(col("text"))).as("fp"))
             .groupBy(col("fp")).agg(min(col("doc_id")).as("old_id"))
-            .write.mode("overwrite").parquet(s"$base/fp")
+            .write.parquet(s"$base/fp")
           // content grain: member map + one rep's shingles per set
           val cg = shingled(old).withColumn("cfp", contentFp(col("sh")))
           cg.select(col("cfp"), col("doc_id"))
-            .write.mode("overwrite").parquet(s"$base/members")
+            .write.parquet(s"$base/members")
           val reps = s.read.parquet(s"$base/members")
             .groupBy(col("cfp")).agg(min(col("doc_id")).as("doc_id"))
           cg.join(reps, Seq("cfp", "doc_id"))
             .select(col("doc_id"), col("cfp"), col("sh"), size(col("sh")).as("sz"))
-            .write.mode("overwrite").parquet(s"$base/sh")
+            .write.parquet(s"$base/sh")
           // df + prefix derive from the persisted REP shingles (read
           // back, not recomputed — corpus text is touched exactly once)
           val sh = s.read.parquet(s"$base/sh")
           val ex = sh.select(col("doc_id"), col("sz"), explode(col("sh")).as("key"))
           ex.groupBy(col("key")).agg(count(lit(1)).as("df"))
-            .write.mode("overwrite").parquet(s"$base/df")
+            .write.parquet(s"$base/df")
           val byRarity = org.apache.spark.sql.expressions.Window
             .partitionBy(col("doc_id")).orderBy(col("df").asc, col("key").asc)
           ex.join(s.read.parquet(s"$base/df"), "key")
             .withColumn("rn", row_number().over(byRarity))
             .where(col("rn") <= col("sz") - ceil(col("sz") * tau) + 1)
             .select(col("key"), col("doc_id"), col("sz"), col("rn"))
-            .write.mode("overwrite").parquet(s"$base/prefix")
-          graft.mr.Fs.touch(base + "/_READY")
+            .write.parquet(s"$base/prefix")
         }
-        base
       }
   }
 

@@ -2,23 +2,22 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Persisted build-index store (r10 verdict #1): the expensive
-  * memoized builds — suffix order + LCPs, contamination spans, NSW
-  * edges + entry points, the jaccard cluster chain, BPE merges —
-  * survive the JVM by writing their frames to parquet under
-  * [[graft.mr.Fs.indexRoot]], keyed by (index name, corpus
-  * fingerprint, dial). A rerun in a NEW session (the round driver's
-  * bench after the builder's, a production job restarting) pays a
-  * parquet read instead of the multi-job cold construction — the
-  * same lifecycle the ANN suite's [[AnnOps.IvfIndex]] and the
-  * incremental-dedup shingle index already follow.
+/** Persisted build-index store (r10 verdict #1): every persisted
+  * index — the memoized builds (suffix order + LCPs, contamination
+  * spans, NSW edges + entry points, the jaccard cluster chain, BPE
+  * merges), [[AnnOps.IvfIndex]] and the incremental-dedup corpus
+  * index — survives the JVM as parquet under [[graft.mr.Fs.indexRoot]],
+  * keyed by (index name, corpus fingerprint, dial), so a rerun in a
+  * NEW session pays a parquet read instead of the multi-job cold
+  * construction. [[commit]] is the one commit protocol; [[frames]]
+  * is commit + write parts + read parts.
   *
-  * Layout (v2 — r11 verdict #1): one base dir per (name, key) as
-  * before, but the frames live in an ATTEMPT subdir and a pointer
-  * object names the committed attempt:
+  * Layout (v2 — r11 verdict #1): one base dir per (name, key), the
+  * parts live in an ATTEMPT subdir and a pointer object names the
+  * committed attempt:
   *
   *   `<indexRoot>/graft-bidx-v2-<name>-<fnv64(key) hex>/`
-  *     `a-<token>/<part>/…parquet…`   one dir per named part
+  *     `a-<token>/<part>/…parquet…`   whatever the build writes
   *     `a-<token>/_META`              human-readable key (fingerprint
   *                                    + geometry dial — the judge-
   *                                    auditable "which geometry
@@ -37,18 +36,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * treated as missing → rebuild, never a partial read).
   *
   * Retention: the [[Retain]] newest base dirs per index name — BUT a
-  * root this JVM has ever served frames from is EXEMPT
-  * ([[liveRoots]]): `frames()` hands out lazy parquet-backed
-  * DataFrames that session memos cache, so deleting a served root
-  * would yield FILE_NOT_EXIST on the next action over a memoized
-  * frame (r11 verdict #1 — a suite cycling >Retain fixture corpora
-  * through one index name evicted the gate corpus's suffix index
-  * under live readers). The exemption is bounded by what one JVM
-  * touches (Memo.Cap-scale, not uptime-scale); cross-JVM, retention
-  * stays mtime-ordered so only the oldest cold roots go.
-  * `GRAFT_INDEX_PERSIST=0` disables (spec isolation). */
+  * root this JVM has ever committed or resolved is EXEMPT
+  * ([[liveRoots]]): callers hold lazy parquet-backed DataFrames that
+  * session memos cache, so deleting a served root would yield
+  * FILE_NOT_EXIST on the next action over a memoized frame (r11
+  * verdict #1 — a suite cycling >Retain fixture corpora through one
+  * index name evicted the gate corpus's suffix index under live
+  * readers). The exemption is bounded by what one JVM touches
+  * (Memo.Cap-scale, not uptime-scale); cross-JVM, retention stays
+  * mtime-ordered so only the oldest cold roots go. */
 private[graft] object IndexStore {
   private val Prefix = "graft-bidx-v2-"
+
+  /** Root-name prefixes of replaced layouts, swept on every commit. */
+  private val Retired = Seq("graft-bidx-v1-", "graft-ivfidx-", "graft-incidx-")
 
   /** Cold roots kept per index name — sized like [[Memo.Cap]]: a
     * test JVM cycles spec fixture corpora through the same store the
@@ -63,7 +64,7 @@ private[graft] object IndexStore {
     * churn regression spec can assert the exemption).
     *
     * Documented tradeoffs (r12 advice, accepted deliberately):
-    * pins accumulate for the JVM's lifetime — every `frames()` call
+    * pins accumulate for the JVM's lifetime — every `commit()` call
     * pins, cache hits and failed builds included — so a long-lived
     * driver cycling MANY corpora through one index name disables
     * retention for that name until restart. The set holds short dir
@@ -81,46 +82,51 @@ private[graft] object IndexStore {
   private[graft] val liveRoots =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  private def enabled: Boolean =
-    sys.env.get("GRAFT_INDEX_PERSIST").forall(_ != "0")
-
   private def base(name: String, key: String): String =
     graft.mr.Fs.indexRoot + "/" + Prefix + name + "-" +
       java.lang.Long.toHexString(graft.functions.Hashes.fnv64(key))
 
-  /** Load the named parts from the persisted root, building and
-    * persisting them first when no committed attempt exists. The
-    * returned frames are parquet-backed (stable lineage — the same
-    * property the memos' localCheckpoint bought, without pinning
-    * executor blocks); their root is pinned in [[liveRoots]] so
-    * retention can never delete it under this JVM's readers.
-    * `build` must yield `parts.size` frames. */
-  def frames(s: SparkSession, name: String, key: String, parts: Seq[String])(
-      build: => Seq[DataFrame]): Seq[DataFrame] = {
-    if (!enabled) {
-      // direct mode: checkpoint so callers still get stable frames
-      return build.map(_.localCheckpoint(true))
-    }
+  /** The committed attempt dir of (name, key), building it first
+    * when there is none: `write` fills a fresh attempt dir, then the
+    * attempt is marked `_READY` and the pointer committed. The root
+    * is pinned in [[liveRoots]] so retention can never delete it
+    * under this JVM's readers. */
+  def commit(name: String, key: String)(write: String => Unit): String = {
     val b = base(name, key)
     // pin BEFORE resolving: a concurrent builder of a sibling key
     // must never window-race this root between the pointer read and
     // the pin (the r12 review's TOCTOU) — pinning an unbuilt root is
     // harmless, retention just skips a name until the JVM exits
     liveRoots.add(new org.apache.hadoop.fs.Path(b).getName)
-    val attempt = committedAttempt(b).getOrElse {
+    committedAttempt(b).getOrElse {
       val token = "a-" + java.util.UUID.randomUUID().toString
       val dir = s"$b/$token"
-      val built = build
-      require(built.size == parts.size,
-        s"index $name: build yielded ${built.size} frames for ${parts.size} parts")
-      parts.zip(built).foreach { case (p, df) =>
-        df.write.mode("overwrite").parquet(s"$dir/$p")
-      }
+      write(dir)
       writeSmall(dir + "/_META", key)
       graft.mr.Fs.touch(dir + "/_READY")
       writeSmall(b + "/_PTR", token) // commit: pointer written last
       dropStaleSiblings(name, b)
       dir
+    }
+  }
+
+  /** The committed attempt dir of (name, key), if any — never builds. */
+  def committed(name: String, key: String): Option[String] =
+    committedAttempt(base(name, key))
+
+  /** Load the named parts from the committed attempt, building them
+    * first when there is none. The frames are parquet-backed (stable
+    * lineage without pinning executor blocks). `build` must yield
+    * `parts.size` frames. */
+  def frames(s: SparkSession, name: String, key: String, parts: Seq[String])(
+      build: => Seq[DataFrame]): Seq[DataFrame] = {
+    val attempt = commit(name, key) { dir =>
+      val built = build
+      require(built.size == parts.size,
+        s"index $name: build yielded ${built.size} frames for ${parts.size} parts")
+      parts.zip(built).foreach { case (p, df) =>
+        df.write.parquet(s"$dir/$p")
+      }
     }
     parts.map(p => s.read.parquet(s"$attempt/$p"))
   }
@@ -177,12 +183,11 @@ private[graft] object IndexStore {
         n != keepName && !liveRoots.contains(n)
       }.drop(Retain - 1)
         .foreach(st => fs.delete(st.getPath, true))
-      // one-time v1 sweep (r12 review): the layout bump orphaned the
-      // r11-era roots — nothing serves them and the v2 filter above
-      // never matches them, so without this the "bounded by index
-      // count × Retain" disk claim quietly stops holding
+      // retired layouts: nothing serves them and the v2 filter above
+      // never matches them, so without this sweep the "bounded by
+      // index count × Retain" disk claim quietly stops holding
       fs.listStatus(rootPath)
-        .filter(_.getPath.getName.startsWith("graft-bidx-v1-" + name + "-"))
+        .filter(st => Retired.exists(st.getPath.getName.startsWith))
         .foreach(st => fs.delete(st.getPath, true))
     }
   }

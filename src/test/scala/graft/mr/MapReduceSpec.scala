@@ -295,6 +295,14 @@ class MapReduceSpec extends SparkTestBase {
       assert(chunks.sortBy(_._1.toInt).map(_._2).mkString == text, s"chunkBytes=$chunk")
       // every chunk but the last ends at a line boundary
       assert(chunks.sortBy(_._1.toInt).init.forall(_._2.endsWith("\n")))
+      // the key-value face lists exactly those chunks and fetches them
+      // (getValue re-scans the file, so only the ends are fetched)
+      val in = ChunkedTextInputer(f.toString, chunk)
+      val keys = in.listKeys(spark)
+      assert(keys == chunks.map(_._1).sortBy(_.toInt).toSeq, s"chunkBytes=$chunk")
+      Seq(keys.head, keys.last).foreach { k =>
+        assert(in.getValue(spark, k) == chunks.find(_._1 == k).get._2)
+      }
     }
   }
 

@@ -167,8 +167,10 @@ class DedupAnnSpec extends SparkTestBase {
     val first = DedupOps.dedupIncremental(spark, sfDir).collect().toSeq
     val second = DedupOps.dedupIncremental(spark, sfDir).collect().toSeq
     assert(first == second)
-    assert(new java.io.File(
-      DedupOps.IncrementalIndex.root(sfDir, 0.5), "_READY").exists())
+    val idx = IndexStore.committed(DedupOps.IncrementalIndex.Name,
+      DedupOps.IncrementalIndex.key(sfDir, 0.5))
+    assert(idx.exists(d => new java.io.File(d, "_READY").exists()),
+      s"index not persisted: $idx")
   }
 
   test("dedup_incremental: index path tracks corpus file changes (stale-index guard)") {
@@ -178,7 +180,7 @@ class DedupAnnSpec extends SparkTestBase {
     val src = new java.io.File(s"$sfDir/documents.parquet")
     val dst = new java.io.File(s"$dir/documents.parquet")
     // the test corpus is a single parquet file; a Spark-written corpus
-    // is a directory of part files — root() handles both
+    // is a directory of part files — key() handles both
     if (src.isDirectory) {
       dst.mkdirs()
       src.listFiles().foreach { f =>
@@ -186,9 +188,9 @@ class DedupAnnSpec extends SparkTestBase {
       }
     } else Files.copy(src.toPath, dst.toPath)
     val touchable = if (dst.isDirectory) dst.listFiles().toSeq else Seq(dst)
-    val before = DedupOps.IncrementalIndex.root(dir, 0.5)
+    val before = DedupOps.IncrementalIndex.key(dir, 0.5)
     touchable.foreach(f => f.setLastModified(f.lastModified() + 60000))
-    val after = DedupOps.IncrementalIndex.root(dir, 0.5)
+    val after = DedupOps.IncrementalIndex.key(dir, 0.5)
     assert(before != after, "index key must change when corpus files change")
   }
 
@@ -308,8 +310,9 @@ class DedupAnnSpec extends SparkTestBase {
     assert(recall >= 0.74, s"incremental recall too low: $recall")
     // the persisted index must exist and a warm re-run must serve
     // the identical result from it (no rebuild, no drift)
-    val root = AnnOps.IvfIndex.root(sfDir)
-    assert(new java.io.File(root, "_READY").exists(), s"index not persisted at $root")
+    val idx = IndexStore.committed(AnnOps.IvfIndex.Name, AnnOps.IvfIndex.key(sfDir))
+    assert(idx.exists(d => new java.io.File(d, "_READY").exists()),
+      s"index not persisted: $idx")
     val again = AnnOps.annIncrementalTopk(spark, sfDir)
       .select($"pid", $"nid").as[(Long, Long)].collect().toSet
     assert(again == got, "warm-index serve diverged from cold build")

@@ -133,4 +133,71 @@ class IndexStoreSpec extends SparkTestBase {
         s"cold-root retention stopped working under the live exemption: $n")
     } finally graft.mr.Fs.overrideIndexRoot = None
   }
+
+  private def rootName(attempt: String): String =
+    new org.apache.hadoop.fs.Path(attempt).getParent.getName
+
+  test("a second builder of the IVF and incremental-dedup keys commits a new " +
+      "attempt: frames held over the first still read") {
+    freshRoot()
+    try {
+      val isNewId = (c: org.apache.spark.sql.Column) => c % 5 === 4
+      val ivf = AnnOps.IvfIndex.ensure(spark, sfDir)
+      val inc = DedupOps.IncrementalIndex.ensure(spark, sfDir, 0.5, isNewId)
+      // lazy parquet frames a session keeps (the file listing is fixed
+      // when the frame is made)
+      val vecs = spark.read.parquet(s"$ivf/vecs")
+      val sh = spark.read.parquet(s"$inc/sh")
+      val nVecs = vecs.collect().length
+      val nSh = sh.collect().length
+      // another JVM that missed the pointer builds the same key again
+      Seq(ivf, inc).foreach { a =>
+        val (fs, p) = graft.mr.Fs.resolve(
+          new org.apache.hadoop.fs.Path(a).getParent + "/_PTR")
+        assert(fs.delete(p, false))
+      }
+      val ivf2 = AnnOps.IvfIndex.ensure(spark, sfDir)
+      val inc2 = DedupOps.IncrementalIndex.ensure(spark, sfDir, 0.5, isNewId)
+      assert(ivf2 != ivf && inc2 != inc, "a missing pointer must rebuild")
+      assert(rootName(ivf2) == rootName(ivf) && rootName(inc2) == rootName(inc))
+      assert(vecs.collect().length == nVecs, "held IVF vecs frame stopped reading")
+      assert(sh.collect().length == nSh, "held dedup sh frame stopped reading")
+      // and the new attempt holds the same index
+      assert(spark.read.parquet(s"$ivf2/vecs").count() == nVecs)
+      assert(spark.read.parquet(s"$inc2/sh").count() == nSh)
+    } finally graft.mr.Fs.overrideIndexRoot = None
+  }
+
+  test("the ivf index name keeps Retain roots; the IVF build is among them") {
+    val rootDir = freshRoot()
+    try {
+      // cold ivf roots of earlier corpora, built by finished JVMs
+      (1 to IndexStore.Retain + 2).foreach { i =>
+        val a = IndexStore.commit(AnnOps.IvfIndex.Name, s"old-corpus-$i")(d =>
+          spark.range(1).write.parquet(s"$d/cent"))
+        IndexStore.liveRoots.remove(rootName(a))
+        Thread.sleep(20) // distinct mtimes for the retention order
+      }
+      val idx = AnnOps.IvfIndex.ensure(spark, sfDir)
+      val roots = new java.io.File(rootDir).listFiles()
+        .map(_.getName).filter(_.startsWith("graft-bidx-v2-ivf-"))
+      assert(roots.length == IndexStore.Retain, s"retain cap, got ${roots.toSeq}")
+      assert(roots.contains(rootName(idx)))
+      assert(spark.read.parquet(s"$idx/vecs").count() > 0)
+    } finally graft.mr.Fs.overrideIndexRoot = None
+  }
+
+  test("a commit sweeps the retired index layouts and nothing else") {
+    val rootDir = freshRoot()
+    try {
+      val retired = Seq("graft-bidx-v1-suffix_lcp-1f", "graft-ivfidx-v1-2e",
+        "graft-incidx-v4-s5-t50-3d")
+      val kept = Seq("graft-bidx-v2-other-4c", "unrelated-5b")
+      (retired ++ kept).foreach(n => new java.io.File(rootDir, s"$n/part").mkdirs())
+      IndexStore.frame(spark, "spec_sweep", "k")(spark.range(1).toDF("x"))
+      val left = new java.io.File(rootDir).listFiles().map(_.getName).toSet
+      assert(retired.forall(n => !left.contains(n)), s"retired roots left: $left")
+      assert(kept.forall(left.contains), s"sweep removed a live root: $left")
+    } finally graft.mr.Fs.overrideIndexRoot = None
+  }
 }
