@@ -5711,9 +5711,10 @@ object SparkEntry {
   /** The IVF index structures alone — centroids, cell assignment,
     * probe cells, probes — shared with the composed ivf×bq oracles,
     * which swap the exact in-cell scan for a Hamming stage. */
-  // dial-interpolated (r9 advice: a hardcoded `vec_id < 10` here
-  // desyncs from GRAFT_ANN_NUM_PROBES — the composed ivf×bq oracles
-  // mix this chain with dial-driven CTEs, so BOTH must read the dial)
+  // interpolates AnnOps.NumProbes (r9 advice: a hardcoded
+  // `vec_id < 10` here desyncs from a spec override — the composed
+  // ivf×bq oracles mix this chain with accessor-driven CTEs, so BOTH
+  // must read the accessor)
   private def ivfIndexCtes: String =
     s"""e AS (
       |  SELECT vec_id, label, generate_subscripts(embedding, 1) AS pos,

@@ -427,19 +427,18 @@ case class Mix64Expr(child: Expression)
   * corpus-side IVF assignment fused into one codegen loop (r13,
   * guide §1.2 "per-task work"; the [[MinHashSigExpr]] precedent).
   *
-  * Bit-compatible with the declarative
-  * `cellScores ∘ argmaxCellSim` fold it replaces: per-cell cosine in
-  * [[CosineSim]]'s exact left-to-right double accumulation (float
-  * elements widened per element), the identical
-  * floor(x·10⁶ + 0.5)/10⁶ rounding, argmax by (sim desc, cell asc)
-  * under Spark's SQL double ordering (±0 equal, NaN greatest/equal
-  * — [[CellArgmax.cmpD]]). The declarative form stays in use on the
-  * tiny probe side (top-nprobe needs the whole scored array); this
-  * expression serves the corpus-scale scans, where the
-  * higher-order-function machinery evaluated interpreted per row.
-  * `simMode=false` returns the winning cell id (int),
-  * `simMode=true` the winning rounded similarity (double) — the
-  * medoid-entry builder reads both. */
+  * Bit-compatible with the declarative `AnnOps.cellScores` scoring
+  * the probe side uses: per-cell cosine in [[CosineSim]]'s exact
+  * left-to-right double accumulation (float elements widened per
+  * element), the identical floor(x·10⁶ + 0.5)/10⁶ rounding, argmax
+  * by (sim desc, cell asc) under Spark's SQL double ordering (±0
+  * equal, NaN greatest/equal — [[CellArgmax.cmpD]]). The declarative
+  * form stays in use on the tiny probe side (top-nprobe needs the
+  * whole scored array); this expression serves the corpus-scale
+  * scans, where the higher-order-function machinery evaluated
+  * interpreted per row. [[CellArgmax.ModeCell]] returns the winning
+  * cell id (int), [[CellArgmax.ModeBoth]] the (cell, sim_r) struct
+  * of the winner — the medoid-entry builder reads both fields. */
 case class CellArgmax(
     child: Expression, cells: Seq[Int], cents: Seq[Seq[Double]],
     mode: Int)
@@ -455,7 +454,6 @@ case class CellArgmax(
     cents.map(_.toArray).toArray
 
   override def dataType: DataType = mode match {
-    case CellArgmax.ModeSim => DoubleType
     case CellArgmax.ModeCell => IntegerType
     case _ => StructType(Seq(
       StructField("cell", IntegerType, nullable = false),
@@ -480,12 +478,9 @@ case class CellArgmax(
 
   def bestCell(x: ArrayData): Int = cellsArr(bestK(x))
 
-  def bestSim(x: ArrayData): Double =
-    CellArgmax.roundedSim(x, isFloat, centsArr(bestK(x)))
-
   /** (cell, sim) of the winner in ONE argmax scan — the r14 ADVICE
-    * item: the medoid builder read cell_argmax AND cell_argmax_sim
-    * as separate expressions, doubling the fused-loop work per row. */
+    * item: reading the cell and the similarity as two expressions
+    * doubled the fused-loop work per row. */
   def bestBoth(x: ArrayData): org.apache.spark.sql.catalyst.InternalRow = {
     val k = bestK(x)
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
@@ -495,7 +490,6 @@ case class CellArgmax(
   override def nullSafeEval(input: Any): Any = {
     val x = input.asInstanceOf[ArrayData]
     mode match {
-      case CellArgmax.ModeSim => bestSim(x)
       case CellArgmax.ModeCell => bestCell(x)
       case _ => bestBoth(x)
     }
@@ -505,7 +499,6 @@ case class CellArgmax(
     val ref = ctx.addReferenceObj("cellArgmax", this,
       classOf[CellArgmax].getName)
     val call = mode match {
-      case CellArgmax.ModeSim => "bestSim"
       case CellArgmax.ModeCell => "bestCell"
       case _ => "bestBoth"
     }
@@ -518,8 +511,7 @@ case class CellArgmax(
 
 object CellArgmax {
   val ModeCell = 0
-  val ModeSim = 1
-  val ModeBoth = 2
+  val ModeBoth = 1
 
   /** Spark SQL's double comparison: ±0.0 equal, NaN greatest and
     * equal to itself (SQLOrderingUtil semantics). */
@@ -568,16 +560,11 @@ object VectorExpressions {
   def cosine_sim(a: Column, b: Column): Column =
     column(CosineSim(expression(a), expression(b)))
 
-  /** Column faces of [[CellArgmax]]: winning cell id / winning
-    * rounded similarity / both-in-one-scan of the literal centroid
-    * set. */
+  /** Column faces of [[CellArgmax]]: winning cell id / (cell, sim_r)
+    * of the winner in one scan of the literal centroid set. */
   def cell_argmax(emb: Column, cents: Seq[(Int, Seq[Double])]): Column =
     column(CellArgmax(expression(emb),
       cents.map(_._1), cents.map(_._2), CellArgmax.ModeCell))
-
-  def cell_argmax_sim(emb: Column, cents: Seq[(Int, Seq[Double])]): Column =
-    column(CellArgmax(expression(emb),
-      cents.map(_._1), cents.map(_._2), CellArgmax.ModeSim))
 
   def cell_argmax_both(emb: Column, cents: Seq[(Int, Seq[Double])]): Column =
     column(CellArgmax(expression(emb),

@@ -22,23 +22,17 @@ import graft.functions.VectorExpressions.cosine_sim
 object AnnOps {
   import graft.SparkEntry.QueryFn
 
-  /** Serve-k and probe-set size are PER-RUN DIALS, not literals: a
-    * corpus-scale recall sweep launches with `GRAFT_ANN_K` /
-    * `GRAFT_ANN_NUM_PROBES` in the driver environment and every
-    * serve path, recall panel, and oracle SQL (they interpolate the
-    * same accessors) widens together — no code edit. Every oracle
+  /** Serve-k and probe-set size. Every serve path, recall panel and
+    * oracle SQL reads these accessors, so a spec that dials the
+    * test-visible overrides widens them all together. Every oracle
     * string in SparkEntry is a `def`, rebuilt at each oracleSql
     * materialization, so engine and oracle can never desync even if
-    * the dials move mid-JVM (the r5 lazy-val freeze). Defaults
-    * preserve the gate hashes. The vars are test-visible so specs can
-    * dial them within a JVM; production runs set the env once at
-    * launch. */
+    * an override moves mid-JVM (the r5 lazy-val freeze). The
+    * constants are the gate values. */
   @volatile var overrideK: Option[Int] = None
   @volatile var overrideNumProbes: Option[Int] = None
-  def K: Int = overrideK
-    .orElse(sys.env.get("GRAFT_ANN_K").map(_.toInt)).getOrElse(5)
-  def NumProbes: Int = overrideNumProbes
-    .orElse(sys.env.get("GRAFT_ANN_NUM_PROBES").map(_.toInt)).getOrElse(10)
+  def K: Int = overrideK.getOrElse(5)
+  def NumProbes: Int = overrideNumProbes.getOrElse(10)
 
   private def probes(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -75,40 +69,34 @@ object AnnOps {
     rankTopK(cands, K)
   }
 
-  /** Hyperplane-LSH band geometry — a PER-RUN DIAL (r9 verdict #1:
-    * the r8 simhash dial, generalized to the rest of the hyperplane
-    * family): `GRAFT_LSH_GEOMETRY=planes:bandBits`, default `48:4` —
-    * the historical 48-plane signature in twelve 4-bit bands. The
-    * 4-bit keys mean every band bucket holds ≈ corpus/16: candidate
-    * mass is n²·12/16 on a corpus with NO near structure, and the
-    * NSW attach path pays corpus/16 PER ARRIVAL — linear in the base
-    * corpus, the scale-killer the stress decade measures. The wide
-    * dial `64:16` (four 16-bit bands of a 64-plane signature) pushes
-    * the random floor to n²·4/2¹⁶ — three orders down — while TRUE
-    * near neighbors (the structure a real corpus has; the test
-    * embeddings are near-random) still collide: at cos ≈ 0.99 a bit
-    * agrees w.p. ≈ 0.955, a 16-bit band w.p. ≈ 0.48, some band of 4
-    * w.p. ≈ 0.93. Every consumer — the flat LSH serve, the radius
-    * search, the NSW build, the streaming attach — and every oracle
-    * interpolates these accessors, so engine and replay move
-    * together; defaults preserve the gate hashes.
+  /** Hyperplane-LSH band geometry `(planes, bandBits)`. The family
+    * default `(48, 4)` is the historical 48-plane signature in twelve
+    * 4-bit bands. The 4-bit keys mean every band bucket holds ≈
+    * corpus/16: candidate mass is n²·12/16 on a corpus with NO near
+    * structure, and the NSW attach path pays corpus/16 PER ARRIVAL —
+    * linear in the base corpus, the scale-killer the stress decade
+    * measures. The wide geometry `(64, 16)` (four 16-bit bands of a
+    * 64-plane signature) pushes the random floor to n²·4/2¹⁶ — three
+    * orders down — while TRUE near neighbors (the structure a real
+    * corpus has; the test embeddings are near-random) still collide:
+    * at cos ≈ 0.99 a bit agrees w.p. ≈ 0.955, a 16-bit band w.p. ≈
+    * 0.48, some band of 4 w.p. ≈ 0.93. The n-aware schedule
+    * ([[scheduledGeometry]]) widens the geometry toward it as the
+    * measured corpus grows; specs pin a geometry through the
+    * test-visible override. Every
+    * consumer — the flat LSH serve, the radius search, the NSW
+    * build, the streaming attach — and every oracle interpolates
+    * these accessors, so engine and replay move together.
     * planes ≤ 64 (one sig word), bandBits | planes, bandBits ≤ 32
     * (band values stay positive BIGINTs in both engines). */
   @volatile var overrideLshGeometry: Option[(Int, Int)] = None
-  /** Human-pinned geometry: the in-process override, else the env
-    * dial. `None` means the n-aware schedule decides. */
-  private def pinnedLshGeometry: Option[(Int, Int)] = overrideLshGeometry
-    .orElse(sys.env.get("GRAFT_LSH_GEOMETRY").map { g =>
-      val Array(p, b) = g.split(":").map(_.trim.toInt)
-      requireHyperplaneGeometry(p, b, "lsh")
-      (p, b)
-    })
 
-  /** Dial validation shared with the emb family: one-word (planes ≤
-    * 64, bandBits | planes) or multi-word (planes a multiple of 64
-    * up to [[MultiWordPlanes]] ceiling ×2, 32-bit bands — bands must
-    * tile words so the engine's per-word extraction equals the
-    * oracle's global `(p-1)//bits` rule). */
+  /** The hyperplane-geometry contract (lsh and emb families):
+    * one-word (planes ≤ 64, bandBits | planes) or multi-word (planes
+    * a multiple of 64 up to [[MultiWordPlanes]] ceiling ×2, 32-bit
+    * bands — bands must tile words so the engine's per-word
+    * extraction equals the oracle's global `(p-1)//bits` rule).
+    * GeometryScheduleSpec holds the scheduled points to it. */
   private[operators] def requireHyperplaneGeometry(
       p: Int, b: Int, fam: String): Unit =
     if (p <= 64) {
@@ -120,18 +108,16 @@ object AnnOps {
         s"$fam multi-word planes must be a multiple of 64 <= ${2 * MultiWordPlanes}, got $p")
       require(b == 32, s"$fam multi-word bandBits must be 32, got $b")
     }
-  def lshGeometry: (Int, Int) = pinnedLshGeometry.getOrElse(
-    GeometryContext.resolve((48, 4))((s, d) =>
-      scheduledGeometry(nVecs(s, d), (48, 4))))
+  def lshGeometry: (Int, Int) =
+    GeometryContext.resolve(overrideLshGeometry.getOrElse((48, 4)))(lshGeometryFor)
   def LshPlanes: Int = lshGeometry._1
   def LshBandBits: Int = lshGeometry._2
   def LshBands: Int = LshPlanes / LshBandBits
 
-  /** n-AWARE band-geometry schedule (r10 verdict #2 — the two
-    * remaining weak grades were weak precisely because scale safety
-    * depended on a HUMAN exporting `GRAFT_*_GEOMETRY` one decade
-    * before the candidate-mass guard tripped): when no override and
-    * no env dial pins the geometry, the hyperplane families choose
+  /** n-AWARE band-geometry schedule (r10 verdict #2 — scale safety
+    * must not depend on a human re-pinning the geometry one decade
+    * before the candidate-mass guard trips): unless a spec override
+    * pins the geometry, the hyperplane families choose
     * (planes, bandBits) from the MEASURED corpus size at index-build
     * time.
     *
@@ -213,9 +199,9 @@ object AnnOps {
       java.lang.Long.valueOf(Tables.embeddings(s, dir).count())).longValue()
 
   /** The geometry the hyperplane-LSH serve/build paths USE for this
-    * corpus: pinned dial if set, else the n-aware schedule. */
+    * corpus: the override if set, else the n-aware schedule. */
   def lshGeometryFor(s: SparkSession, dir: String): (Int, Int) =
-    pinnedLshGeometry.getOrElse(scheduledGeometry(nVecs(s, dir), (48, 4)))
+    overrideLshGeometry.getOrElse(scheduledGeometry(nVecs(s, dir), (48, 4)))
 
   /** The schedule's choice at the SCHEDULE FLOOR for this corpus:
     * `scheduledGeometry(max(n, ScheduleMinN))`. Every gate corpus
@@ -688,38 +674,22 @@ object AnnOps {
       rnd(cosine_sim(embCol, c.getField("_2")), 6).as("sim"),
       c.getField("_1").as("cell")))
 
-  /** Argmax by (sim desc, cell asc) — a fold over the scored array,
-    * entirely inside the projection: no join, no window, no shuffle.
-    * Returns the winning (sim, cell) struct; operators that need the
-    * winning similarity too (the NSW medoid entries) read both
-    * fields. */
-  private[operators] def argmaxCellSim(scored: org.apache.spark.sql.Column) =
-    aggregate(scored, element_at(scored, 1), (acc, x) =>
-      when(x.getField("sim") > acc.getField("sim") ||
-           (x.getField("sim") === acc.getField("sim") &&
-            x.getField("cell") < acc.getField("cell")), x)
-        .otherwise(acc))
-
-  private def argmaxCell(scored: org.apache.spark.sql.Column) =
-    argmaxCellSim(scored).getField("cell")
-
-  /** Fused native twin of `cellScores ∘ argmaxCellSim` for the
-    * CORPUS-scale assignment scans (r13, guide §1.2 "per-task work"
-    * — the [[graft.functions.MinHashSigExpr]] precedent): the
-    * declarative transform(…cosine_sim…) + aggregate fold evaluates
-    * interpreted (higher-order functions never enter whole-stage
-    * codegen), so every corpus row paid |cells| interpreted
-    * expression trees plus struct-array allocation. The
-    * [[graft.functions.CellArgmax]] expression computes the
-    * identical quantity — per-cell cosine in [[cosine_sim]]'s exact
-    * left-to-right double accumulation, the same
-    * floor(x·10⁶ + 0.5)/10⁶ rounding, argmax by (sim desc, cell asc)
-    * under Spark's SQL double ordering — in one codegen loop, with
-    * no array cast or boxing (floats read in place). The tiny
-    * PROBE-side top-nprobe sort ([[probeCellsOf]]) keeps the
-    * declarative form: it runs on [[NumProbes]] rows, not the
-    * corpus. Bit-equality is re-proven by the sf0.001/sf0.01 oracle
-    * gate on every IVF-family row. */
+  /** Native argmax-cell for the CORPUS-scale assignment scans (r13,
+    * guide §1.2 "per-task work" — the
+    * [[graft.functions.MinHashSigExpr]] precedent): a declarative
+    * [[cellScores]] + aggregate fold evaluates interpreted
+    * (higher-order functions never enter whole-stage codegen), so
+    * every corpus row would pay |cells| interpreted expression trees
+    * plus struct-array allocation. The
+    * [[graft.functions.CellArgmax]] expression computes per-cell
+    * cosine in [[cosine_sim]]'s exact left-to-right double
+    * accumulation, the same floor(x·10⁶ + 0.5)/10⁶ rounding as
+    * [[cellScores]], argmax by (sim desc, cell asc) under Spark's SQL
+    * double ordering — in one codegen loop, with no array cast or
+    * boxing (floats read in place). The tiny PROBE-side top-nprobe
+    * sort ([[probeCellsOf]]) keeps [[cellScores]]: it runs on
+    * [[NumProbes]] rows, not the corpus. Bit-equality is re-proven by
+    * the sf0.001/sf0.01 oracle gate on every IVF-family row. */
   private[operators] def cellAssignUdf(cents: Seq[(Int, Seq[Double])]) =
     (emb: Column) => graft.functions.VectorExpressions.cell_argmax(emb, cents)
 

@@ -207,8 +207,7 @@ object DedupOps {
       .orderBy($"doc_a", $"doc_b")
   }
 
-  /** SimHash signature geometry — a PER-RUN DIAL (the GRAFT_ANN_*
-    * discipline), not a literal: `(words, bandBits, tau)` where the
+  /** SimHash signature geometry `(words, bandBits, tau)`, where the
     * signature is `words`×64 bits (word 0 = the historical FNV
     * simhash; word w ≥ 1 hashes each token through
     * `mix64(fnv64(tok) ^ seed_w)`), candidate keys are
@@ -218,7 +217,7 @@ object DedupOps {
     * Why it exists (r7 verdict #2): 16-bit band keys admit ~n²·B/2¹⁶
     * RANDOM-collision candidates — linear only below ~10⁶ docs, a
     * scale-killer at 100 TB doc counts (measured 13×/decade at the
-    * stress decade). The wide geometry `2:32:12` keeps the same
+    * stress decade). The wide geometry `(2, 32, 12)` keeps the same
     * semantic bar (hamming 12/128 ≈ 6/64 bit-agreement) while the
     * 32-bit keys push the random floor to n²·4/2³² — four orders of
     * magnitude down, linear into the 10⁹-doc regime
@@ -227,32 +226,23 @@ object DedupOps {
     * band unless their flipped bits hit all `words·64/bandBits`
     * chunks — the same pigeonhole odds the default geometry had.
     *
-    * Default `1:16:6` preserves every gate hash; the oracle SQL
+    * The default `(1, 16, 6)` preserves every gate hash; the n-aware
+    * Hamming schedule widens it on large corpora and specs pin a
+    * geometry through the test-visible override. The oracle SQL
     * interpolates THIS accessor (a def, rebuilt per oracleSql
-    * materialization), so engine and oracle move together when the
-    * dial does. */
+    * materialization), so engine and oracle move together. */
   @volatile var overrideSimhashGeometry: Option[(Int, Int, Int)] = None
-  private def pinnedSimhashGeometry: Option[(Int, Int, Int)] =
-    overrideSimhashGeometry
-      .orElse(sys.env.get("GRAFT_SIMHASH_GEOMETRY").map { g =>
-        val Array(w, b, t) = g.split(":").map(_.trim.toInt)
-        require(w >= 1 && w <= 4, s"simhash words must be 1..4, got $w")
-        require(Seq(8, 16, 32, 64).contains(b), s"simhash bandBits must divide 64, got $b")
-        require(t >= 0 && t <= w * 64, s"simhash tau out of range: $t")
-        (w, b, t)
-      })
   def simhashGeometry: (Int, Int, Int) =
-    pinnedSimhashGeometry.getOrElse(
-      GeometryContext.resolve((1, 16, 6))((s, d) =>
-        AnnOps.scheduledHammingGeometry(nDocs(s, d), (1, 16, 6))))
+    GeometryContext.resolve(overrideSimhashGeometry.getOrElse((1, 16, 6)))(
+      simhashGeometryFor)
 
-  /** The geometry the simhash face USES for this corpus: pinned dial
+  /** The geometry the simhash face USES for this corpus: the override
     * if set, else the n-aware Hamming schedule
     * ([[AnnOps.scheduledHammingGeometry]], r10 verdict #2) on the
     * measured document count. */
   def simhashGeometryFor(
       s: org.apache.spark.sql.SparkSession, dir: String): (Int, Int, Int) =
-    pinnedSimhashGeometry.getOrElse(
+    overrideSimhashGeometry.getOrElse(
       AnnOps.scheduledHammingGeometry(nDocs(s, dir), (1, 16, 6)))
 
   /** Corpus document count, memoized per fingerprint (the
@@ -953,48 +943,42 @@ object DedupOps {
 
   val EmbTopN = 100
 
-  /** Embedding-LSH band geometry — the [[simhashGeometry]] dial
-    * applied to the hyperplane family's dedup face (r9 verdict #1):
-    * `GRAFT_EMB_GEOMETRY=planes:bandBits`, default `16:8` — the
+  /** Embedding-LSH band geometry `(planes, bandBits)` — the
+    * [[simhashGeometry]] treatment applied to the hyperplane family's
+    * dedup face (r9 verdict #1). The default `(16, 8)` is the
     * historical 16-plane signature in two 8-bit bands, whose random
     * collision floor is n²·2/2⁸ (linear only below ~10⁴-10⁵ docs;
     * SURVEY §4's 3.6× decade ratio is the floor arriving). The wide
-    * dial `64:16` (four 16-bit bands of a 64-plane signature) pushes
+    * geometry `(64, 16)` (four 16-bit bands of a 64-plane signature)
+    * pushes
     * the floor to n²·4/2¹⁶ while genuinely-near pairs keep colliding
     * (at cos ≈ 0.99 some band matches w.p. ≈ 0.93 — see
     * [[AnnOps.lshGeometry]]); EmbFloorSpec measures both floors on a
-    * planted no-dup corpus and wide-dial recall on planted verbatim
-    * copies. The oracle interpolates these accessors; defaults
-    * preserve the gate hashes. */
+    * planted no-dup corpus and wide-geometry recall on planted
+    * verbatim copies. The n-aware schedule
+    * ([[AnnOps.scheduledGeometry]], r10 verdict #2) picks the
+    * geometry unless a spec pins it through the test-visible
+    * override. The oracle interpolates these accessors; the default
+    * preserves the gate hashes. */
   @volatile var overrideEmbGeometry: Option[(Int, Int)] = None
-  /** Human-pinned geometry (override, else env dial); `None` lets
-    * the n-aware schedule decide — see [[AnnOps.scheduledGeometry]]
-    * (r10 verdict #2). */
-  private def pinnedEmbGeometry: Option[(Int, Int)] = overrideEmbGeometry
-    .orElse(sys.env.get("GRAFT_EMB_GEOMETRY").map { g =>
-      val Array(p, b) = g.split(":").map(_.trim.toInt)
-      AnnOps.requireHyperplaneGeometry(p, b, "emb")
-      (p, b)
-    })
-  def embGeometry: (Int, Int) = pinnedEmbGeometry.getOrElse(
-    GeometryContext.resolve((16, 8))((s, d) =>
-      AnnOps.scheduledGeometry(AnnOps.nVecs(s, d), (16, 8))))
+  def embGeometry: (Int, Int) =
+    GeometryContext.resolve(overrideEmbGeometry.getOrElse((16, 8)))(embGeometryFor)
   def EmbPlanes: Int = embGeometry._1
   def EmbBandBits: Int = embGeometry._2
   def EmbBands: Int = EmbPlanes / EmbBandBits
 
   /** The geometry the embedding-dedup face USES for this corpus:
-    * pinned dial if set, else chosen from the measured corpus size
+    * the override if set, else chosen from the measured corpus size
     * at signature time (below [[AnnOps.ScheduleMinN]] — every gate
     * corpus — the schedule returns the default, so the static
     * accessors the oracle interpolates keep matching the engine). */
   def embGeometryFor(
       s: org.apache.spark.sql.SparkSession, dir: String): (Int, Int) =
-    pinnedEmbGeometry.getOrElse(
+    overrideEmbGeometry.getOrElse(
       AnnOps.scheduledGeometry(AnnOps.nVecs(s, dir), (16, 8)))
 
   /** Embedding-cosine near-dup *review queue*: random-hyperplane LSH
-    * candidates under the [[embGeometry]] dial (default: 16-bit sign
+    * candidates under the [[embGeometry]] (default: 16-bit sign
     * signature, two 8-bit bands; wide: 64 planes, four 16-bit bands),
     * exact cosine inside the candidate set, and the global top-N
     * most-similar pairs emitted (cos desc, then vec ids — fully
@@ -1100,27 +1084,27 @@ object DedupOps {
   /** Pairs reported per cluster by [[dedupSemantic]]. */
   val SemTopPerCluster = 3
 
-  /** Salt blocks per cluster for [[dedupSemantic]]'s self-join — a
-    * PER-RUN DIAL (`GRAFT_SEM_BLOCKS`). With nb blocks the join key
+  /** Salt blocks per cluster for [[dedupSemantic]]'s self-join. With
+    * nb blocks the join key
     * is (cluster, block_a, block_b): each side replicates nb× but no
     * single task ever carries more than (nᵢ/nb)² pair work, so one
     * giant cluster cannot pin an executor (the r9 verdict's second
     * scale-killer — a bare cluster_id key is k join keys total). The
     * pair SET is block-invariant (every (a<b) pair lands on exactly
     * one (block_a, block_b) key), so the oracle — and the result
-    * hash — never see the dial. */
+    * hash — never see the block count; specs vary it through the
+    * test-visible override. */
   @volatile var overrideSemBlocks: Option[Int] = None
-  def SemBlocks: Int = overrideSemBlocks
-    .orElse(sys.env.get("GRAFT_SEM_BLOCKS").map(_.toInt)).getOrElse(4)
+  def SemBlocks: Int = overrideSemBlocks.getOrElse(4)
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic near-
     * dup discovery with the pairwise pass BUCKETED BY K-MEANS CLUSTER
     * — cosine is computed only within a cluster, never across the
     * corpus, so the pair space shrinks from n²/2 to Σ nᵢ²/2. Both
-    * scale levers are DIALS, not promises (r9 verdict #1): k via
-    * [[KMeansOps.K]] (`GRAFT_KMEANS_K` ≈ corpus / target cell size,
-    * holding nᵢ roughly constant as the corpus grows), and the
-    * self-join key is (cluster, block_a, block_b) under
+    * scale levers are parameters (r9 verdict #1): k via
+    * [[KMeansOps.K]] (≈ corpus / target cell size holds nᵢ roughly
+    * constant as the corpus grows), and the self-join key is
+    * (cluster, block_a, block_b) under
     * [[SemBlocks]] salt blocks, so the largest task carries
     * (nᵢ/nb)² — never a whole cluster's quadratic mass. The
     * per-cluster ranking runs through native `TopK.perKey` bounded

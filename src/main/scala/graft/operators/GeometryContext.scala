@@ -8,17 +8,20 @@ import org.apache.spark.sql.SparkSession
   * oracle strings interpolate the static accessors
   * ([[AnnOps.lshGeometry]], [[DedupOps.simhashGeometry]],
   * [[DedupOps.embGeometry]], [[graft.operators.TextOps]]'
-  * phashGeometry) — which, with no pin, returned the family DEFAULT.
+  * phashGeometry) — which, with no override, returned the family
+  * DEFAULT.
   * On any corpus past the schedule thresholds that desyncs oracle
   * from engine and the hash gate fails silently.
   *
   * Fix: [[graft.Verify]] (and anything else that materializes
   * oracles for a KNOWN corpus) publishes that corpus here, and the
   * static accessors resolve through the SAME n-aware schedule the
-  * serve paths use. Precedence is unchanged — an explicit pin
-  * (override var or `GRAFT_*_GEOMETRY` env) still wins everywhere;
-  * with no context the accessors keep their historical defaults, so
-  * specs and gate corpora (all below the thresholds) are untouched.
+  * serve paths use: each static accessor is
+  * `resolve(override.getOrElse(default))(xGeometryFor)`, so a spec's
+  * override var wins everywhere, and with no context the accessors
+  * keep their historical defaults — specs and gate corpora (all
+  * below the thresholds) are untouched. `xGeometryFor`'s `getOrElse`
+  * is lazy, so an override never counts the corpus.
   */
 object GeometryContext {
   @volatile private var current: Option[(SparkSession, String)] = None
@@ -32,7 +35,7 @@ object GeometryContext {
   def clear(): Unit = current = None
 
   /** Resolve `schedule(corpus)` under the published context, else
-    * the family default. */
+    * `default`. */
   private[operators] def resolve[G](default: G)(
       schedule: (SparkSession, String) => G): G =
     current match {

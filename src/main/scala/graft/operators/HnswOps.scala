@@ -66,9 +66,9 @@ object HnswOps {
       IndexStore.frame(s, "nsw_entries", key) {
         import s.implicits._
         val cents = AnnOps.ivfCentroids(s, dir)
-        // r14 ADVICE: one argmax scan yields BOTH fields (the former
-        // cell_argmax + cell_argmax_sim pair ran the full centroid
-        // loop twice per row); the struct is materialized in its own
+        // r14 ADVICE: one argmax scan yields BOTH fields (a separate
+        // cell and similarity expression ran the full centroid loop
+        // twice per row); the struct is materialized in its own
         // select so the field reads don't re-inline the loop
         val scored = Tables.embeddings(s, dir)
           .select($"vec_id",

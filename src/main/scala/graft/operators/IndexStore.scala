@@ -5,8 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Persisted build-index store (r10 verdict #1): every persisted
   * index — the memoized builds (suffix order + LCPs, contamination
   * spans, NSW edges + entry points, the jaccard cluster chain, BPE
-  * merges), [[AnnOps.IvfIndex]] and the incremental-dedup corpus
-  * index — survives the JVM as parquet under [[graft.mr.Fs.indexRoot]],
+  * merges), [[AnnOps.IvfIndex]], the incremental-dedup corpus
+  * index and the streaming faces' vector-arrival split — survives
+  * the JVM as parquet under [[graft.mr.Fs.indexRoot]],
   * keyed by (index name, corpus fingerprint, dial), so a rerun in a
   * NEW session pays a parquet read instead of the multi-job cold
   * construction. [[commit]] is the one commit protocol; [[frames]]
@@ -49,7 +50,8 @@ private[graft] object IndexStore {
   private val Prefix = "graft-bidx-v2-"
 
   /** Root-name prefixes of replaced layouts, swept on every commit. */
-  private val Retired = Seq("graft-bidx-v1-", "graft-ivfidx-", "graft-incidx-")
+  private val Retired = Seq("graft-bidx-v1-", "graft-ivfidx-", "graft-incidx-",
+    "graft-vecarrivals-")
 
   /** Cold roots kept per index name — sized like [[Memo.Cap]]: a
     * test JVM cycles spec fixture corpora through the same store the

@@ -52,32 +52,29 @@ object StreamQueries {
     * micro-batch, so the gate's 2 MB landing dir paid 128
     * store open/commit cycles per batch of pure fixed overhead.
     * Width derives from the landing-dir bytes at ~32 MB of input per
-    * state partition (clamped to [4, session width]); a production
-    * deployment sizes by sustained throughput instead and pins
-    * `GRAFT_STREAM_STATE_PARTITIONS` (the GRAFT_ANN_* dial
-    * discipline). Emitted rows are a pure data function (the spec
-    * suite proves batch-count/partitioning invariance), so the dial
-    * changes cost, never content — and each gate face starts from a
-    * fresh temp checkpoint, so no checkpoint ever sees two widths. */
-  private def stateParts(s: SparkSession, srcDir: String): Int =
-    sys.env.get("GRAFT_STREAM_STATE_PARTITIONS").map(_.toInt).getOrElse {
-      // r14 ADVICE: sum RECURSIVELY (a nested landing dir undercounted
-      // bytes) and clamp in LONG space BEFORE narrowing — the old
-      // (bytes / 32MB).toInt overflowed the Long.MaxValue error
-      // fallback to a negative int, clamping the intended-conservative
-      // fallback to the 4-partition floor instead of the session width
-      val bytes =
-        try {
-          def walk(f: java.io.File): Long =
-            if (f.isDirectory)
-              Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-            else f.length()
-          walk(new java.io.File(srcDir))
-        } catch { case _: Throwable => Long.MaxValue }
-      val sessionWidth = s.conf.get("spark.sql.shuffle.partitions").toInt
-      math.min(sessionWidth.toLong,
-        math.max(4L, bytes / (32L << 20))).toInt
-    }
+    * state partition (clamped to [4, session width]). Emitted rows
+    * are a pure data function (the spec suite proves
+    * batch-count/partitioning invariance), so the width changes
+    * cost, never content — and each gate face starts from a fresh
+    * temp checkpoint, so no checkpoint ever sees two widths. */
+  private def stateParts(s: SparkSession, srcDir: String): Int = {
+    // r14 ADVICE: sum RECURSIVELY (a nested landing dir undercounted
+    // bytes) and clamp in LONG space BEFORE narrowing — the old
+    // (bytes / 32MB).toInt overflowed the Long.MaxValue error
+    // fallback to a negative int, clamping the intended-conservative
+    // fallback to the 4-partition floor instead of the session width
+    val bytes =
+      try {
+        def walk(f: java.io.File): Long =
+          if (f.isDirectory)
+            Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
+          else f.length()
+        walk(new java.io.File(srcDir))
+      } catch { case _: Throwable => Long.MaxValue }
+    val sessionWidth = s.conf.get("spark.sql.shuffle.partitions").toInt
+    math.min(sessionWidth.toLong,
+      math.max(4L, bytes / (32L << 20))).toInt
+  }
 
   /** Run a finite streaming query to completion into a memory sink
     * and return the sink rows. Drops any previous run's sink view
@@ -109,7 +106,7 @@ object StreamQueries {
     import s.implicits._
     val out = runToTable(s, "stream_window_stats",
       Streams.windowStats(Streams.eventsStream(s, dir)), "complete",
-      Streams.eventsLandingDir(dir))
+      Streams.landingDir(dir, "events"))
     out.select(
         date_format($"hour", "yyyy-MM-dd HH:mm:ss").as("hour"),
         $"event_type", $"n_events", rnd($"sum_value", 2).as("sum_value"))
@@ -122,7 +119,7 @@ object StreamQueries {
     import s.implicits._
     val out = runToTable(s, "stream_hopping_stats",
       Streams.hoppingAgg(Streams.eventsStream(s, dir)), "complete",
-      Streams.eventsLandingDir(dir))
+      Streams.landingDir(dir, "events"))
     out.select(
         date_format($"win_start", "yyyy-MM-dd HH:mm:ss").as("win_start"),
         $"event_type", $"n_events")
@@ -137,7 +134,7 @@ object StreamQueries {
     import s.implicits._
     val out = runToTable(s, "stream_dedup_keys",
       Streams.streamingDedup(Streams.eventsStream(s, dir)), "append",
-      Streams.eventsLandingDir(dir))
+      Streams.landingDir(dir, "events"))
     out.select($"user_id", $"event_type").orderBy($"user_id", $"event_type")
   }
 
@@ -149,7 +146,7 @@ object StreamQueries {
     import s.implicits._
     val out = runToTable(s, "stream_interval_join",
       Streams.viewPurchaseJoin(Streams.eventsStream(s, dir)), "append",
-      Streams.eventsLandingDir(dir))
+      Streams.landingDir(dir, "events"))
     out.select($"user_id", $"view_id", $"purchase_id",
         floor($"purchase_value" * 100 + lit(0.5)).cast("long").as("purchase_cents"))
       .orderBy($"view_id", $"purchase_id")
@@ -171,7 +168,7 @@ object StreamQueries {
     import s.implicits._
     val out = runToTable(s, "stream_interval_outer",
       Streams.viewPurchaseOuterJoin(Streams.eventsStream(s, dir)), "append",
-      Streams.eventsLandingDir(dir))
+      Streams.landingDir(dir, "events"))
     out.select($"user_id", $"view_id",
         coalesce($"purchase_id", lit(-1L)).as("purchase_id"),
         coalesce(floor($"purchase_value" * 100 + lit(0.5)).cast("long"),
@@ -193,7 +190,7 @@ object StreamQueries {
       .withColumn("value", floor($"value" * 100 + lit(0.5)))
     val out = runToTable(s, "stream_sessionize_closed",
       Streams.sessionize(events).toDF(), "append",
-      Streams.eventsLandingDir(dir))
+      Streams.landingDir(dir, "events"))
     out.where($"closed")
       .select($"user_id", $"start_us", $"end_us", $"n_events",
         $"sum_value".cast("long").as("sum_cents"))
@@ -207,14 +204,15 @@ object StreamQueries {
     * is batch-count-dependent, so it is consumed here, not output). */
   val streamCdcState: QueryFn = (s, dir) => {
     import s.implicits._
-    val changes = Streams.eventsStreamFrom(s, stagedEventsDir(s, dir)).select(
+    val src = Streams.landingDir(dir, "events")
+    val changes = Streams.eventsStreamFrom(s, src).select(
       $"event_id".as("seq"),
       ($"user_id" % 500).as("key"),
       when($"event_type" === "click", lit("delete")).otherwise(lit("upsert")).as("op"),
       $"event_type".as("st"),
       rnd($"value", 2).as("tp"))
     val out = runToTable(s, "stream_cdc_state",
-      Streams.cdcApply(changes).toDF(), "update", stagedEventsDir(s, dir))
+      Streams.cdcApply(changes).toDF(), "update", src)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"key").orderBy($"ver".desc)
     out.withColumn("rn", row_number().over(w)).where($"rn" === 1)
@@ -234,7 +232,7 @@ object StreamQueries {
     import s.implicits._
     val out = runToTable(s, "stream_kmv_distinct",
       Streams.kmvStream(Streams.eventsStream(s, dir)).toDF(), "append",
-      Streams.eventsLandingDir(dir))
+      Streams.landingDir(dir, "events"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"event_type")
       .orderBy($"n_sketch".desc, $"est_distinct".desc)
@@ -255,7 +253,7 @@ object StreamQueries {
     import s.implicits._
     val out = runToTable(s, "stream_hll_distinct",
       Streams.hllStream(Streams.eventsStream(s, dir)).toDF(), "append",
-      Streams.eventsLandingDir(dir))
+      Streams.landingDir(dir, "events"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"event_type")
       .orderBy($"n_zero_regs".asc, $"hsum".asc)
@@ -282,7 +280,7 @@ object StreamQueries {
       .agg(count(lit(1)).as("n_events"),
         graft.functions.Cols.xsum($"value").as("sum_value"))
     val out = runToTable(s, "stream_enrich_rollup", enriched, "complete",
-      Streams.eventsLandingDir(dir))
+      Streams.landingDir(dir, "events"))
     out.select($"nation", $"event_type", $"n_events",
         rnd($"sum_value", 2).as("sum_value"))
       .orderBy($"nation", $"event_type")
@@ -301,7 +299,7 @@ object StreamQueries {
     import s.implicits._
     val out = runToTable(s, "stream_topk_events",
       Streams.topkEvents(Streams.eventsStream(s, dir)).toDF(), "append",
-      Streams.eventsLandingDir(dir))
+      Streams.landingDir(dir, "events"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"event_type").orderBy($"value".desc, $"event_id".asc)
     out.select($"event_type", $"event_id", $"value").distinct()
@@ -323,9 +321,9 @@ object StreamQueries {
     * at 1e-6-rounded cosine, ties to the lower cell). */
   val streamIvfIngest: QueryFn = (s, dir) => {
     import s.implicits._
+    val src = stagedVectorsDir(s, dir)
     val out = runToTable(s, "stream_ivf_ingest",
-      Streams.ivfIngestStream(s, dir, stagedVectorsDir(s, dir)), "append",
-      stagedVectorsDir(s, dir))
+      Streams.ivfIngestStream(s, dir, src), "append", src)
     out.select($"vec_id", $"cell".cast("long").as("cell")).orderBy($"vec_id")
   }
 
@@ -343,10 +341,10 @@ object StreamQueries {
   val streamNeardupAlerts: QueryFn = (s, dir) => {
     import s.implicits._
     val docs = Tables.documents(s, dir)
+    val src = Streams.landingDir(dir, "documents")
     val alerts = runToTable(s, "stream_neardup_alerts",
-      Streams.neardupAlerts(
-        Streams.bandedDocs(docsStreamFrom(s, stagedDocsDir(s, dir)))).toDF(),
-      "append", stagedDocsDir(s, dir))
+      Streams.neardupAlerts(Streams.bandedDocs(docsStreamFrom(s, src))).toDF(),
+      "append", src)
     val uncapped = Streams.bandedDocs(docs)
       .groupBy($"band").agg(count_distinct($"doc_id").as("n"))
       .where($"n" >= 2 && $"n" <= Streams.MaxPriorsPerBand)
@@ -386,9 +384,9 @@ object StreamQueries {
     * (1e-6-rounded sim, nbr), left join from the arrival split. */
   val streamHnswIngest: QueryFn = (s, dir) => {
     import s.implicits._
+    val src = stagedVectorsDir(s, dir)
     val out = runToTable(s, "stream_hnsw_ingest",
-      Streams.hnswIngestStream(s, dir, stagedVectorsDir(s, dir)).toDF(),
-      "append", stagedVectorsDir(s, dir))
+      Streams.hnswIngestStream(s, dir, src).toDF(), "append", src)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"vec_id").orderBy($"sim_r".desc, $"nbr".asc)
     val ranked = out.withColumn("rnk", row_number().over(w).cast("long"))
@@ -408,32 +406,24 @@ object StreamQueries {
   private def docsStreamFrom(s: SparkSession, dir: String): DataFrame =
     s.readStream.schema(s.read.parquet(dir).schema).parquet(dir)
 
-  /** The arriving-vector landing dir behind [[streamIvfIngest]]:
-    * the vec_id % 10 == 0 split staged once per corpus CONTENT — the
-    * stage key folds in the source's (name, size, mtime) fingerprint
-    * (r9 advice: a path-only key served STALE vectors to the ingest
-    * faces after a corpus was regenerated in place, while the oracle
-    * read the fresh file — the one desync class the dial discipline
-    * can't catch). A regenerated corpus lands in a new stage dir; the
-    * `_SUCCESS` check stays as the within-fingerprint idempotence
-    * guard (a killed half-write re-stages). */
-  private def stagedVectorsDir(s: SparkSession, sfDir: String): String = {
-    val fp = java.lang.Long.toUnsignedString(graft.functions.Hashes.fnv64(
-      graft.mr.Fs.fingerprint(sfDir + "/embeddings.parquet")), 16)
-    val stage = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft-vecarrivals-" + graft.mr.Fs.pathKey(sfDir) + "-" + fp)
-    if (!new java.io.File(stage, "_SUCCESS").exists()) {
+  /** The arriving-vector landing dir behind [[streamIvfIngest]] and
+    * [[streamHnswIngest]]: the vec_id % 10 == 0 split, committed once
+    * per corpus CONTENT as the `vec_arrivals` index — the key folds
+    * in the source's (name, size, mtime) fingerprint (r9 advice: a
+    * path-only key served STALE vectors to the ingest faces after a
+    * corpus was regenerated in place, while the oracle read the fresh
+    * file). [[IndexStore.commit]] gives it the one commit protocol:
+    * a second builder writes its own attempt instead of overwriting
+    * files under a running stream, and old stages fall under
+    * retention. The file source reads `<attempt>/data` only. */
+  private def stagedVectorsDir(s: SparkSession, sfDir: String): String =
+    IndexStore.commit("vec_arrivals",
+        sfDir + graft.mr.Fs.fingerprint(sfDir + "/embeddings.parquet")) { dir =>
       Tables.embeddings(s, sfDir).where(col("vec_id") % 10 === 0)
         .select(col("vec_id"), col("embedding"), col("label"))
-        .write.mode("overwrite").parquet(stage.toString)
-    }
-    stage.toString
-  }
+        .write.parquet(dir + "/data")
+    } + "/data"
 
-  /** The documents landing dir behind [[streamNeardupAlerts]] —
-    * a directory corpus serves as-is, the single-file testdata
-    * layout goes through a per-sfDir symlink dir (the
-    * [[Streams.eventsLandingDir]] pattern). */
   /** Streaming decontamination admission gate, driver-gated (r10 —
     * the last spec-only streaming face with a pure-data contract):
     * the benchmark 4-gram Bloom ([[graft.functions.FnvBloom]] — the
@@ -447,36 +437,9 @@ object StreamQueries {
     * hashable at all. */
   val streamDecontaminate: QueryFn = (s, dir) => {
     import s.implicits._
+    val src = Streams.landingDir(dir, "documents")
     val out = runToTable(s, "stream_decontaminate",
-      Streams.decontaminateStream(s, dir, stagedDocsDir(s, dir)).toDF(),
-      "append", stagedDocsDir(s, dir))
+      Streams.decontaminateStream(s, dir, src).toDF(), "append", src)
     out.select($"doc_id", $"n_grams", $"n_flagged").orderBy($"doc_id")
   }
-
-  private def stagedDocsDir(s: SparkSession, sfDir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val src = Paths.get(sfDir, "documents.parquet")
-    if (Files.isDirectory(src)) src.toString
-    else {
-      val stage = Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft-docs-" + graft.mr.Fs.pathKey(sfDir))
-      // validate the staged CONTENT, not the dir's existence: a
-      // half-created stage (dir without link — a crash between the
-      // two calls) would otherwise stay permanently empty (r9
-      // advice). Symlinked content is never stale — reads follow the
-      // link to the live file — so only the link needs repair.
-      Files.createDirectories(stage)
-      val link = stage.resolve("documents.parquet")
-      if (!Files.exists(link)) {
-        Files.deleteIfExists(link) // a dangling symlink "exists=false"
-        Files.createSymbolicLink(link, src)
-      }
-      stage.toString
-    }
-  }
-
-  /** The same landing dir [[Streams.eventsStream]] reads (shared so
-    * both faces consume the identical source files). */
-  private def stagedEventsDir(s: SparkSession, sfDir: String): String =
-    Streams.eventsLandingDir(sfDir)
 }

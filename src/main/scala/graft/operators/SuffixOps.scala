@@ -165,8 +165,7 @@ object SuffixOps {
     * token order, shorter-prefix first, ties by (doc_id, pos)) and
     * the same exact LCPs, so every consumer hash is unchanged
     * (SuffixSpec + the sf0.001/0.01 oracle gate re-prove it). */
-  val DirectSortMaxLen: Long =
-    sys.env.get("GRAFT_SUFFIX_DIRECT_MAXLEN").map(_.toLong).getOrElse(512L)
+  val DirectSortMaxLen: Long = 512L
 
   /** Test-visible override of [[DirectSortMaxLen]] (the
     * Checkpoints.overrideDir discipline) — lets the spec run the SAME

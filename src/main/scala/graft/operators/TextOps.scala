@@ -1582,43 +1582,35 @@ object TextOps {
       .orderBy($"chunk")
   }
 
-  /** Perceptual-hash band geometry — the simhash dial applied to the
-    * image/byte-payload family (r9 verdict #1):
-    * `GRAFT_PHASH_GEOMETRY=words:bandBits:tau`, default `1:16:12` —
-    * the historical 64-slice signature in four 16-bit bands with
-    * hamming ≤ 12 (re-encoded copies flip ≤ 4 of 64 blocks, random
-    * pairs sit near 32 — 12 splits the populations with wide
-    * margin). The wide dial `2:32:24` DOUBLES the signature (128
+  /** Perceptual-hash band geometry `(words, bandBits, tau)` — the
+    * simhash geometry applied to the image/byte-payload family (r9
+    * verdict #1). The default `(1, 16, 12)` is the historical
+    * 64-slice signature in four 16-bit bands with hamming ≤ 12
+    * (re-encoded copies flip ≤ 4 of 64 blocks, random pairs sit near
+    * 32 — 12 splits the populations with wide margin). The wide
+    * geometry `(2, 32, 24)` DOUBLES the signature (128
     * slices / an 8×16 aHash grid) so bands widen to 32 bits at the
     * SAME per-band content coverage: the flip FRACTION of an edit is
     * grid-invariant (an edited byte span covers the same share of
     * finer slices), so tau scales with the signature and planted
     * recall is preserved while the random band-collision floor drops
-    * from n²·4/2¹⁶ to n²·4/2³² — the exact simhash 1:16:6 → 2:32:12
-    * move. Both neardup oracles interpolate these accessors;
-    * defaults preserve the gate hashes. bands = 64·words/bandBits. */
+    * from n²·4/2¹⁶ to n²·4/2³² — the exact simhash (1, 16, 6) →
+    * (2, 32, 12) move. The n-aware Hamming schedule picks it on large
+    * corpora; specs pin a geometry through the test-visible override.
+    * Both neardup oracles interpolate these accessors; the default
+    * preserves the gate hashes. bands = 64·words/bandBits. */
   @volatile var overridePhashGeometry: Option[(Int, Int, Int)] = None
-  private def pinnedPhashGeometry: Option[(Int, Int, Int)] =
-    overridePhashGeometry
-      .orElse(sys.env.get("GRAFT_PHASH_GEOMETRY").map { g =>
-        val Array(w, b, t) = g.split(":").map(_.trim.toInt)
-        require(w >= 1 && w <= 4, s"phash words must be 1..4, got $w")
-        require(Seq(8, 16, 32, 64).contains(b), s"phash bandBits must divide 64, got $b")
-        require(t >= 0 && t <= w * 64, s"phash tau out of range: $t")
-        (w, b, t)
-      })
   def phashGeometry: (Int, Int, Int) =
-    pinnedPhashGeometry.getOrElse(
-      GeometryContext.resolve((1, 16, 12))((s, d) =>
-        AnnOps.scheduledHammingGeometry(DedupOps.nDocs(s, d), (1, 16, 12))))
+    GeometryContext.resolve(overridePhashGeometry.getOrElse((1, 16, 12)))(
+      phashGeometryFor)
 
-  /** The geometry the phash faces USE for this corpus: pinned dial
+  /** The geometry the phash faces USE for this corpus: the override
     * if set, else the n-aware Hamming schedule on the document count
     * (the media registries are doc-derived, so doc count is the
     * registry-size proxy the schedule needs). */
   def phashGeometryFor(
       s: org.apache.spark.sql.SparkSession, dir: String): (Int, Int, Int) =
-    pinnedPhashGeometry.getOrElse(
+    overridePhashGeometry.getOrElse(
       AnnOps.scheduledHammingGeometry(DedupOps.nDocs(s, dir), (1, 16, 12)))
   def PhashWords: Int = phashGeometry._1
   def PhashBandBits: Int = phashGeometry._2

@@ -181,26 +181,11 @@ object Warc {
     * generous headroom while keeping the worst case of a crafted
     * deflate bomb (or of each false-magic resync attempt below) to
     * one small allocation, not a 256 MB heap bite per attempt (r11
-    * advice). Archives that legitimately carry larger members
-    * (uncapped PDF/media responses) raise `GRAFT_WARC_MEMBER_CAP`
-    * at launch — a cap drop is classified like corruption (member
-    * skipped, walk resyncs), never an OOM. The env dial is validated
-    * eagerly with a NAMED error (r12 advice: a bare toInt here threw
-    * ExceptionInInitializerError — the one exception class that hides
-    * its own cause — and a zero/negative value silently dropped every
-    * member); oversize drops are counted in [[oversizeDrops]] so the
-    * data loss is observable, not silent. */
-  val MaxMemberBytes: Int = sys.env.get("GRAFT_WARC_MEMBER_CAP") match {
-    case None => 1 << 22
-    case Some(v) =>
-      val n = try v.trim.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"GRAFT_WARC_MEMBER_CAP must be a positive int (bytes), got '$v'")
-      }
-      require(n > 0,
-        s"GRAFT_WARC_MEMBER_CAP must be positive (bytes), got $n")
-      n
-  }
+    * advice). A cap drop is classified like corruption (member
+    * skipped, walk resyncs), never an OOM; oversize drops are counted
+    * in [[oversizeDrops]] so the data loss is observable, not
+    * silent. */
+  val MaxMemberBytes: Int = 1 << 22
 
   /** Members dropped ONLY because their decompressed size exceeded
     * [[MaxMemberBytes]] (r12 advice: a cap drop looked identical to
@@ -257,7 +242,7 @@ object Warc {
           oversizeDrops.incrementAndGet()
           System.err.println(
             s"[warc] member at offset $off dropped: decompressed size " +
-            s"exceeds cap $MaxMemberBytes (GRAFT_WARC_MEMBER_CAP raises it)")
+            s"exceeds cap $MaxMemberBytes")
           return None
         }
       }

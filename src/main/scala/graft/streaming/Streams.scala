@@ -32,29 +32,31 @@ object Streams {
     * per-sfDir symlink dir (a real deployment streams a landing
     * directory to begin with). */
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame =
-    eventsStreamFrom(spark, eventsLandingDir(sfDir))
+    eventsStreamFrom(spark, landingDir(sfDir, "events"))
 
-  /** The landing directory backing [[eventsStream]] for a corpus dir:
-    * a Spark-written `events.parquet` DIRECTORY (the stress corpus,
-    * any real landing zone) serves as-is; the single-file testdata
-    * layout is exposed through a per-sfDir symlink dir, since the
-    * file source wants a directory. Shared with the CDC face in
-    * StreamQueries so both read the identical source. */
-  def eventsLandingDir(sfDir: String): String = {
+  /** The landing directory of one corpus table (`events`,
+    * `documents`): a Spark-written `<table>.parquet` DIRECTORY (the
+    * stress corpus, any real landing zone) serves as-is; the
+    * single-file testdata layout is exposed through a per-(sfDir,
+    * table) symlink dir, since the file source wants a directory.
+    * Every streaming face of a table reads through here, so all of
+    * them consume the identical source files. */
+  def landingDir(sfDir: String, table: String): String = {
     import java.nio.file.{Files, Paths}
-    val src = Paths.get(sfDir, "events.parquet")
+    val src = Paths.get(sfDir, table + ".parquet")
     if (Files.isDirectory(src)) src.toString
     else {
       val stage = Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft-events-" + graft.mr.Fs.pathKey(sfDir))
-      // repair a half-created stage (dir without link) instead of
-      // trusting the dir's existence — the StreamQueries.stagedDocsDir
-      // discipline; symlinked content reads the live file, so the
-      // link itself is the only thing that can rot
+        s"graft-$table-" + graft.mr.Fs.pathKey(sfDir))
+      // validate the staged CONTENT, not the dir's existence: a
+      // half-created stage (dir without link — a crash between the
+      // two calls) would otherwise stay permanently empty (r9
+      // advice). Symlinked content is never stale — reads follow the
+      // link to the live file — so only the link needs repair.
       Files.createDirectories(stage)
-      val link = stage.resolve("events.parquet")
+      val link = stage.resolve(table + ".parquet")
       if (!Files.exists(link)) {
-        Files.deleteIfExists(link)
+        Files.deleteIfExists(link) // a dangling symlink "exists=false"
         Files.createSymbolicLink(link, src)
       }
       stage.toString

@@ -40,4 +40,20 @@ class SurveyRegistrySpec extends AnyFunSuite {
     assert(orphanOracles.isEmpty,
       s"oracles with no query: ${orphanOracles.toSeq.sorted}")
   }
+
+  test("src/main reads only the deployment GRAFT_* settings") {
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+      }
+    val knob = """\bGRAFT_[A-Z_]+""".r
+    val names = scalaFiles(new java.io.File("src/main/scala")).flatMap { f =>
+      val src = scala.io.Source.fromFile(f)("UTF-8")
+      try knob.findAllIn(src.mkString).toList finally src.close()
+    }.toSet
+    assert(names == Set("GRAFT_CHAOS", "GRAFT_INDEX_ROOT",
+      "GRAFT_RELIABLE_CHECKPOINT_DIR"),
+      s"GRAFT_* names in src/main/scala: ${names.toSeq.sorted}")
+  }
 }

@@ -4,10 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 
-/** The ANN harness's probe-set size and serve-k are per-run dials
-  * (GRAFT_ANN_NUM_PROBES / GRAFT_ANN_K at launch; test-visible
-  * overrides here) — a corpus-scale recall sweep widens every serve
-  * path and panel together without a code edit. */
+/** The ANN harness's probe-set size and serve-k are read through
+  * one accessor each (`AnnOps.NumProbes` / `AnnOps.K`, test-visible
+  * overrides here) — setting an override widens every serve path
+  * and panel together without a code edit. */
 class AnnDialSpec extends SparkTestBase {
 
   test("probe-set and k dials widen every serve path together; defaults restore hashes") {

@@ -191,7 +191,7 @@ class IndexStoreSpec extends SparkTestBase {
     val rootDir = freshRoot()
     try {
       val retired = Seq("graft-bidx-v1-suffix_lcp-1f", "graft-ivfidx-v1-2e",
-        "graft-incidx-v4-s5-t50-3d")
+        "graft-incidx-v4-s5-t50-3d", "graft-vecarrivals-root_sf0.001-6a")
       val kept = Seq("graft-bidx-v2-other-4c", "unrelated-5b")
       (retired ++ kept).foreach(n => new java.io.File(rootDir, s"$n/part").mkdirs())
       IndexStore.frame(spark, "spec_sweep", "k")(spark.range(1).toDF("x"))

@@ -127,7 +127,7 @@ class StreamingSpec extends SparkTestBase {
     }
 
     // one-batch run over the corpus landing dir
-    val oneBatch = runOver(Streams.eventsLandingDir(sfDir))
+    val oneBatch = runOver(Streams.landingDir(sfDir, "events"))
 
     // two-wave run: early half then late half (event-time split so
     // the watermark genuinely advances between batches)
