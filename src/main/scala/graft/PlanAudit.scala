@@ -225,12 +225,11 @@ object PlanAudit {
         "no cartesian" -> (p => !p.contains("CartesianProduct"))),
       "dedup_incremental" -> Map(
         // the corpus side must come from the committed index attempt,
-        // not a recomputation over the corpus text (scan locations
-        // print abbreviated: match the index root + its attempt dir)
+        // not a recomputation over the corpus text (full scan roots)
         "reads persisted corpus index" -> (p => operators.IndexStore.committed(
           operators.DedupOps.IncrementalIndex.Name,
           operators.DedupOps.IncrementalIndex.key(sfDir, 0.5)).exists(a =>
-            p.contains(new org.apache.hadoop.fs.Path(a).getParent.getName + "/a-"))),
+            p.contains(new org.apache.hadoop.fs.Path(a).toUri.getPath + "/"))),
         "no cartesian" -> (p => !p.contains("CartesianProduct"))),
       "mm_mp4_meta" -> Map(
         // parse is map-only per payload: container bytes never
@@ -1057,9 +1056,17 @@ object PlanAudit {
       val df = SparkEntry.queries(name)(spark, sfDir)
       // AQE prints the pre-execution plan without codegen stage marks,
       // so append the codegen-mode explain (which compiles the stages)
-      val plan = df.queryExecution.executedPlan.toString + "\n" +
+      // and every file scan's full root paths (locations print cut)
+      val executed = df.queryExecution.executedPlan
+      val scanRoots = new org.apache.spark.sql.execution.adaptive
+          .AdaptiveSparkPlanHelper {}.collect(executed) {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.relation.location.rootPaths.mkString("\n")
+      }
+      val plan = executed.toString + "\n" +
         df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("codegen"))
+          org.apache.spark.sql.execution.ExplainMode.fromString("codegen")) +
+        "\n" + scanRoots.mkString("\n")
       println(s"== $name")
       checks.foreach { case (label, check) =>
         val ok = check(plan)

@@ -922,7 +922,7 @@ object AnnOps {
     * drifted persisted index hash-fails. */
   val embIvfBalance: QueryFn = (s, dir) => {
     import s.implicits._
-    val k = IvfIndex.centroids(s, IvfIndex.ensure(s, dir)).length
+    val k = IvfIndex.open(s, dir).cents.length
     val assigned = routeWithFrozenQuantizer(s, dir)(
       Tables.embeddings(s, dir).select($"vec_id", $"embedding"))
     val counts = assigned.groupBy($"cell").agg(count(lit(1)).as("n_vecs"))
@@ -1328,26 +1328,29 @@ object AnnOps {
     * actually uses, so a probed-cell read prunes every unprobed
     * partition at the parquet-listing level. Keyed by a
     * (name,size,mtime) fingerprint of the corpus files so a
-    * regenerated corpus can never serve stale state. */
+    * regenerated corpus can never serve stale state. The session's
+    * [[IndexStore.open]] handle carries the attempt dir plus the
+    * collected centroids, so a warm consumer reads neither. */
   private[operators] object IvfIndex {
     val Name = "ivf"
     private val Version = "v1"
 
+    final case class Handle(dir: String, cents: Seq[(Int, Seq[Double])])
+
     def key(dir: String): String =
       Version + ":" + dir + graft.mr.Fs.fingerprint(dir + "/embeddings.parquet")
 
-    def ensure(s: SparkSession, dir: String): String = synchronized {
-      IndexStore.commit(Name, key(dir)) { out =>
+    def open(s: SparkSession, dir: String): Handle =
+      IndexStore.open(s, Name, key(dir)) { out =>
         val baseVecs = Tables.embeddings(s, dir).where(col("vec_id") % 10 =!= 0)
         centroidRows(baseVecs).write.parquet(s"$out/cent")
         baseVecs
           .select(col("vec_id"), col("embedding"),
             cellAssignUdf(centroids(s, out))(col("embedding")).as("cell"))
           .write.partitionBy("cell").parquet(s"$out/vecs")
-      }
-    }
+      }(a => Handle(a, centroids(s, a)))
 
-    def centroids(s: SparkSession, idx: String): Seq[(Int, Seq[Double])] =
+    private def centroids(s: SparkSession, idx: String): Seq[(Int, Seq[Double])] =
       collectCentroids(s.read.parquet(s"$idx/cent"))
   }
 
@@ -1369,7 +1372,7 @@ object AnnOps {
     * projection (centroid literals, fold argmax): works unchanged on
     * a streaming DataFrame, shuffles nothing. */
   def routeWithFrozenQuantizer(s: SparkSession, dir: String)(vecs: DataFrame): DataFrame = {
-    val cents = IvfIndex.centroids(s, IvfIndex.ensure(s, dir))
+    val cents = IvfIndex.open(s, dir).cents
     vecs
       .select(col("vec_id"), col("embedding"),
         cellAssignUdf(cents)(col("embedding")).as("cell"))
@@ -1377,8 +1380,7 @@ object AnnOps {
 
   val annIncrementalTopk: QueryFn = (s, dir) => {
     import s.implicits._
-    val idx = IvfIndex.ensure(s, dir)
-    val cents = IvfIndex.centroids(s, idx)
+    val IvfIndex.Handle(idx, cents) = IvfIndex.open(s, dir)
     val cellsLit = typedLit(cents)
     // the probed-cell routing table is probes×IvfProbeCells rows —
     // collected so the cell predicate reaches the partitioned index

@@ -193,46 +193,40 @@ object BpeOps {
       : Seq[(Long, String, String, String, Long)] =
     trainMergeBatches(docs).flatten
 
-  /** Session-scoped memo of the trained batches per corpus
-    * fingerprint (the HnswOps.edgesMemo discipline): train, encode,
-    * and fertility all serve the SAME merge table — without this the
-    * bench paid 12 driver rounds three times over (training is the
-    * expensive half of every BPE row; the table itself is a few
-    * hundred driver-side tuples). */
-  private val mergesMemo = new Memo[Seq[Seq[(Long, String, String, String, Long)]]]()
-
   /** Cold-build entry for the bench's `build_bpe_merges` row: pays
     * the 12 training rounds once so the train/encode/fertility query
     * rows report warm-serve semantics (the build_* discipline —
-    * session memos must never amortize invisibly into their first
+    * session handles must never amortize invisibly into their first
     * consumer). */
   def buildMerges(s: SparkSession, dir: String): Unit = {
     trainedBatches(s, dir); ()
   }
 
+  /** The trained batches per corpus fingerprint, an [[IndexStore]]
+    * handle whose load collects the merge table: train, encode, and
+    * fertility all serve the SAME merge table — without this the
+    * bench paid 12 driver rounds three times over (training is the
+    * expensive half of every BPE row; the table itself is a few
+    * hundred driver-side tuples). */
   private def trainedBatches(s: SparkSession, dir: String)
       : Seq[Seq[(Long, String, String, String, Long)]] = {
     val key = dir + graft.mr.Fs.fingerprint(dir + "/documents.parquet") +
       s":rounds$Rounds"
-    mergesMemo.getOrElseUpdate(s, key, {
-      // disk layer under the session memo (r10 verdict #1): the
-      // merge table is a few hundred driver tuples, but TRAINING it
-      // is ~12 synchronized corpus rounds — a rerun JVM reads the
-      // persisted table instead
-      val df = IndexStore.frame(s, "bpe_merges", key) {
-        import s.implicits._
-        trainMergeBatches(Tables.documents(s, dir)).zipWithIndex
-          .flatMap { case (batch, round) =>
-            batch.map(t => (round, t._1, t._2, t._3, t._4, t._5))
-          }
-          .toDF("round", "rank", "lhs", "rhs", "merged", "pair_count")
-      }
-      df.collect()
+    IndexStore.open(s, "bpe_merges", key) { out =>
+      import s.implicits._
+      trainMergeBatches(Tables.documents(s, dir)).zipWithIndex
+        .flatMap { case (batch, round) =>
+          batch.map(t => (round, t._1, t._2, t._3, t._4, t._5))
+        }
+        .toDF("round", "rank", "lhs", "rhs", "merged", "pair_count")
+        .write.parquet(out + "/data")
+    } { a =>
+      s.read.parquet(a + "/data").collect()
         .map(r => (r.getInt(0), (r.getLong(1), r.getString(2),
           r.getString(3), r.getString(4), r.getLong(5))))
         .groupBy(_._1).toSeq.sortBy(_._1)
         .map(_._2.map(_._2).sortBy(_._1).toSeq)
-    })
+    }
   }
 
   /** Same, grouped by round — the encode pass applies each round's

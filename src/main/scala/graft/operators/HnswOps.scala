@@ -55,31 +55,28 @@ object HnswOps {
     * arbitrary points that can all land in one region of the space;
     * medoids cover every coarse region by construction, which is what
     * HNSW's upper layers buy, at the cost of one bounded TopK pass
-    * over the corpus (memoized with the edge list). Deterministic and
+    * over the corpus (a handle like the edge list). Deterministic and
     * oracle-replayable: DuckDB recomputes the identical centroids,
     * assignment, and per-cell argmax. */
-  private val entriesMemo = new Memo[Seq[Long]]()
-
   private[operators] def medoidEntries(s: SparkSession, dir: String): Seq[Long] = {
     val key = dir + graft.mr.Fs.fingerprint(dir + "/embeddings.parquet")
-    entriesMemo.getOrElseUpdate(s, key,
-      IndexStore.frame(s, "nsw_entries", key) {
-        import s.implicits._
-        val cents = AnnOps.ivfCentroids(s, dir)
-        // r14 ADVICE: one argmax scan yields BOTH fields (a separate
-        // cell and similarity expression ran the full centroid loop
-        // twice per row); the struct is materialized in its own
-        // select so the field reads don't re-inline the loop
-        val scored = Tables.embeddings(s, dir)
-          .select($"vec_id",
-            graft.functions.VectorExpressions
-              .cell_argmax_both($"embedding", cents).as("cs"))
-          .select($"vec_id", $"cs.cell".as("cell"), $"cs.sim_r".as("sim_r"))
-        graft.plans.TopK.perKey(scored,
-          keyCols = Seq("cell"),
-          orderCols = Seq("sim_r" -> false, "vec_id" -> true), k = 1)
-          .select($"vec_id")
-      }.collect().map(_.getLong(0)).toSeq.sorted)
+    IndexStore.open(s, "nsw_entries", key) { out =>
+      import s.implicits._
+      val cents = AnnOps.ivfCentroids(s, dir)
+      // r14 ADVICE: one argmax scan yields BOTH fields (a separate
+      // cell and similarity expression ran the full centroid loop
+      // twice per row); the struct is materialized in its own
+      // select so the field reads don't re-inline the loop
+      val scored = Tables.embeddings(s, dir)
+        .select($"vec_id",
+          graft.functions.VectorExpressions
+            .cell_argmax_both($"embedding", cents).as("cs"))
+        .select($"vec_id", $"cs.cell".as("cell"), $"cs.sim_r".as("sim_r"))
+      graft.plans.TopK.perKey(scored,
+        keyCols = Seq("cell"),
+        orderCols = Seq("sim_r" -> false, "vec_id" -> true), k = 1)
+        .select($"vec_id").write.parquet(out + "/data")
+    }(a => s.read.parquet(a + "/data").collect().map(_.getLong(0)).toSeq.sorted)
   }
 
   /** The band keys of the signature under the [[AnnOps.lshGeometry]]
@@ -237,13 +234,11 @@ object HnswOps {
       keyCols = Seq("vec_id"), orderCols = Seq("sim_r" -> false, "nbr" -> true),
       k = M)
 
-  /** Session-scoped memo of the checkpointed edge list per corpus
-    * fingerprint (the SuffixOps.lcpMemo discipline): the gate, the
-    * plan audit, and the recall specs all serve against the same
-    * frozen graph — rebuilding the banded candidate join per call
-    * re-pays the most expensive stage for identical input. */
-  private val edgesMemo = new Memo[DataFrame]()
-
+  /** The edge list per corpus fingerprint, an [[IndexStore]] handle
+    * like SuffixOps' LCPs: the gate, the plan audit, and the recall
+    * specs all serve against the same frozen graph — rebuilding the
+    * banded candidate join per call re-pays the most expensive stage
+    * for identical input. */
   private def edgesCached(s: SparkSession, dir: String): DataFrame = {
     // key carries the band-geometry dial: a re-dialed run (or the
     // n-aware schedule picking differently for a regenerated corpus)
@@ -252,12 +247,11 @@ object HnswOps {
     val (p, b) = AnnOps.lshGeometryFor(s, dir)
     val key = dir + graft.mr.Fs.fingerprint(dir + "/embeddings.parquet") +
       s":geo$p:$b:M$M:cap$BuildCap"
-    edgesMemo.getOrElseUpdate(s, key,
-      IndexStore.frame(s, "nsw_edges", key)(edges(s, dir)))
+    IndexStore.frame(s, "nsw_edges", key)(edges(s, dir))
   }
 
   /** Cold-build entry for the bench's `build_nsw_graph` row: edge
-    * list + medoid entry points (both memoized; the checkpoint is
+    * list + medoid entry points (both session handles; the build is
     * eager so returning means built). */
   def buildGraph(s: SparkSession, dir: String): Unit = {
     edgesCached(s, dir); medoidEntries(s, dir); ()

@@ -34,9 +34,9 @@ object LinkageOps {
 
   /** Scored candidate pairs (c_key, d_key, lev) from the blocking
     * join — shared by the per-kind quality panel and the entity
-    * clustering pass, served through a session memo (the suffix/
-    * dedup-chain discipline) so the two consumers pay the blocking
-    * join + Levenshtein scoring once per corpus. */
+    * clustering pass, served through a session result memo so the
+    * two consumers pay the blocking join + Levenshtein scoring once
+    * per corpus. */
   private val candMemo = new Memo[org.apache.spark.sql.DataFrame]()
 
   private[operators] def scoredCandidates(

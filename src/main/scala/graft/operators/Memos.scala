@@ -2,23 +2,22 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-scoped build memos (suffix order, NSW edges, span lists):
-  * bounded, insertion-order-evicting, and keyed by a REAL session
-  * identity instead of `System.identityHashCode` (whose value can be
-  * reused by a new session after the old one is GC'd — a stale-hit
-  * hazard however theoretical).
+/** Session-scoped memos: bounded, insertion-order-evicting, and keyed
+  * by a REAL session identity instead of `System.identityHashCode`
+  * (whose value can be reused by a new session after the old one is
+  * GC'd — a stale-hit hazard however theoretical). Used for result
+  * and count memos and under [[IndexStore.open]]'s index handles.
   *
   * Identity: `applicationId : per-session UUID`, where the UUID is
   * issued once per live `SparkSession` through a weak-keyed map — a
   * collected session can never bequeath its id to a successor, and
   * the map itself holds no session alive.
   *
-  * Eviction: past [[Memo.Cap]] corpora the eldest entry is dropped.
-  * The evicted frames are localCheckpointed blocks; dropping the last
-  * reference hands them to Spark's ContextCleaner, which unpersists
-  * the backing RDD blocks on GC — so a long-lived session cycling
-  * through many corpora is bounded by Cap live indexes, not by its
-  * uptime. */
+  * Eviction: past [[Memo.Cap]] keys the eldest entry is dropped;
+  * dropping the last reference to a checkpointed frame hands its
+  * blocks to Spark's ContextCleaner, which unpersists them on GC — so
+  * a long-lived session cycling through many corpora is bounded by
+  * Cap live entries, not by its uptime. */
 object Memos {
   private val ids = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, String]())
@@ -78,8 +77,8 @@ final class Memo[V](cap: Int = Memo.Cap) {
 }
 
 object Memo {
-  /** Live indexes kept per memo — enough for every sf corpus a test
-    * JVM cycles through, small enough that a production session
-    * cannot pin unbounded checkpoint blocks. */
+  /** Entries kept per memo (index handles: per index name) — enough
+    * for every sf corpus a test JVM cycles through, small enough that
+    * a production session cannot pin unbounded checkpoint blocks. */
   val Cap = 8
 }

@@ -412,17 +412,17 @@ object StreamQueries {
     * in the source's (name, size, mtime) fingerprint (r9 advice: a
     * path-only key served STALE vectors to the ingest faces after a
     * corpus was regenerated in place, while the oracle read the fresh
-    * file). [[IndexStore.commit]] gives it the one commit protocol:
+    * file). [[IndexStore.open]] gives it the one commit protocol:
     * a second builder writes its own attempt instead of overwriting
     * files under a running stream, and old stages fall under
     * retention. The file source reads `<attempt>/data` only. */
   private def stagedVectorsDir(s: SparkSession, sfDir: String): String =
-    IndexStore.commit("vec_arrivals",
+    IndexStore.open(s, "vec_arrivals",
         sfDir + graft.mr.Fs.fingerprint(sfDir + "/embeddings.parquet")) { dir =>
       Tables.embeddings(s, sfDir).where(col("vec_id") % 10 === 0)
         .select(col("vec_id"), col("embedding"), col("label"))
         .write.parquet(dir + "/data")
-    } + "/data"
+    }(_ + "/data")
 
   /** Streaming decontamination admission gate, driver-gated (r10 —
     * the last spec-only streaming face with a pure-data contract):

@@ -91,32 +91,23 @@ object SuffixOps {
       .agg(max($"lcp").as("m"))
   }
 
-  /** Session-scoped memo of the suffix machinery per corpus
-    * fingerprint: `dedup_exact_substr` and `text_decontaminate_spans`
-    * consume the SAME suffix order + adjacent LCPs of the same
-    * corpus — building it twice per run doubles the dominant cost.
-    * Keyed by (session, corpus file fingerprint) like the persisted
-    * ANN/dedup indexes, so a regenerated corpus can never serve
-    * stale frames; the cached frames are localCheckpointed, i.e.
-    * valid exactly as long as their session. */
-  private val lcpMemo = new Memo[(DataFrame, DataFrame)]()
-
+  /** The suffix machinery per corpus file fingerprint, an
+    * [[IndexStore]] handle: `dedup_exact_substr` and
+    * `text_decontaminate_spans` consume the SAME suffix order +
+    * adjacent LCPs — building it twice per run doubles the dominant
+    * cost, and a new JVM reads the parquet instead of re-paying the
+    * O(log maxDocLen) build rounds. */
   private def adjacentLcpsCached(
       s: org.apache.spark.sql.SparkSession, dir: String): (DataFrame, DataFrame) = {
     val key = dir + graft.mr.Fs.fingerprint(dir + "/documents.parquet")
-    lcpMemo.getOrElseUpdate(s, key, {
-      // disk layer under the session memo (r10 verdict #1): a new
-      // JVM over the same corpus reads the persisted order + LCPs
-      // instead of re-paying the O(log maxDocLen) build rounds
-      val Seq(ord, lcps) = IndexStore.frames(
-        s, "suffix_lcp", key, Seq("ord", "lcps")) {
-        import s.implicits._
-        val (o, l) = adjacentLcps(Tables.documents(s, dir)
-          .select($"doc_id", normTokens($"text").as("tk")))
-        Seq(o, l)
-      }
-      (ord, lcps)
-    })
+    val Seq(ord, lcps) = IndexStore.frames(
+      s, "suffix_lcp", key, Seq("ord", "lcps")) {
+      import s.implicits._
+      val (o, l) = adjacentLcps(Tables.documents(s, dir)
+        .select($"doc_id", normTokens($"text").as("tk")))
+      Seq(o, l)
+    }
+    (ord, lcps)
   }
 
   /** Shared suffix machinery: returns (ord, lcps) where
@@ -132,8 +123,8 @@ object SuffixOps {
     // mutated session-global shuffle conf with try/finally restore —
     // not thread-safe under concurrent queries on one session); at
     // 100 TB a cluster passes a wider width, the ROUND COUNT stays
-    // log(maxDocLen). This is the PRODUCTION path (the memoized
-    // builders route here), not just the spec one.
+    // log(maxDocLen). This is the PRODUCTION path (the persisted
+    // index handles route here), not just the spec one.
     val np = math.max(
       8, s.conf.get("spark.sql.shuffle.partitions", "32").toInt / 4)
     adjacentLcpsRounds(docTk, np)
@@ -529,7 +520,7 @@ object SuffixOps {
     * normalized token stream (the unit the tokenizer consumes; Lee
     * et al. remove, not just report). Every train doc comes out —
     * uncontaminated ones whole — with exact removal accounting.
-    * Shape: the memoized span list (bounded: spans ≪ positions)
+    * Shape: the persisted span list (bounded: spans ≪ positions)
     * anti-joins the exploded positions; kept tokens fold back per
     * doc (array_sort on (pos, tok) structs keeps the rebuild
     * deterministic under any aggregation order). */
@@ -614,17 +605,14 @@ object SuffixOps {
     rollupSpans(contamSpanList(ordLcps),
       "contaminated", "max_contam_len", "contam_frac")
 
-  private val spanMemo = new Memo[DataFrame]()
-
-  /** Span list per corpus, memoized like [[adjacentLcpsCached]] —
+  /** Span list per corpus, a handle like [[adjacentLcpsCached]] —
     * the accounting and cutting queries share one scan run. */
   private def contamSpanListCached(
       s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val key = dir + graft.mr.Fs.fingerprint(dir + "/documents.parquet") +
       s":minlen$ContamMinLen"
-    spanMemo.getOrElseUpdate(s, key,
-      IndexStore.frame(s, "contam_spans", key)(
-        contamSpanList(adjacentLcpsCached(s, dir))))
+    IndexStore.frame(s, "contam_spans", key)(
+      contamSpanList(adjacentLcpsCached(s, dir)))
   }
 
   /** Maximal contamination spans per train doc:
@@ -661,7 +649,7 @@ object SuffixOps {
   }
 
   /** Cold-build entry points for the bench's `build_*` rows: force
-    * the memoized index construction (the checkpointed rounds are
+    * the persisted index construction (the checkpointed rounds are
     * eager, so returning from these means the frames are
     * materialized). Without these the construction cost amortizes
     * invisibly into whichever consumer query runs first, and the
@@ -709,8 +697,8 @@ object SuffixOps {
   /** The journey suffix build is eager (checkpointed rounds), so the
     * memo returns the SAME planned frame whose dependencies are
     * already materialized — a re-serve costs the final fold only
-    * (the lcpMemo discipline, result-level because this corpus has
-    * a single consumer). */
+    * (a result memo, not an index handle: this corpus has a single
+    * consumer). */
   /** Per-user sequence bound: bot/scripted users — exactly this
     * query's target population — are the one cohort whose event count
     * is unbounded at 100 TB, and an unbounded `collect_list` row is

@@ -13,11 +13,11 @@ class FsIndexSpec extends SparkTestBase {
     // Hadoop FileSystem or a DataFrame reader/writer, never
     // java.io.File.
     val uri = "file://" + sfDir
-    val base = AnnOps.IvfIndex.ensure(spark, uri)
+    val base = AnnOps.IvfIndex.open(spark, uri).dir
     assert(Fs.exists(base + "/_READY"))
-    val cents = AnnOps.IvfIndex.centroids(spark, base)
+    val cents = AnnOps.IvfIndex.open(spark, uri).cents
     assert(cents.nonEmpty && cents.forall(_._2.nonEmpty))
     // second ensure is a no-op serve from the marker-gated cache
-    assert(AnnOps.IvfIndex.ensure(spark, uri) == base)
+    assert(AnnOps.IvfIndex.open(spark, uri).dir == base)
   }
 }

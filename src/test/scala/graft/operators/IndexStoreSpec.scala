@@ -30,18 +30,20 @@ class IndexStoreSpec extends SparkTestBase {
     freshRoot()
     try {
       var builds = 0
-      def load() = IndexStore.frames(spark, "spec_a", "corpusX:dial1",
-        Seq("one", "two")) {
-        builds += 1
-        Seq(spark.range(5).toDF("a"), spark.range(3).toDF("b"))
-      }
+      def load(ss: org.apache.spark.sql.SparkSession = spark) =
+        IndexStore.frames(ss, "spec_a", "corpusX:dial1", Seq("one", "two")) {
+          builds += 1
+          Seq(spark.range(5).toDF("a"), spark.range(3).toDF("b"))
+        }
       val first = load()
       assert(builds == 1)
-      val again = load()
+      val again = load(spark.newSession())
       assert(builds == 1, "second call must read the persisted parquet")
       assert(again.head.collect().map(_.getLong(0)).sorted
         .sameElements(first.head.collect().map(_.getLong(0)).sorted))
       assert(again(1).count() == 3)
+      load()
+      assert(builds == 1, "the original session must not rebuild")
     } finally graft.mr.Fs.overrideIndexRoot = None
   }
 
@@ -49,8 +51,9 @@ class IndexStoreSpec extends SparkTestBase {
     val rootDir = freshRoot()
     try {
       var builds = 0
-      def load(key: String) = IndexStore.frames(spark, "spec_b", key,
-        Seq("d")) { builds += 1; Seq(spark.range(4).toDF("x")) }
+      def load(key: String, ss: org.apache.spark.sql.SparkSession = spark) =
+        IndexStore.frames(ss, "spec_b", key,
+          Seq("d")) { builds += 1; Seq(spark.range(4).toDF("x")) }
       (1 to IndexStore.Retain + 2).foreach { i =>
         load(s"fp$i") // regenerated corpus / re-dialed geometry
         unpin("spec_b") // cold: as if built by an earlier, finished JVM
@@ -66,8 +69,10 @@ class IndexStoreSpec extends SparkTestBase {
       assert(roots().length == IndexStore.Retain,
         s"retain cap, got ${roots().map(_.getName).toSeq}")
       // the newest key is among the survivors: a reload costs no build
-      load(s"fp${IndexStore.Retain + 2}")
+      load(s"fp${IndexStore.Retain + 2}", spark.newSession())
       assert(builds == IndexStore.Retain + 2)
+      load(s"fp${IndexStore.Retain + 2}")
+      assert(builds == IndexStore.Retain + 2, "the original session must not rebuild")
     } finally graft.mr.Fs.overrideIndexRoot = None
   }
 
@@ -75,8 +80,9 @@ class IndexStoreSpec extends SparkTestBase {
     val rootDir = freshRoot()
     try {
       var builds = 0
-      def load() = IndexStore.frames(spark, "spec_c", "k",
-        Seq("d")) { builds += 1; Seq(spark.range(2).toDF("x")) }
+      def load(ss: org.apache.spark.sql.SparkSession = spark) =
+        IndexStore.frames(ss, "spec_c", "k",
+          Seq("d")) { builds += 1; Seq(spark.range(2).toDF("x")) }
       load()
       assert(builds == 1)
       // simulate a watchdog kill between the attempt write and the
@@ -84,7 +90,7 @@ class IndexStoreSpec extends SparkTestBase {
       new java.io.File(rootDir).listFiles()
         .filter(_.getName.contains("spec_c"))
         .foreach(r => new java.io.File(r, "_PTR").delete())
-      val rows = load().head.count()
+      val rows = load(spark.newSession()).head.count()
       assert(builds == 2, "missing pointer must force a rebuild")
       assert(rows == 2)
       // and a pointer naming an attempt whose _READY is gone (partial
@@ -93,8 +99,10 @@ class IndexStoreSpec extends SparkTestBase {
         .filter(_.getName.contains("spec_c"))
         .flatMap(_.listFiles()).filter(_.isDirectory)
         .foreach(a => new java.io.File(a, "_READY").delete())
-      assert(load().head.count() == 2)
+      assert(load(spark.newSession()).head.count() == 2)
       assert(builds == 3, "pointer to an unready attempt must rebuild")
+      load()
+      assert(builds == 3, "the original session must not rebuild")
     } finally graft.mr.Fs.overrideIndexRoot = None
   }
 
@@ -142,8 +150,8 @@ class IndexStoreSpec extends SparkTestBase {
     freshRoot()
     try {
       val isNewId = (c: org.apache.spark.sql.Column) => c % 5 === 4
-      val ivf = AnnOps.IvfIndex.ensure(spark, sfDir)
-      val inc = DedupOps.IncrementalIndex.ensure(spark, sfDir, 0.5, isNewId)
+      val ivf = AnnOps.IvfIndex.open(spark, sfDir).dir
+      val inc = DedupOps.IncrementalIndex.open(spark, sfDir, 0.5, isNewId)
       // lazy parquet frames a session keeps (the file listing is fixed
       // when the frame is made)
       val vecs = spark.read.parquet(s"$ivf/vecs")
@@ -156,9 +164,13 @@ class IndexStoreSpec extends SparkTestBase {
           new org.apache.hadoop.fs.Path(a).getParent + "/_PTR")
         assert(fs.delete(p, false))
       }
-      val ivf2 = AnnOps.IvfIndex.ensure(spark, sfDir)
-      val inc2 = DedupOps.IncrementalIndex.ensure(spark, sfDir, 0.5, isNewId)
+      val other = spark.newSession()
+      val ivf2 = AnnOps.IvfIndex.open(other, sfDir).dir
+      val inc2 = DedupOps.IncrementalIndex.open(other, sfDir, 0.5, isNewId)
       assert(ivf2 != ivf && inc2 != inc, "a missing pointer must rebuild")
+      assert(AnnOps.IvfIndex.open(spark, sfDir).dir == ivf &&
+        DedupOps.IncrementalIndex.open(spark, sfDir, 0.5, isNewId) == inc,
+        "the original session must not rebuild")
       assert(rootName(ivf2) == rootName(ivf) && rootName(inc2) == rootName(inc))
       assert(vecs.collect().length == nVecs, "held IVF vecs frame stopped reading")
       assert(sh.collect().length == nSh, "held dedup sh frame stopped reading")
@@ -178,7 +190,7 @@ class IndexStoreSpec extends SparkTestBase {
         IndexStore.liveRoots.remove(rootName(a))
         Thread.sleep(20) // distinct mtimes for the retention order
       }
-      val idx = AnnOps.IvfIndex.ensure(spark, sfDir)
+      val idx = AnnOps.IvfIndex.open(spark, sfDir).dir
       val roots = new java.io.File(rootDir).listFiles()
         .map(_.getName).filter(_.startsWith("graft-bidx-v2-ivf-"))
       assert(roots.length == IndexStore.Retain, s"retain cap, got ${roots.toSeq}")
@@ -198,6 +210,108 @@ class IndexStoreSpec extends SparkTestBase {
       val left = new java.io.File(rootDir).listFiles().map(_.getName).toSet
       assert(retired.forall(n => !left.contains(n)), s"retired roots left: $left")
       assert(kept.forall(left.contains), s"sweep removed a live root: $left")
+    } finally graft.mr.Fs.overrideIndexRoot = None
+  }
+
+  private def writeOne(d: String): Unit =
+    spark.range(3).toDF("x").write.parquet(s"$d/data")
+
+  private def withPool[T](body: scala.concurrent.ExecutionContext => T): T = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try body(scala.concurrent.ExecutionContext.fromExecutor(pool))
+    finally pool.shutdownNow()
+  }
+
+  test("concurrent opens of one key in one session run write and load once") {
+    freshRoot()
+    try withPool { implicit ec =>
+      import scala.concurrent._, duration._
+      val writes = new java.util.concurrent.atomic.AtomicInteger(0)
+      val loads = new java.util.concurrent.atomic.AtomicInteger(0)
+      val opens = (1 to 4).map(_ => Future(
+        IndexStore.open(spark, "spec_once", "k") { d =>
+          writes.incrementAndGet()
+          Thread.sleep(300) // the other opens arrive mid-build
+          writeOne(d)
+        } { a => loads.incrementAndGet(); a }))
+      val got = opens.map(Await.result(_, 60.seconds))
+      assert(got.distinct.size == 1, s"opens served different attempts: $got")
+      assert(writes.get == 1, s"write ran ${writes.get} times")
+      assert(loads.get == 1, s"load ran ${loads.get} times")
+    } finally graft.mr.Fs.overrideIndexRoot = None
+  }
+
+  test("two keys build in parallel: no JVM-wide lock around a build") {
+    freshRoot()
+    try withPool { implicit ec =>
+      import scala.concurrent._, duration._
+      // A's build cannot finish until B's build has STARTED — a lock
+      // held across builds would time A out
+      val bStarted = new java.util.concurrent.CountDownLatch(1)
+      val fa = Future(IndexStore.open(spark, "spec_par", "A") { d =>
+        assert(bStarted.await(30, java.util.concurrent.TimeUnit.SECONDS),
+          "key B's build never started while A was building")
+        writeOne(d)
+      }(identity))
+      val fb = Future(IndexStore.open(spark, "spec_par", "B") { d =>
+        bStarted.countDown(); writeOne(d)
+      }(identity))
+      assert(Await.result(fa, 60.seconds) != Await.result(fb, 60.seconds))
+    } finally graft.mr.Fs.overrideIndexRoot = None
+  }
+
+  test("a changed index root gives a new handle") {
+    try {
+      var builds = 0
+      def open() = IndexStore.open(spark, "spec_root", "k") { d =>
+        builds += 1; writeOne(d)
+      }(identity)
+      val r1 = freshRoot()
+      val a1 = open()
+      val r2 = freshRoot()
+      val a2 = open()
+      assert(a1.startsWith(r1) && a2.startsWith(r2), s"$a1 / $a2")
+      assert(builds == 2, "a handle of another root was served")
+      graft.mr.Fs.overrideIndexRoot = Some(r1)
+      assert(open() == a1 && builds == 2)
+    } finally graft.mr.Fs.overrideIndexRoot = None
+  }
+
+  test("a new session resolves the pointer from disk again") {
+    freshRoot()
+    try {
+      def open(ss: org.apache.spark.sql.SparkSession) =
+        IndexStore.open(ss, "spec_sess", "k")(writeOne)(identity)
+      val first = open(spark)
+      // another JVM misses the pointer and commits a newer attempt
+      val (fs, p) = graft.mr.Fs.resolve(
+        new org.apache.hadoop.fs.Path(first).getParent + "/_PTR")
+      assert(fs.delete(p, false))
+      val newer = IndexStore.commit("spec_sess", "k")(writeOne)
+      assert(newer != first)
+      assert(open(spark) == first, "a live handle re-resolved the pointer")
+      assert(open(spark.newSession()) == newer,
+        "a new session served the old session's handle")
+    } finally graft.mr.Fs.overrideIndexRoot = None
+  }
+
+  test("a failed build removes its attempt dir; the next open builds and serves") {
+    val rootDir = freshRoot()
+    try {
+      val err = intercept[RuntimeException](
+        IndexStore.open(spark, "spec_fail", "k") { d =>
+          writeOne(d)
+          sys.error("injected build failure")
+        }(identity))
+      assert(err.getMessage.contains("injected"))
+      val bases = new java.io.File(rootDir).listFiles()
+        .filter(_.getName.contains("spec_fail"))
+      assert(bases.length == 1)
+      val left = bases.head.list().toSeq
+      assert(left.isEmpty, s"failed build left $left")
+      val rows = IndexStore.open(spark, "spec_fail", "k")(writeOne)(a =>
+        spark.read.parquet(s"$a/data").count())
+      assert(rows == 3)
     } finally graft.mr.Fs.overrideIndexRoot = None
   }
 }

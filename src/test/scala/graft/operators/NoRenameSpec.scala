@@ -71,7 +71,7 @@ class NoRenameSpec extends SparkTestBase {
     withNoRenameFs { root =>
       Fs.overrideIndexRoot = Some(root)
       try {
-        val base = AnnOps.IvfIndex.ensure(spark, sfDir)
+        val base = AnnOps.IvfIndex.open(spark, sfDir).dir
         assert(base.startsWith(root), s"index not routed: $base")
         assert(Fs.exists(base + "/_READY"))
         // parquet data + marker written; every recorded rename is a
@@ -83,7 +83,7 @@ class NoRenameSpec extends SparkTestBase {
           s"data-path rename outside the commit protocol: ${commitOnly()}")
         // marker-gated reuse performs NO further writes or renames
         NoRenameFileSystem.renames.clear()
-        AnnOps.IvfIndex.ensure(spark, sfDir)
+        AnnOps.IvfIndex.open(spark, sfDir)
         assert(NoRenameFileSystem.renames.isEmpty)
       } finally Fs.overrideIndexRoot = None
     }

@@ -74,7 +74,7 @@ class ObjectStoreSpec extends SparkTestBase {
     withStore { root =>
       Fs.overrideIndexRoot = Some(root)
       try {
-        val base = AnnOps.IvfIndex.ensure(spark, sfDir)
+        val base = AnnOps.IvfIndex.open(spark, sfDir).dir
         assert(base.startsWith(root), s"index not routed through the store: $base")
         assert(Fs.exists(base + "/_READY"))
         val cent = spark.read.parquet(base + "/cent")
@@ -82,7 +82,7 @@ class ObjectStoreSpec extends SparkTestBase {
         assert(cent.count() > 0 && vecs.count() > 0)
         // marker-gated reuse: second ensure performs no further writes
         val before = ObjectStore.objects.size()
-        assert(AnnOps.IvfIndex.ensure(spark, sfDir) == base)
+        assert(AnnOps.IvfIndex.open(spark, sfDir).dir == base)
         assert(ObjectStore.objects.size() == before,
           "reuse path wrote objects despite the _READY marker")
       } finally Fs.overrideIndexRoot = None
