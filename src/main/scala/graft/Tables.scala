@@ -50,5 +50,10 @@ object Tables {
     normalizeTs(load(s, d, "events"))
   }
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
-  def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
+  /** Read with the TESTDATA.md schema, so a request that reads the
+    * corpus (the ANN serve paths, several times each) starts no
+    * schema-inference job. */
+  def embeddings(s: SparkSession, d: String): DataFrame =
+    s.read.schema("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
+      .parquet(s"$d/embeddings.parquet")
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Cols._
 import graft.functions.Hashes._
-import graft.functions.VectorExpressions.cosine_sim
+import graft.functions.VectorExpressions.{cell_argmax, cosine_sim}
 
 /** Approximate-nearest-neighbor search over the embeddings table
   * (SURVEY.md §2.D).
@@ -190,12 +190,16 @@ object AnnOps {
     if (n < HammingMinN) default
     else (2 * default._1, 32, 2 * default._3)
 
+  /** The corpus dir plus the (name, size, mtime) fingerprint of its
+    * embeddings: a regenerated corpus never keys stale state. */
+  private[operators] def corpusKey(dir: String): String =
+    dir + graft.mr.Fs.fingerprint(dir + "/embeddings.parquet")
+
   /** Corpus vector count, memoized per corpus fingerprint (one
     * metadata-cheap count job per corpus per session). */
   private val nVecsMemo = new Memo[java.lang.Long]()
   private[graft] def nVecs(s: SparkSession, dir: String): Long =
-    nVecsMemo.getOrElseUpdate(
-      s, dir + graft.mr.Fs.fingerprint(dir + "/embeddings.parquet"),
+    nVecsMemo.getOrElseUpdate(s, corpusKey(dir),
       java.lang.Long.valueOf(Tables.embeddings(s, dir).count())).longValue()
 
   /** The geometry the hyperplane-LSH serve/build paths USE for this
@@ -437,20 +441,23 @@ object AnnOps {
   }
 
   val PqSubspaces = 16  // 64 dims → 16 sub-vectors of 4 dims
+  /** PQ codebook, indexed (subspace)(code)(dim). */
+  type Codebook = Array[Array[Array[Double]]]
   val PqCodes = 16      // 4-bit codes: 16 × 4 bits = 8 bytes per vector
   val PqShortlist = 50  // ADC shortlist per probe, re-ranked exactly
 
-  /** Normalized double-array view of the embeddings: PQ quantizes the
-    * NORMALIZED vector — cosine ranking only cares about direction,
-    * so spending codebook resolution on magnitude wastes bits
-    * (visible on these random vectors: +0.2 recall@5). */
+  /** (vec_id, embedding, emb): the embeddings with their normalized
+    * double-array view `emb`. PQ quantizes the NORMALIZED vector —
+    * cosine ranking only cares about direction, so spending codebook
+    * resolution on magnitude wastes bits (visible on these random
+    * vectors: +0.2 recall@5). */
   private def normalizedEmb(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.embeddings(s, dir)
-      .select($"vec_id", asDouble($"embedding").as("raw"))
-      .select($"vec_id", $"raw", l2norm($"raw").as("nrm")) // materialize: the
-      // norm would otherwise inline (and re-run) per element below
-      .select($"vec_id", transform($"raw", x => x / $"nrm").as("emb"))
+      .select($"vec_id", $"embedding", asDouble($"embedding").as("raw"))
+      .select($"vec_id", $"embedding", $"raw", l2norm($"raw").as("nrm")) // materialize:
+      // the norm would otherwise inline (and re-run) per element below
+      .select($"vec_id", $"embedding", transform($"raw", x => x / $"nrm").as("emb"))
   }
 
   /** PQ encode: per-subspace L2 argmin against the codebook, as a
@@ -463,7 +470,7 @@ object AnnOps {
     * tight while-loop over primitive arrays is the same pattern as
     * [[graft.functions.Hashes.simhash64]] and runs the whole corpus
     * map-side in milliseconds. */
-  private def pqEncode(cb: Array[Array[Array[Double]]], subDim: Int) =
+  private def pqEncode(cb: Codebook, subDim: Int) =
     udf { (emb: Seq[Double]) =>
       val v = emb.toArray
       Array.tabulate(cb.length) { m =>
@@ -481,7 +488,7 @@ object AnnOps {
 
   /** PQ decode: codes → codebook reconstruction (the ADC scan reads
     * this map-side; nothing is shuffled). */
-  private def pqDecode(cb: Array[Array[Array[Double]]], subDim: Int) =
+  private def pqDecode(cb: Codebook, subDim: Int) =
     udf { (codes: Seq[Int]) =>
       val out = new Array[Double](cb.length * subDim)
       var m = 0
@@ -492,18 +499,6 @@ object AnnOps {
       out
     }
 
-  /** Per-corpus PQ codebooks, trained ONCE per JVM and memoized — a
-    * real deployment trains/refreshes the index offline and serves
-    * many queries from it, so the query-time cost is encode+scan, not
-    * training. Training itself is scale-shaped: it fits on a
-    * deterministic ~25% hash sample (a billion-vector corpus trains
-    * codebooks on a sliver), init spreads over the sample by hash
-    * order instead of r2's first-16-rows, and each of the 3 Lloyd
-    * rounds is one map-side argmin + one (sub, code, pos) agg of
-    * 16×16×4 keys — nothing corpus-sized reaches the driver. */
-  private val pqCodebooks =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
-
   /** FNV-1a of a column's string form — the sampling/ordering hash
     * for PQ training. FNV (not xxhash64) so the DuckDB oracle can
     * replay the sample selection and the spread init exactly (same
@@ -511,56 +506,55 @@ object AnnOps {
     * dispersion, not cryptographic strength. */
   private val fnvOf = udf((x: String) => graft.functions.Hashes.fnv64(x))
 
-  private def trainPq(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    trainPqOn(s, dir, () => normalizedEmb(s, dir))
-
-  /** Codebook training over an arbitrary (vec_id, emb) frame —
-    * [[annPqTopk]] trains on normalized vectors, the residual index
-    * trains on (vector − cell direction) residuals; the sampling,
-    * init, and Lloyd discipline are identical. */
-  private def trainPqOn(s: SparkSession, key: String,
-      vecsF: () => DataFrame): Array[Array[Array[Double]]] =
-    pqCodebooks.computeIfAbsent(key, _ => {
-      import s.implicits._
-      val subDim = 64 / PqSubspaces
-      val vecs = vecsF()
-      val quarter = vecs
-        .where(fnvOf($"vec_id".cast("string")).bitwiseAND(lit(3L)) === 0)
-      // tiny corpora (specs) train on everything; the sample path is
-      // the one that matters at scale
-      val sample =
-        Pin.corpus(if (quarter.count() >= PqCodes * 2L) quarter else vecs)
-      var cb: Array[Array[Array[Double]]] = sample
-        .orderBy(fnvOf(concat(lit("i"), $"vec_id".cast("string")))
-          .bitwiseAND(lit((1L << 20) - 1)), $"vec_id")
-        .limit(PqCodes)
-        .select($"emb").as[Seq[Double]].collect()
-        .map(v => (0 until PqSubspaces).map(m =>
-          v.slice(m * subDim, (m + 1) * subDim).toArray).toArray)
-        .transpose // (code)(sub)(dim) → (sub)(code)(dim)
-      for (_ <- 1 to 3) {
-        // one map-side encode + one (sub, code, pos) agg of 16×16×4
-        // keys per Lloyd round; generators can't share a select, so
-        // the two posexplodes chain through an intermediate projection.
-        // The mean is decimal-exact (like the IVF centroids): plain
-        // avg() would expose partial-aggregation float association
-        // and no second engine could reproduce the codebooks
-        val sums = sample
-          .select($"emb", posexplode(pqEncode(cb, subDim)($"emb")).as(Seq("sub", "code")))
-          .select($"sub", $"code",
-            posexplode(slice($"emb", $"sub" * subDim + 1, lit(subDim))).as(Seq("pos", "v")))
-          .groupBy($"sub", $"code", $"pos")
-          .agg((sum($"v".cast("decimal(27,10)")).cast("double") / count(lit(1))).as("m"))
-          .collect()
-        val next = Array.tabulate(PqSubspaces)(m => cb(m).map(_.clone()))
-        sums.foreach { r =>
-          next(r.getInt(0))(r.getInt(1))(r.getInt(2)) = r.getDouble(3)
-        }
-        cb = next
+  /** PQ codebook training over a (vec_id, emb) frame: [[Quantizer]]
+    * trains `pq` on the normalized vectors and `pq_residual` on the
+    * (vector − cell direction) residuals, once per corpus, so the
+    * query-time cost is encode+scan, not training. Scale-shaped: it
+    * fits on a deterministic ~25% hash sample (a billion-vector
+    * corpus trains codebooks on a sliver), init spreads over the
+    * sample by hash order instead of r2's first-16-rows, and each of
+    * the 3 Lloyd rounds is one map-side argmin + one (sub, code, pos)
+    * agg of 16×16×4 keys — nothing corpus-sized reaches the driver. */
+  private def trainPqOn(s: SparkSession, vecs: DataFrame): Codebook = {
+    import s.implicits._
+    val subDim = 64 / PqSubspaces
+    val quarter = vecs
+      .where(fnvOf($"vec_id".cast("string")).bitwiseAND(lit(3L)) === 0)
+    // tiny corpora (specs) train on everything; the sample path is
+    // the one that matters at scale
+    val sample =
+      Pin.corpus(if (quarter.count() >= PqCodes * 2L) quarter else vecs)
+    var cb: Codebook = sample
+      .orderBy(fnvOf(concat(lit("i"), $"vec_id".cast("string")))
+        .bitwiseAND(lit((1L << 20) - 1)), $"vec_id")
+      .limit(PqCodes)
+      .select($"emb").as[Seq[Double]].collect()
+      .map(v => (0 until PqSubspaces).map(m =>
+        v.slice(m * subDim, (m + 1) * subDim).toArray).toArray)
+      .transpose // (code)(sub)(dim) → (sub)(code)(dim)
+    for (_ <- 1 to 3) {
+      // one map-side encode + one (sub, code, pos) agg of 16×16×4
+      // keys per Lloyd round; generators can't share a select, so
+      // the two posexplodes chain through an intermediate projection.
+      // The mean is decimal-exact (like the IVF centroids): plain
+      // avg() would expose partial-aggregation float association
+      // and no second engine could reproduce the codebooks
+      val sums = sample
+        .select($"emb", posexplode(pqEncode(cb, subDim)($"emb")).as(Seq("sub", "code")))
+        .select($"sub", $"code",
+          posexplode(slice($"emb", $"sub" * subDim + 1, lit(subDim))).as(Seq("pos", "v")))
+        .groupBy($"sub", $"code", $"pos")
+        .agg((sum($"v".cast("decimal(27,10)")).cast("double") / count(lit(1))).as("m"))
+        .collect()
+      val next = Array.tabulate(PqSubspaces)(m => cb(m).map(_.clone()))
+      sums.foreach { r =>
+        next(r.getInt(0))(r.getInt(1))(r.getInt(2)) = r.getDouble(3)
       }
-      sample.unpersist()
-      cb
-    })
+      cb = next
+    }
+    sample.unpersist()
+    cb
+  }
 
   /** PQ top-k: product quantization — the corpus is stored as
     * `PqSubspaces` small codebook indices (4 bits each: 32× less
@@ -576,23 +570,30 @@ object AnnOps {
   val annPqTopk: QueryFn = (s, dir) => {
     import s.implicits._
     val subDim = 64 / PqSubspaces
-    val cb = trainPq(s, dir)
+    val cb = Quantizer.open(s, dir).pq
     val emb = normalizedEmb(s, dir)
 
     // encode (the 8-byte payload a real index persists), then
     // reconstruct + ADC-score asymmetrically — decode stays map-side
     val codes = emb.select($"vec_id", pqEncode(cb, subDim)($"emb").as("codes"))
     val recon = codes.select($"vec_id", pqDecode(cb, subDim)($"codes").as("emb_hat"))
-    val adc = recon
+    pqRerank(s, dir, recon
       .join(broadcast(probes(s, dir)), $"vec_id" =!= $"pid")
       .select($"pid", $"vec_id".as("nid"),
-        cosine_sim($"pe", $"emb_hat").as("sim"))
+        cosine_sim($"pe", $"emb_hat").as("sim")))
+  }
+
+  /** The PQ serve paths' second stage: the [[PqShortlist]] best ADC
+    * candidates (pid, nid, sim) per probe through the native
+    * TopKPerKey, then the exact re-rank of that tiny shortlist
+    * (probes × PqShortlist rows) against the full-precision vectors. */
+  private def pqRerank(s: SparkSession, dir: String, adc: DataFrame): DataFrame = {
+    import s.implicits._
     val shortlist = graft.plans.TopK.perKey(
       adc.withColumn("sim_r", rnd($"sim", 6)),
       keyCols = Seq("pid"),
       orderCols = Seq("sim_r" -> false, "nid" -> true),
       k = PqShortlist).select($"pid", $"nid")
-    // exact re-rank of the tiny shortlist (probes × PqShortlist rows)
     val rerank = shortlist
       .join(Tables.embeddings(s, dir).select($"vec_id".as("nid"), $"embedding".as("ne")), "nid")
       .join(broadcast(probes(s, dir)), "pid")
@@ -615,7 +616,7 @@ object AnnOps {
   val embPqDistortion: QueryFn = (s, dir) => {
     import s.implicits._
     val subDim = 64 / PqSubspaces
-    val cb = trainPq(s, dir)
+    val cb = Quantizer.open(s, dir).pq
     val codes = normalizedEmb(s, dir)
       .select($"vec_id", pqEncode(cb, subDim)($"emb").as("codes"))
     val recon = codes.select($"vec_id", pqDecode(cb, subDim)($"codes").as("hat"))
@@ -634,15 +635,6 @@ object AnnOps {
 
   val IvfProbeCells = 6
 
-  /** IVF top-k: coarse quantizer = per-label centroids (a single agg —
-    * at real scale, a k-means fit on a sample); the centroid set is
-    * tiny by construction, so it is collected and embedded as a
-    * LITERAL array and every vector's nearest-cell assignment is a
-    * map-side argmax inside one projection — zero Exchange between the
-    * corpus scan and the cell key (r1 used crossJoin + a window
-    * partitioned by vec_id, which shuffled the whole corpus × cells;
-    * PlanAudit asserts the shuffle-free shape now). Probes pick their
-    * `IvfProbeCells` nearest cells the same map-side way. */
   /** Coarse-quantizer (cell, centroid) rows of `vecs`: per-label
     * elementwise mean, decimal-exact (per-element float→double is
     * bit-identical across engines and decimal accumulation is
@@ -659,55 +651,98 @@ object AnnOps {
       .select(col("label").cast("int").as("cell"),
         transform(col("pm"), p => p.getField("m")).as("centroid"))
 
-  private def collectCentroids(rows: DataFrame): Seq[(Int, Seq[Double])] =
-    rows.collect().toSeq.map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
-
-  private[operators] def ivfCentroids(s: SparkSession, dir: String): Seq[(Int, Seq[Double])] =
-    collectCentroids(centroidRows(Tables.embeddings(s, dir)))
+  /** The persisted `cent` part of an index attempt, by cell. */
+  private def readCentroids(s: SparkSession, idx: String): Seq[(Int, Seq[Double])] =
+    s.read.parquet(s"$idx/cent").collect().toSeq
+      .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
 
   /** Per-cell (sim, cell) structs for one embedding column. Always
     * materialize the result in its own select before any multi-use
     * consumer (the r1 inlining trap). */
-  private[operators] def cellScores(cellsLit: org.apache.spark.sql.Column)(
-      embCol: org.apache.spark.sql.Column) =
+  private def cellScores(cellsLit: Column)(embCol: Column) =
     transform(cellsLit, c => struct(
       rnd(cosine_sim(embCol, c.getField("_2")), 6).as("sim"),
       c.getField("_1").as("cell")))
 
-  /** Native argmax-cell for the CORPUS-scale assignment scans (r13,
-    * guide §1.2 "per-task work" — the
-    * [[graft.functions.MinHashSigExpr]] precedent): a declarative
-    * [[cellScores]] + aggregate fold evaluates interpreted
-    * (higher-order functions never enter whole-stage codegen), so
-    * every corpus row would pay |cells| interpreted expression trees
-    * plus struct-array allocation. The
-    * [[graft.functions.CellArgmax]] expression computes per-cell
-    * cosine in [[cosine_sim]]'s exact left-to-right double
-    * accumulation, the same floor(x·10⁶ + 0.5)/10⁶ rounding as
-    * [[cellScores]], argmax by (sim desc, cell asc) under Spark's SQL
-    * double ordering — in one codegen loop, with no array cast or
-    * boxing (floats read in place). The tiny PROBE-side top-nprobe
-    * sort ([[probeCellsOf]]) keeps [[cellScores]]: it runs on
-    * [[NumProbes]] rows, not the corpus. Bit-equality is re-proven by
-    * the sf0.001/sf0.01 oracle gate on every IVF-family row. */
-  private[operators] def cellAssignUdf(cents: Seq[(Int, Seq[Double])]) =
-    (emb: Column) => graft.functions.VectorExpressions.cell_argmax(emb, cents)
+  /** A coarse quantizer's centroids, embedded as LITERALS, and the
+    * map-side routing every IVF path does with them: a vector's
+    * nearest cell is an argmax inside one projection — zero Exchange
+    * between the corpus scan and the cell key (r1 used crossJoin + a
+    * window partitioned by vec_id, which shuffled the whole corpus ×
+    * cells; PlanAudit asserts the shuffle-free shape now). Shared by
+    * the full-corpus [[Quantizer]] and the base-corpus [[IvfIndex]]. */
+  private[operators] sealed trait Cells {
+    def cents: Seq[(Int, Seq[Double])]
 
-  /** Probes exploded to their top `nprobe` cells (sort the tiny
-    * scored array per row, slice, explode) — map-side. */
-  private def probeCellsOf(s: SparkSession, dir: String,
-      cellsLit: org.apache.spark.sql.Column,
-      nprobe: Int = IvfProbeCells): DataFrame = {
-    import s.implicits._
-    probes(s, dir)
-      .select($"pid", $"pe", cellScores(cellsLit)($"pe").as("scored"))
-      .select($"pid", $"pe", explode(slice(array_sort($"scored",
-        (l, r) => when(l.getField("sim") > r.getField("sim"), -1)
-          .when(l.getField("sim") < r.getField("sim"), 1)
-          .when(l.getField("cell") < r.getField("cell"), -1)
-          .when(l.getField("cell") > r.getField("cell"), 1)
-          .otherwise(0)), 1, nprobe)).as("sc"))
-      .select($"pid", $"pe", $"sc.cell".as("cell"))
+    /** Native argmax-cell for the CORPUS-scale assignment scans (r13,
+      * guide §1.2 "per-task work" — the
+      * [[graft.functions.MinHashSigExpr]] precedent): a declarative
+      * [[cellScores]] + aggregate fold evaluates interpreted
+      * (higher-order functions never enter whole-stage codegen), so
+      * every corpus row would pay |cells| interpreted expression trees
+      * plus struct-array allocation. The
+      * [[graft.functions.CellArgmax]] expression computes per-cell
+      * cosine in [[cosine_sim]]'s exact left-to-right double
+      * accumulation, the same floor(x·10⁶ + 0.5)/10⁶ rounding as
+      * [[cellScores]], argmax by (sim desc, cell asc) under Spark's SQL
+      * double ordering — in one codegen loop, with no array cast or
+      * boxing (floats read in place). The tiny PROBE-side top-nprobe
+      * sort ([[probeCells]]) keeps [[cellScores]]: it runs on
+      * [[NumProbes]] rows, not the corpus. Bit-equality is re-proven by
+      * the sf0.001/sf0.01 oracle gate on every IVF-family row. */
+    def assign(emb: Column): Column = cell_argmax(emb, cents)
+
+    /** Probes exploded to their top `nprobe` cells (sort the tiny
+      * scored array per row, slice, explode) — map-side. */
+    def probeCells(s: SparkSession, dir: String,
+        nprobe: Int = IvfProbeCells): DataFrame = {
+      import s.implicits._
+      probes(s, dir)
+        .select($"pid", $"pe", cellScores(typedLit(cents))($"pe").as("scored"))
+        .select($"pid", $"pe", explode(slice(array_sort($"scored",
+          (l, r) => when(l.getField("sim") > r.getField("sim"), -1)
+            .when(l.getField("sim") < r.getField("sim"), 1)
+            .when(l.getField("cell") < r.getField("cell"), -1)
+            .when(l.getField("cell") > r.getField("cell"), 1)
+            .otherwise(0)), 1, nprobe)).as("sc"))
+        .select($"pid", $"pe", $"sc.cell".as("cell"))
+    }
+  }
+
+  /** The trained quantizer of one corpus: the full-corpus centroids
+    * (`cent`) and two [[trainPqOn]] codebooks, `pq` over the
+    * normalized vectors and `pq_residual` over [[residuals]]. One
+    * build commits the three parts to one [[IndexStore]] attempt
+    * keyed like [[IvfIndex]] by the corpus fingerprint; each session
+    * collects them once. Every IVF serve path, the flat PQ paths and
+    * the NSW medoid entries read centroids and codebooks only from
+    * here, so a warm request trains nothing (Faiss-style IVF: train
+    * once, then add and search). Parquet keeps doubles exactly. */
+  private[operators] final case class Quantizer(cents: Seq[(Int, Seq[Double])],
+      pq: Codebook, pqResidual: Codebook) extends Cells
+
+  private[operators] object Quantizer {
+    val Name = "quantizer"
+    private val Version = "v1"
+
+    def key(dir: String): String = Version + ":" + corpusKey(dir)
+
+    def open(s: SparkSession, dir: String): Quantizer = {
+      import s.implicits._
+      IndexStore.open(s, Name, key(dir)) { out =>
+        centroidRows(Tables.embeddings(s, dir)).write.parquet(s"$out/cent")
+        val cents = readCentroids(s, out)
+        Seq("pq" -> normalizedEmb(s, dir), "pq_residual" -> residuals(s, dir, cents))
+          .foreach { case (part, vecs) =>
+            val cb = trainPqOn(s, vecs.select($"vec_id", $"emb"))
+            Seq(cb.map(_.map(_.toSeq).toSeq).toSeq).toDF("cb").write.parquet(s"$out/$part")
+          }
+      } { a =>
+        def cb(part: String): Codebook = s.read.parquet(s"$a/$part")
+          .as[Seq[Seq[Seq[Double]]]].head().map(_.map(_.toArray).toArray).toArray
+        Quantizer(readCentroids(s, a), cb("pq"), cb("pq_residual"))
+      }
+    }
   }
 
   /** The IVF serve path at a caller-chosen probe width — the
@@ -721,12 +756,10 @@ object AnnOps {
     * shared by the top-k serve path and [[annRecallPanel]]. */
   private def ivfCandidates(s: SparkSession, dir: String, nprobe: Int): DataFrame = {
     import s.implicits._
-    val cells = ivfCentroids(s, dir)
-    val cellsLit = typedLit(cells)
+    val q = Quantizer.open(s, dir)
     val assigned = Tables.embeddings(s, dir)
-      .select($"vec_id", $"embedding",
-        cellAssignUdf(cells)($"embedding").as("cell"))
-    probeCellsOf(s, dir, cellsLit, nprobe).join(assigned, Seq("cell"))
+      .select($"vec_id", $"embedding", q.assign($"embedding").as("cell"))
+    q.probeCells(s, dir, nprobe).join(assigned, Seq("cell"))
       .where($"vec_id" =!= $"pid")
       .select($"pid", $"vec_id".as("nid"), cosine_sim($"pe", $"embedding").as("sim"))
   }
@@ -809,32 +842,16 @@ object AnnOps {
   val annIvfPqTopk: QueryFn = (s, dir) => {
     import s.implicits._
     val subDim = 64 / PqSubspaces
-    val cells = ivfCentroids(s, dir)
-    val cellsLit = typedLit(cells)
-    val cb = trainPq(s, dir)
+    val q = Quantizer.open(s, dir)
     // one map-side pass: cell assignment + PQ encode + ADC decode
-    val corpus = Tables.embeddings(s, dir)
-      .select($"vec_id", $"embedding", asDouble($"embedding").as("raw"))
-      .select($"vec_id", $"embedding", $"raw", l2norm($"raw").as("nrm"))
-      .select($"vec_id", $"embedding", transform($"raw", x => x / $"nrm").as("emb"))
-      .select($"vec_id",
-        cellAssignUdf(cells)($"embedding").as("cell"),
-        pqEncode(cb, subDim)($"emb").as("codes"))
+    val corpus = normalizedEmb(s, dir)
+      .select($"vec_id", q.assign($"embedding").as("cell"),
+        pqEncode(q.pq, subDim)($"emb").as("codes"))
       .select($"vec_id", $"cell",
-        pqDecode(cb, subDim)($"codes").as("emb_hat"))
-    val cands = probeCellsOf(s, dir, cellsLit).join(corpus, Seq("cell"))
+        pqDecode(q.pq, subDim)($"codes").as("emb_hat"))
+    pqRerank(s, dir, q.probeCells(s, dir).join(corpus, Seq("cell"))
       .where($"vec_id" =!= $"pid")
-      .select($"pid", $"vec_id".as("nid"), cosine_sim($"pe", $"emb_hat").as("sim"))
-    val shortlist = graft.plans.TopK.perKey(
-      cands.withColumn("sim_r", rnd($"sim", 6)),
-      keyCols = Seq("pid"),
-      orderCols = Seq("sim_r" -> false, "nid" -> true),
-      k = PqShortlist).select($"pid", $"nid")
-    val rerank = shortlist
-      .join(Tables.embeddings(s, dir).select($"vec_id".as("nid"), $"embedding".as("ne")), "nid")
-      .join(broadcast(probes(s, dir)), "pid")
-      .select($"pid", $"nid", cosine_sim($"pe", $"ne").as("sim"))
-    rankTopK(rerank, K)
+      .select($"pid", $"vec_id".as("nid"), cosine_sim($"pe", $"emb_hat").as("sim")))
   }
 
   /** Per-cell unit DIRECTION of each IVF centroid, as a map literal —
@@ -865,36 +882,27 @@ object AnnOps {
   val annIvfPqResidualTopk: QueryFn = (s, dir) => {
     import s.implicits._
     val subDim = 64 / PqSubspaces
-    val cells = ivfCentroids(s, dir)
-    val cellsLit = typedLit(cells)
-    val cnLit = cellDirLit(cells)
-    def residuals = Tables.embeddings(s, dir)
-      .select($"vec_id", $"embedding", asDouble($"embedding").as("raw"))
-      .select($"vec_id", $"embedding", $"raw", l2norm($"raw").as("nrm"))
-      .select($"vec_id", $"embedding", transform($"raw", x => x / $"nrm").as("emb0"))
-      .select($"vec_id", $"emb0",
-        cellAssignUdf(cells)($"embedding").as("cell"))
+    val q = Quantizer.open(s, dir)
+    val corpus = residuals(s, dir, q.cents)
+      .select($"vec_id", $"cell", pqEncode(q.pqResidual, subDim)($"emb").as("codes"))
       .select($"vec_id", $"cell",
-        zip_with($"emb0", element_at(cnLit, $"cell"), (a, b) => a - b).as("emb"))
-    val cb = trainPqOn(s, dir + "#residual", () => residuals.select($"vec_id", $"emb"))
-    val corpus = residuals
-      .select($"vec_id", $"cell", pqEncode(cb, subDim)($"emb").as("codes"))
-      .select($"vec_id", $"cell",
-        zip_with(pqDecode(cb, subDim)($"codes"), element_at(cnLit, $"cell"),
-          (r, c) => r + c).as("emb_hat"))
-    val cands = probeCellsOf(s, dir, cellsLit).join(corpus, Seq("cell"))
+        zip_with(pqDecode(q.pqResidual, subDim)($"codes"),
+          element_at(cellDirLit(q.cents), $"cell"), (r, c) => r + c).as("emb_hat"))
+    pqRerank(s, dir, q.probeCells(s, dir).join(corpus, Seq("cell"))
       .where($"vec_id" =!= $"pid")
-      .select($"pid", $"vec_id".as("nid"), cosine_sim($"pe", $"emb_hat").as("sim"))
-    val shortlist = graft.plans.TopK.perKey(
-      cands.withColumn("sim_r", rnd($"sim", 6)),
-      keyCols = Seq("pid"),
-      orderCols = Seq("sim_r" -> false, "nid" -> true),
-      k = PqShortlist).select($"pid", $"nid")
-    val rerank = shortlist
-      .join(Tables.embeddings(s, dir).select($"vec_id".as("nid"), $"embedding".as("ne")), "nid")
-      .join(broadcast(probes(s, dir)), "pid")
-      .select($"pid", $"nid", cosine_sim($"pe", $"ne").as("sim"))
-    rankTopK(rerank, K)
+      .select($"pid", $"vec_id".as("nid"), cosine_sim($"pe", $"emb_hat").as("sim")))
+  }
+
+  /** (vec_id, cell, emb): each normalized vector minus the unit
+    * direction of its cell — the frame the `pq_residual` codebook
+    * trains on and [[annIvfPqResidualTopk]] encodes. */
+  private def residuals(s: SparkSession, dir: String,
+      cents: Seq[(Int, Seq[Double])]): DataFrame = {
+    import s.implicits._
+    normalizedEmb(s, dir)
+      .select($"vec_id", $"emb", cell_argmax($"embedding", cents).as("cell"))
+      .select($"vec_id", $"cell",
+        zip_with($"emb", element_at(cellDirLit(cents), $"cell"), (a, b) => a - b).as("emb"))
   }
 
   /** Per-dimension embedding-corpus QA panel — the health check run
@@ -1071,13 +1079,11 @@ object AnnOps {
     * (centroid training included). */
   val annIvfBqTopk: QueryFn = (s, dir) => {
     import s.implicits._
-    val cells = ivfCentroids(s, dir)
-    val cellsLit = typedLit(cells)
+    val q = Quantizer.open(s, dir)
     val corpus = Tables.embeddings(s, dir)
-      .select($"vec_id", $"embedding",
-        cellAssignUdf(cells)($"embedding").as("cell"),
+      .select($"vec_id", $"embedding", q.assign($"embedding").as("cell"),
         sigHalf($"embedding", 0).as("lo"), sigHalf($"embedding", 32).as("hi"))
-    val pc = probeCellsOf(s, dir, cellsLit)
+    val pc = q.probeCells(s, dir)
       .select($"pid", $"pe", $"cell",
         sigHalf($"pe", 0).as("plo"), sigHalf($"pe", 32).as("phi"))
     val ham = corpus.join(broadcast(pc), Seq("cell"))
@@ -1112,17 +1118,15 @@ object AnnOps {
     * serve paths already compute; the final fold is 3 rows. */
   val annIvfBqRecall: QueryFn = (s, dir) => {
     import s.implicits._
-    val cells = ivfCentroids(s, dir)
-    val cellsLit = typedLit(cells)
+    val q = Quantizer.open(s, dir)
     val corpus = Tables.embeddings(s, dir)
-      .select($"vec_id", $"embedding",
-        cellAssignUdf(cells)($"embedding").as("cell"),
+      .select($"vec_id", $"embedding", q.assign($"embedding").as("cell"),
         sigHalf($"embedding", 0).as("lo"), sigHalf($"embedding", 32).as("hi"))
       .transform(Pin.corpus)
     val p = corpus.where($"vec_id" < NumProbes)
       .select($"vec_id".as("pid"), $"embedding".as("pe"),
         $"lo".as("plo"), $"hi".as("phi"))
-    val pc = probeCellsOf(s, dir, cellsLit)
+    val pc = q.probeCells(s, dir)
       .select($"pid", $"cell",
         sigHalf($"pe", 0).as("plo"), sigHalf($"pe", 32).as("phi"))
     def hammed(df: org.apache.spark.sql.DataFrame) = df
@@ -1330,15 +1334,16 @@ object AnnOps {
     * (name,size,mtime) fingerprint of the corpus files so a
     * regenerated corpus can never serve stale state. The session's
     * [[IndexStore.open]] handle carries the attempt dir plus the
-    * collected centroids, so a warm consumer reads neither. */
+    * collected centroids, so a warm consumer reads neither. This is
+    * not the [[Quantizer]]: its training set is the base corpus only,
+    * and it carries the cell-partitioned base vectors. */
   private[operators] object IvfIndex {
     val Name = "ivf"
     private val Version = "v1"
 
-    final case class Handle(dir: String, cents: Seq[(Int, Seq[Double])])
+    final case class Handle(dir: String, cents: Seq[(Int, Seq[Double])]) extends Cells
 
-    def key(dir: String): String =
-      Version + ":" + dir + graft.mr.Fs.fingerprint(dir + "/embeddings.parquet")
+    def key(dir: String): String = Version + ":" + corpusKey(dir)
 
     def open(s: SparkSession, dir: String): Handle =
       IndexStore.open(s, Name, key(dir)) { out =>
@@ -1346,12 +1351,9 @@ object AnnOps {
         centroidRows(baseVecs).write.parquet(s"$out/cent")
         baseVecs
           .select(col("vec_id"), col("embedding"),
-            cellAssignUdf(centroids(s, out))(col("embedding")).as("cell"))
+            cell_argmax(col("embedding"), readCentroids(s, out)).as("cell"))
           .write.partitionBy("cell").parquet(s"$out/vecs")
-      }(a => Handle(a, centroids(s, a)))
-
-    private def centroids(s: SparkSession, idx: String): Seq[(Int, Seq[Double])] =
-      collectCentroids(s.read.parquet(s"$idx/cent"))
+      }(a => Handle(a, readCentroids(s, a)))
   }
 
   /** Incremental ANN serving — the index LIFECYCLE at scale: a
@@ -1371,30 +1373,25 @@ object AnnOps {
     * module can route arriving vectors per micro-batch. A pure
     * projection (centroid literals, fold argmax): works unchanged on
     * a streaming DataFrame, shuffles nothing. */
-  def routeWithFrozenQuantizer(s: SparkSession, dir: String)(vecs: DataFrame): DataFrame = {
-    val cents = IvfIndex.open(s, dir).cents
-    vecs
-      .select(col("vec_id"), col("embedding"),
-        cellAssignUdf(cents)(col("embedding")).as("cell"))
-  }
+  def routeWithFrozenQuantizer(s: SparkSession, dir: String)(vecs: DataFrame): DataFrame =
+    vecs.select(col("vec_id"), col("embedding"),
+      IvfIndex.open(s, dir).assign(col("embedding")).as("cell"))
 
   val annIncrementalTopk: QueryFn = (s, dir) => {
     import s.implicits._
-    val IvfIndex.Handle(idx, cents) = IvfIndex.open(s, dir)
-    val cellsLit = typedLit(cents)
+    val h = IvfIndex.open(s, dir)
     // the probed-cell routing table is probes×IvfProbeCells rows —
     // collected so the cell predicate reaches the partitioned index
     // read as a STATIC `cell IN (...)` partition filter (directory
     // pruning at listing time, the point of the cell-partitioned
     // layout; dynamic pruning would rediscover it at runtime cost)
-    val probeCells = probeCellsOf(s, dir, cellsLit)
+    val probeCells = h.probeCells(s, dir)
       .select($"pid", $"cell").collect().map(r => (r.getLong(0), r.getInt(1)))
     val cellSet = probeCells.map(_._2).distinct.toSeq
     val batch = Tables.embeddings(s, dir).where($"vec_id" % 10 === 0)
-      .select($"vec_id", $"embedding",
-        cellAssignUdf(cents)($"embedding").as("cell"))
+      .select($"vec_id", $"embedding", h.assign($"embedding").as("cell"))
       .where($"cell".isin(cellSet: _*))
-    val stored = s.read.parquet(s"$idx/vecs")
+    val stored = s.read.parquet(s"${h.dir}/vecs")
       .where($"cell".isin(cellSet: _*))
       .select($"vec_id", $"embedding", $"cell".cast("int").as("cell"))
     val merged = stored.unionByName(batch)

@@ -48,8 +48,8 @@ object HnswOps {
   val BuildCap: Int = Blocking.DefaultCap
 
   /** DATA-DEPENDENT entry points: per-IVF-cell medoids — for each
-    * coarse cell of the frozen IVF quantizer (AnnOps.ivfCentroids,
-    * the same centroids every IVF serve path uses), the base vector
+    * coarse cell of the corpus quantizer (AnnOps.Quantizer, the
+    * same centroids every IVF serve path uses), the base vector
     * most similar to its own cell's centroid (rounded cos, tie to
     * lower vec_id). The r5 graph entered from the 4 LOWEST vec_ids —
     * arbitrary points that can all land in one region of the space;
@@ -59,10 +59,9 @@ object HnswOps {
     * oracle-replayable: DuckDB recomputes the identical centroids,
     * assignment, and per-cell argmax. */
   private[operators] def medoidEntries(s: SparkSession, dir: String): Seq[Long] = {
-    val key = dir + graft.mr.Fs.fingerprint(dir + "/embeddings.parquet")
-    IndexStore.open(s, "nsw_entries", key) { out =>
+    IndexStore.open(s, "nsw_entries", AnnOps.corpusKey(dir)) { out =>
       import s.implicits._
-      val cents = AnnOps.ivfCentroids(s, dir)
+      val cents = AnnOps.Quantizer.open(s, dir).cents
       // r14 ADVICE: one argmax scan yields BOTH fields (a separate
       // cell and similarity expression ran the full centroid loop
       // twice per row); the struct is materialized in its own
@@ -158,8 +157,7 @@ object HnswOps {
   private def attachBase(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (p, b) = attachGeometryFor(s, dir)
-    val key = dir + graft.mr.Fs.fingerprint(dir + "/embeddings.parquet") +
-      s":attach:geo$p:$b"
+    val key = AnnOps.corpusKey(dir) + s":attach:geo$p:$b"
     IndexStore.frame(s, "nsw_attach_base", key) {
       val sig = AnnOps.sigUdfFor(p)
       Tables.embeddings(s, dir).where($"vec_id" % 10 =!= 0)
@@ -245,8 +243,7 @@ object HnswOps {
     // can never serve a stale graph; the dial also lands in the
     // store's _META — the "which geometry built this index" record
     val (p, b) = AnnOps.lshGeometryFor(s, dir)
-    val key = dir + graft.mr.Fs.fingerprint(dir + "/embeddings.parquet") +
-      s":geo$p:$b:M$M:cap$BuildCap"
+    val key = AnnOps.corpusKey(dir) + s":geo$p:$b:M$M:cap$BuildCap"
     IndexStore.frame(s, "nsw_edges", key)(edges(s, dir))
   }
 

@@ -5,8 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Persisted build-index store (r10 verdict #1): every persisted
   * index — the suffix order + LCPs, contamination spans, NSW edges,
   * entry points and attach postings, the jaccard cluster chain, BPE
-  * merges, LSH signatures, [[AnnOps.IvfIndex]], the incremental-dedup
-  * corpus index and the streaming faces' vector-arrival split —
+  * merges, LSH signatures, the corpus [[AnnOps.Quantizer]] (IVF
+  * centroids + PQ codebooks), [[AnnOps.IvfIndex]], the
+  * incremental-dedup corpus index and the streaming faces'
+  * vector-arrival split —
   * survives the JVM as parquet under [[graft.mr.Fs.indexRoot]],
   * keyed by (index name, corpus fingerprint, dial), so a rerun in a
   * NEW session pays a parquet read instead of the multi-job cold

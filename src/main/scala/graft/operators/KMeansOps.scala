@@ -42,13 +42,12 @@ object KMeansOps {
   def K: Int = overrideK.getOrElse(8)
   val Iters = 3
 
-  /** Winning (distance, cluster) of the map-side argmin — named
-    * fields so consumers read `.d` / `.c` like the former
-    * struct-array form. */
-  private case class D2C(d: Double, c: Int)
-
   /** Map-side argmin over the literal centroids: lowest exact
     * decimal-accumulated squared L2, ties to the lowest cluster id.
+    * The result is the winning (distance, cluster) as a tuple struct
+    * (`_1`, `_2`): Spark's generated projection compiles a tuple
+    * encoder, where a case class nested in this object fails to
+    * compile and drops the UDF to interpreted evaluation.
     *
     * r13 optimization (guide §1.2 "per-task work", the
     * [[AnnOps]] pqEncode precedent): the former
@@ -94,7 +93,7 @@ object KMeansOps {
         if (d < bestD) { bestD = d; bestC = ci }
         ci += 1
       }
-      D2C(bestD, bestC)
+      (bestD, bestC)
     }
     fn(emb)
   }
@@ -120,7 +119,7 @@ object KMeansOps {
       // recompute: one (cluster, dim) aggregation — 512 keys, partial
       // agg before the shuffle; collect is k×dim, never corpus-sized
       val sums = assigned
-        .select($"a.c".as("cluster"), posexplode($"emb").as(Seq("dim", "v")))
+        .select($"a._2".as("cluster"), posexplode($"emb").as(Seq("dim", "v")))
         .groupBy($"cluster", $"dim")
         .agg(xsum($"v").as("sv"), count(lit(1)).as("n"))
         .collect()
@@ -147,7 +146,7 @@ object KMeansOps {
       .select($"vec_id", $"embedding",
         assign(asDouble($"embedding"), cents).as("a"))
       .select($"vec_id", $"embedding",
-        $"a.c".cast("long").as("cluster_id"), $"a.d".as("d2"))
+        $"a._2".cast("long").as("cluster_id"), $"a._1".as("d2"))
   }
 
   def kmeans(s: SparkSession, dir: String, k: Int = K, iters: Int = Iters): DataFrame = {

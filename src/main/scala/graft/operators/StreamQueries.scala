@@ -417,8 +417,7 @@ object StreamQueries {
     * files under a running stream, and old stages fall under
     * retention. The file source reads `<attempt>/data` only. */
   private def stagedVectorsDir(s: SparkSession, sfDir: String): String =
-    IndexStore.open(s, "vec_arrivals",
-        sfDir + graft.mr.Fs.fingerprint(sfDir + "/embeddings.parquet")) { dir =>
+    IndexStore.open(s, "vec_arrivals", AnnOps.corpusKey(sfDir)) { dir =>
       Tables.embeddings(s, sfDir).where(col("vec_id") % 10 === 0)
         .select(col("vec_id"), col("embedding"), col("label"))
         .write.parquet(dir + "/data")

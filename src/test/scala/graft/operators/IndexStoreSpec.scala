@@ -112,8 +112,8 @@ class IndexStoreSpec extends SparkTestBase {
     try {
       def load(key: String) = IndexStore.frame(spark, "spec_live", key)(
         spark.range(7).toDF("v"))
-      // a long-lived session loads the gate corpus's index and memos
-      // the LAZY parquet-backed frame (exactly SuffixOps.lcpMemo)
+      // a long-lived session loads the gate corpus's index and holds
+      // the LAZY parquet-backed frame (exactly IndexStore.open's handle)
       val held = load("gate-corpus")
       assert(held.count() == 7)
       // ... then the suite cycles many fixture corpora through the

@@ -44,6 +44,7 @@ class MemoSpec extends SparkTestBase {
     // build blocks on a latch that only B's build releases — deadlock
     // under the old lock-the-map design, finishes under per-key latches.
     val m = new Memo[String]()
+    val aStarted = new java.util.concurrent.CountDownLatch(1)
     val bStarted = new java.util.concurrent.CountDownLatch(1)
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
@@ -51,6 +52,7 @@ class MemoSpec extends SparkTestBase {
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       val fa = Future(m.getOrElseUpdate(spark, "corpusA", {
+        aStarted.countDown()
         // A cannot finish until B's build has STARTED — proves B was not
         // queued behind A's in-flight build
         assert(bStarted.await(30, java.util.concurrent.TimeUnit.SECONDS),
@@ -60,7 +62,10 @@ class MemoSpec extends SparkTestBase {
       val fb = Future(m.getOrElseUpdate(spark, "corpusB", {
         bStarted.countDown(); builds.incrementAndGet(); "B"
       }))
-      // same-key concurrency still serializes to ONE build
+      // same-key concurrency still serializes to ONE build: the second
+      // caller arrives while A's build is in flight (started after it,
+      // so the pool cannot run it first and make "A-dup" the build)
+      assert(aStarted.await(30, java.util.concurrent.TimeUnit.SECONDS))
       val fa2 = Future(m.getOrElseUpdate(spark, "corpusA", {
         builds.incrementAndGet(); "A-dup"
       }))
