@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicBoolean
 
-import org.apache.spark.sql.SparkSession
+import graft.mr.JobTracker
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, forcing full materialization through the noop
@@ -12,8 +12,8 @@ import org.apache.spark.sql.SparkSession
   * Built to survive a driver wall-clock kill (round-1 failure mode:
   * the sbt run was killed mid-list and the round had NO perf
   * artifact):
-  *  - each query runs inside its own Spark job group with a watchdog
-  *    that cancels it after SPARK_GRAFT_QUERY_TIMEOUT (default 60 s);
+  *  - each query runs as one [[mr.JobTracker.run]] job, cancelled
+  *    after SPARK_GRAFT_QUERY_TIMEOUT ([[Driver.queryTimeoutMs]]);
   *  - a global deadline (SPARK_GRAFT_BENCH_BUDGET, default 480 s of
   *    query time) skips the remainder rather than blowing the budget,
   *    so the final stdout JSON line always lands;
@@ -59,27 +59,13 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val queryTimeoutMs =
-      sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT", "60").toLong * 1000L
     val benchBudgetMs =
       // 560 s: the 202-query surface with its two suffix/graph index
       // BUILDS (memoized — the serve reruns are cheap, but the first
       // pass pays construction) runs ~500 s of query time on this
       // box; 480 s skipped the alphabetic tail in r5
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "560").toLong * 1000L
-    val spark = SparkSession.builder()
-      // unreliable mode (GRAFT_CHAOS — see graft.mr.Chaos): dialed
-      // runs get production-style task retries, clean runs keep
-      // local-mode fail-fast so a real bug can't retry invisibly
-      .master(if (graft.mr.Chaos.rate > 0) s"local[$cpus, 4]" else s"local[$cpus]")
-      .config("spark.plugins", "graft.mr.ChaosPlugin")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Driver.session()
 
     // Cold index-build rows: the memoized builds (suffix order +
     // LCPs, contamination span scan, NSW graph) otherwise amortize
@@ -111,16 +97,6 @@ object Bench {
     // through is machine-detected, not judge-detected.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       if (subset.isEmpty) "bench_summary.json" else "bench_subset.json")
-    // Provenance stamp (r7 verdict #7): the artifact records which
-    // commit produced it and how many queries the registry had, so a
-    // stale or partial artifact is detectable without the judge
-    // diffing row counts by hand.
-    val gitSha = try {
-      val p = Runtime.getRuntime.exec(Array("git", "rev-parse", "HEAD"))
-      val sha = new String(p.getInputStream.readAllBytes()).trim
-      p.waitFor()
-      if (sha.matches("[0-9a-f]{40}")) sha else "unknown"
-    } catch { case _: Throwable => "unknown" }
     val queryNames = subset match {
       case Some(qs) => qs.split(",").map(_.trim).filter(SparkEntry.queries.contains).toSeq.sorted
       case None     => SparkEntry.queries.keys.toSeq.sorted
@@ -139,7 +115,7 @@ object Bench {
       val total = names.map(n => done.getOrDefault(n, -2.0)).filter(_ >= 0).sum
       val nOk = names.count(n => done.getOrDefault(n, -2.0) >= 0)
       val nFail = names.count(n => done.getOrDefault(n, -2.0) == -1.0)
-      s"""{"metric":"total","value":${"%.3f".format(total)},"unit":"sec","n_queries":${names.size},"n_ok":$nOk,"n_fail":$nFail,"git_sha":"$gitSha","registry_count":${SparkEntry.queries.size},"subset":${subset.nonEmpty}$extra,"queries":${entries.mkString("{", ",", "}")},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${"%.3f".format(total)},"unit":"sec","n_queries":${names.size},"n_ok":$nOk,"n_fail":$nFail,"git_sha":"${Driver.gitSha}","registry_count":${SparkEntry.queries.size},"subset":${subset.nonEmpty}$extra,"queries":${entries.mkString("{", ",", "}")},"sf":"$sfDir"}"""
     }
     def entry(n: String): String = "\"" + n + "\":" + "%.3f".format(done.getOrDefault(n, -2.0))
     // The full summary goes to outPath (canonical bench_summary.json
@@ -170,7 +146,7 @@ object Bench {
         // fixed-cost calibration: identical work every run, every
         // round, every SF — a pure-CPU hash-sum with no scan, so the
         // only variable is the box itself
-        spark.range(0, 1L << 26, 1, cpus.toInt)
+        spark.range(0, 1L << 26, 1, Driver.cpus)
           // xor-mix, not multiply: ANSI mode overflows a 64M-term
           // product sum; hash-like work with no overflow path
           .selectExpr("sum(id ^ (id * 31) ^ 2654435761) AS s")
@@ -182,21 +158,20 @@ object Bench {
             .write.format("noop").mode("overwrite").save()
       }
 
-    /** Run with a watchdog that cancels the job group at the timeout. */
+    /** Seconds `force(name)` took, as a tracked job cancelled at the
+      * row timeout; throws with the job's failure cause. */
+    val tracker = new JobTracker(spark)
     def timedRun(name: String): Double = {
-      val group = s"bench-$name"
-      spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
-      val watchdog = new java.util.Timer(true)
-      watchdog.schedule(new java.util.TimerTask {
-        def run(): Unit = spark.sparkContext.cancelJobGroup(group)
-      }, queryTimeoutMs)
+      @volatile var secs = 0.0
       try {
-        val t0 = System.nanoTime()
-        force(name)
-        (System.nanoTime() - t0) / 1e9
+        val st = tracker.run({
+          val t0 = System.nanoTime()
+          force(name)
+          secs = (System.nanoTime() - t0) / 1e9
+        }, Driver.queryTimeoutMs)
+        st.failure.foreach(f => throw new RuntimeException(f))
+        secs
       } finally {
-        watchdog.cancel()
-        spark.sparkContext.clearJobGroup()
         // drop plan-level caches (Pin.corpus persists) so each row
         // measures in a clean cache state — persisted frames from
         // earlier rows otherwise pile up and turn late heavy queries
@@ -284,6 +259,7 @@ object Bench {
       }
       w.close()
     }
+    tracker.shutdown()
     spark.stop()
   }
 

@@ -8,18 +8,21 @@ import org.apache.spark.sql.SparkSession
   * on dimension sides, map-side partial aggregation, and
   * whole-stage-codegen coverage. Run:
   *   sbt 'runMain graft.PlanAudit /root/testdata/sf0.001'
+  * The session has 4 cores and 4 shuffle partitions, the width the
+  * checks were written against.
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Driver.session(cpus = 4)
     spark.sparkContext.setLogLevel("ERROR")
+    val failures = try run(spark, sfDir) finally spark.stop()
+    if (failures > 0) sys.exit(1)
+  }
 
+  /** Print every check's PASS/FAIL line for the queries on `spark`
+    * over `sfDir`; returns the number of failed checks. */
+  def run(spark: SparkSession, sfDir: String): Int = {
     val audits: Seq[(String, Map[String, String => Boolean])] = Seq(
       // §2.H: the status predicate must prune at the partition
       // DIRECTORY level (manifest listing), not post-scan — at 100 TB
@@ -1104,7 +1107,6 @@ object PlanAudit {
     println(s"   windows audited over ${SparkEntry.queries.size} queries")
 
     println(if (failures == 0) "ALL PLAN CHECKS PASS" else s"$failures CHECK(S) FAILED")
-    spark.stop()
-    if (failures > 0) sys.exit(1)
+    failures
   }
 }

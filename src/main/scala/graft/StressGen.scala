@@ -180,14 +180,7 @@ object StressGen {
     val tables = if (args.length > 3)
       args(3).split(",").map(_.trim).filter(_.nonEmpty).toSet
     else Set.empty[String]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Driver.session()
     writeStress(spark, src, out, k, tables)
     def cnt(t: String): Long =
       if (tables.isEmpty || tables.contains(t))

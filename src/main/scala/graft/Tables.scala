@@ -16,8 +16,29 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** The schema Spark infers for each table, so a read starts no
+    * schema-inference job. `events` has none: its `ts` dtype varies
+    * by generator version ([[normalizeTs]]). */
+  val schemas: Map[String, String] = Map(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+      "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "supplier" -> "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, " +
+      "p_size INT, p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+      "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, " +
+      "l_tax DOUBLE, l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "documents" -> "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
+
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val reader = spark.read
+    schemas.get(name).fold(reader)(reader.schema).parquet(s"$sfDir/$name.parquet")
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
@@ -50,10 +71,5 @@ object Tables {
     normalizeTs(load(s, d, "events"))
   }
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
-  /** Read with the TESTDATA.md schema, so a request that reads the
-    * corpus (the ANN serve paths, several times each) starts no
-    * schema-inference job. */
-  def embeddings(s: SparkSession, d: String): DataFrame =
-    s.read.schema("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
-      .parquet(s"$d/embeddings.parquet")
+  def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 }

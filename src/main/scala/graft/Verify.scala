@@ -1,34 +1,35 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.SparkSession
+
+import graft.mr.JobTracker
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
-  * Hardened like Bench: each query runs in its own job group with a
-  * watchdog (SPARK_GRAFT_QUERY_TIMEOUT, default 120 s) so one
-  * pathological query can't eat the driver's wall clock and zero the
-  * whole round's correctness artifact; oracle_sql.json is written
-  * FIRST so a mid-run kill still leaves the oracle set on disk. */
+  * Hardened like Bench: each query runs as one [[mr.JobTracker.run]]
+  * job bounded by SPARK_GRAFT_QUERY_TIMEOUT ([[Driver.queryTimeoutMs]])
+  * so one pathological query cannot stall the whole dump;
+  * oracle_sql.json is written FIRST so a mid-run kill still leaves the
+  * oracle set on disk. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: sfDir outDir [comma-separated query subset]
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val queryTimeoutMs =
-      sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT", "120").toLong * 1000L
-    val spark = SparkSession.builder()
-      // unreliable mode (GRAFT_CHAOS=0.1 — the reference's chaos
-      // harness, mapreduce.go:465): injected first-attempt task
-      // failures need task retries, which local-mode defaults to 1
-      .master(if (graft.mr.Chaos.rate > 0) s"local[$cpus, 4]" else s"local[$cpus]")
-      .config("spark.plugins", "graft.mr.ChaosPlugin")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Driver.session()
+    try dump(spark, sfDir, outDir, only) finally spark.stop()
+  }
+
+  /** Write oracle_sql.json, verify_meta.json and, under `outDir/<name>`,
+    * the result of every registry query in `only` (all when None).
+    * Returns the names of the queries it wrote; a query that fails is
+    * logged and left out. Publishes `sfDir` as the
+    * [[operators.GeometryContext]] and leaves it set. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      only: Option[Set[String]]): Seq[String] = {
     // r11 advice (medium): the oracle strings interpolate the STATIC
     // geometry accessors; publish the gate corpus so they resolve
     // through the same n-aware schedule the engine serve paths use —
@@ -55,35 +56,21 @@ object Verify {
     // driver iterates oracle_sql.json keys as queries, so provenance
     // must not ride inside it. check.py cross-checks these counts so
     // a stale or subset dump is machine-detected.
-    val gitSha = try {
-      val p = Runtime.getRuntime.exec(Array("git", "rev-parse", "HEAD"))
-      val sha = new String(p.getInputStream.readAllBytes()).trim
-      p.waitFor()
-      if (sha.matches("[0-9a-f]{40}")) sha else "unknown"
-    } catch { case _: Throwable => "unknown" }
     Files.writeString(Paths.get(s"$outDir/verify_meta.json"),
-      s"""{"git_sha":"$gitSha","registry_count":${SparkEntry.queries.size},""" +
+      s"""{"git_sha":"${Driver.gitSha}","registry_count":${SparkEntry.queries.size},""" +
         s""""oracle_count":${SparkEntry.oracleSql.size},""" +
         s""""geometry":${q(graft.operators.GeometryContext.describe())},""" +
         s""""subset":${only.nonEmpty}}""")
 
-    SparkEntry.queries
+    val tracker = new JobTracker(spark)
+    try SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      spark.sparkContext.setJobGroup(s"verify-$name", name, interruptOnCancel = true)
-      val watchdog = new java.util.Timer(true)
-      watchdog.schedule(new java.util.TimerTask {
-        def run(): Unit = spark.sparkContext.cancelJobGroup(s"verify-$name")
-      }, queryTimeoutMs)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      } finally {
-        watchdog.cancel()
-        spark.sparkContext.clearJobGroup()
+      .flatMap { case (name, fn) =>
+        val st = tracker.run(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name"), Driver.queryTimeoutMs)
+        st.failure.foreach(f => System.err.println(s"[verify] $name failed: $f"))
+        if (st.failure.isEmpty) Some(name) else None
       }
-    }
-    spark.stop()
+    finally tracker.shutdown()
   }
 }

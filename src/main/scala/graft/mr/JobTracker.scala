@@ -11,6 +11,7 @@ import org.apache.spark.sql.SparkSession
   * statsManager.go:30, mapreduce.go:57-90):
   *
   *   Start(body) → jobId      (async, like MapReduceNode.Start)
+  *   Run(body, timeout)       (start, await, kill at the timeout, done)
   *   Status(jobId) → Boolean  (isCompleted)
   *   Done(jobId)              (frees tracking state)
   *   Stats(jobId)             (wall time, Spark job and launched-task counts,
@@ -21,7 +22,7 @@ import org.apache.spark.sql.SparkSession
   * Scheduling, retry, and failure detection — which the reference
   * implements with pings and task reassignment (mapreduce.go:347) —
   * belong to the Spark scheduler; this class only *observes* it via a
-  * SparkListener keyed on the job group.
+  * SparkListener keyed on the job group, which only this class sets.
   */
 final class JobTracker(spark: SparkSession) {
 
@@ -67,11 +68,15 @@ final class JobTracker(spark: SparkSession) {
   private val openSparkJobs = new ConcurrentHashMap[Int, String]()
   // completed by the worker once the job's terminal state is recorded
   private val finished = new ConcurrentHashMap[String, CompletableFuture[Unit]]()
+  // jobs whose cancel was requested; see [[cancel]]
+  private val cancelled = ConcurrentHashMap.newKeySet[String]()
   private val pool = Executors.newCachedThreadPool()
 
   private val listener = new SparkListener {
     override def onJobStart(js: SparkListenerJobStart): Unit = {
       val group = Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+      if (group != null && cancelled.contains(group))
+        spark.sparkContext.cancelJob(js.jobId, s"part of cancelled job group $group")
       if (group != null && jobs.containsKey(group)) {
         js.stageInfos.foreach(si => stageToJob.put(si.stageId, group))
         openSparkJobs.put(js.jobId, group)
@@ -108,7 +113,7 @@ final class JobTracker(spark: SparkSession) {
     finished.put(jobId, signal)
     pool.submit(new Runnable {
       override def run(): Unit = {
-        spark.sparkContext.setJobGroup(jobId, s"graft-mr-$jobId")
+        spark.sparkContext.setJobGroup(jobId, s"graft-mr-$jobId", interruptOnCancel = true)
         try {
           // keep the cause: the reference surfaces job failure state
           // to Status() pollers, and a swallowed message made the r2
@@ -149,7 +154,10 @@ final class JobTracker(spark: SparkSession) {
     * (mapreduce.go:385), re-expressed for Spark's execution model:
     * the reference tears a whole NODE down and lets ping-reassign
     * clean up; here a tracked job is one job group, and
-    * `cancelJobGroup` interrupts every Spark job it owns. The
+    * `cancelJobGroupAndFutureJobs` interrupts every Spark job it owns
+    * and refuses its later ones (job ids are fresh UUIDs: a group is
+    * never reused). Spark refuses only result jobs, so the listener
+    * also cancels the AQE map-stage jobs that start in the group. The
     * worker thread's failure path then records the terminal state,
     * so pollers see `failed` with the cancellation cause — cancel
     * requests the stop, the normal lifecycle reports it. Cancelling
@@ -157,8 +165,10 @@ final class JobTracker(spark: SparkSession) {
     * calling Kill on a dead node). */
   def cancel(jobId: String): Unit =
     if (Option(jobs.get(jobId)).exists(s =>
-        s.status == "starting" || s.status == "working"))
-      spark.sparkContext.cancelJobGroup(jobId)
+        s.status == "starting" || s.status == "working")) {
+      cancelled.add(jobId)
+      spark.sparkContext.cancelJobGroupAndFutureJobs(jobId)
+    }
 
   /** Parity with MapReduceNode.Status — has the job completed? */
   def status(jobId: String): Boolean =
@@ -170,6 +180,7 @@ final class JobTracker(spark: SparkSession) {
   def done(jobId: String): Unit = {
     jobs.remove(jobId)
     finished.remove(jobId)
+    cancelled.remove(jobId)
     stageToJob.entrySet().removeIf(e => e.getValue == jobId)
   }
 
@@ -183,6 +194,16 @@ final class JobTracker(spark: SparkSession) {
       catch { case _: TimeoutException => () }
     }
     status(jobId)
+  }
+
+  /** Start `body`, cancel it if it is still running after
+    * `timeoutMs`, and return its terminal stats, released ([[done]]). */
+  def run(body: => Unit, timeoutMs: Long): JobStats = {
+    val jobId = start(body)
+    try {
+      if (!await(jobId, timeoutMs)) { cancel(jobId); finished.get(jobId).get() }
+      jobs.get(jobId)
+    } finally done(jobId)
   }
 
   def shutdown(): Unit = {

@@ -401,10 +401,10 @@ object StreamQueries {
       .orderBy($"vec_id", $"rnk")
   }
 
-  /** Streaming read of the documents table (schema probed from the
-    * landing files, the [[Streams.eventsStreamFrom]] discipline). */
+  /** Streaming read of the documents table, with the batch reader's
+    * fixed schema ([[Tables.schemas]]). */
   private def docsStreamFrom(s: SparkSession, dir: String): DataFrame =
-    s.readStream.schema(s.read.parquet(dir).schema).parquet(dir)
+    s.readStream.schema(Tables.schemas("documents")).parquet(dir)
 
   /** The arriving-vector landing dir behind [[streamIvfIngest]] and
     * [[streamHnswIngest]]: the vec_id % 10 == 0 split, committed once

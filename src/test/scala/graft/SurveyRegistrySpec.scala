@@ -56,4 +56,27 @@ class SurveyRegistrySpec extends AnyFunSuite {
       "GRAFT_RELIABLE_CHECKPOINT_DIR"),
       s"GRAFT_* names in src/main/scala: ${names.toSeq.sorted}")
   }
+
+  test("src/main has one job-group owner, one session builder and one read of each driver setting") {
+    def sources(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) sources(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+      }
+    val root = new java.io.File("src/main/scala")
+    val texts = sources(root).map { f =>
+      val src = scala.io.Source.fromFile(f)("UTF-8")
+      try root.toPath.relativize(f.toPath).toString -> src.mkString finally src.close()
+    }
+    def sites(pattern: String): Seq[String] = texts.flatMap { case (path, text) =>
+      pattern.r.findAllIn(text).map(_ => path) }
+    val groupOwners = sites("""setJobGroup|cancelJobGroup\w*""").toSet
+    assert(groupOwners == Set("graft/mr/JobTracker.scala"),
+      s"files naming setJobGroup/cancelJobGroup*: ${groupOwners.toSeq.sorted}")
+    val builders = sites("""SparkSession\s*\.\s*builder""")
+    assert(builders.size == 1, s"SparkSession.builder sites: $builders")
+    Seq("SPARK_GRAFT_CPUS", "SPARK_GRAFT_QUERY_TIMEOUT").foreach { v =>
+      val reads = sites("\"" + v + "\"")
+      assert(reads.size == 1, s"$v read at: $reads")
+    }
+  }
 }

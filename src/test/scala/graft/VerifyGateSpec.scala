@@ -1,0 +1,36 @@
+package graft
+
+import java.nio.file.Files
+
+import scala.sys.process._
+
+import graft.operators.GeometryContext
+
+/** The DuckDB correctness gate under the suite: `Verify.dump` writes
+  * every registry row at sf0.001 on the shared session, and
+  * `tools/check.py` compares each against its oracle SQL. */
+class VerifyGateSpec extends SparkTestBase {
+
+  test("every registry row matches its DuckDB oracle at sf0.001") {
+    val out = Files.createTempDirectory("graft-verify-gate")
+    try {
+      val dumped = Verify.dump(spark, sfDir, out.toString, None)
+      val log = new StringBuilder
+      val exit = Seq("python3", "tools/check.py", sfDir, out.toString) !
+        ProcessLogger(l => log ++= l + "\n", l => log ++= l + "\n")
+      val lines = log.toString.linesIterator.toSeq
+      val fails = lines.filter(_.startsWith("FAIL"))
+      assert(fails.isEmpty, fails.mkString("\n"))
+      assert(dumped.size == SparkEntry.queries.size,
+        s"rows that failed to dump: ${(SparkEntry.queries.keySet -- dumped).toSeq.sorted}")
+      val passed = lines.collectFirst { case l if l.startsWith("PASS ") =>
+        l.stripPrefix("PASS ").takeWhile(_ != ':').toInt }
+      assert(passed.contains(dumped.size) && exit == 0,
+        s"check.py passed $passed of ${dumped.size} dumped rows (exit $exit):\n${lines.takeRight(5).mkString("\n")}")
+    } finally {
+      GeometryContext.clear()
+      val (fs, p) = graft.mr.Fs.resolve(out.toString)
+      fs.delete(p, true)
+    }
+  }
+}

@@ -2,6 +2,8 @@ package graft.mr
 
 import java.nio.file.Files
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -198,6 +200,74 @@ class MapReduceSpec extends SparkTestBase {
     assert(tracker.await(id2) && tracker.stats(id2).get.status == "completed",
       "tracker unusable after a cancel")
     tracker.done(id); tracker.done(id2)
+    tracker.shutdown()
+  }
+
+  test("JobTracker.cancel before the first Spark job: the job fails and no job of its group runs") {
+    import spark.implicits._
+    // a cancel that lands before the body submits anything (or between
+    // two of its Spark jobs) must still stop the body's later jobs
+    val tracker = new JobTracker(spark)
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val group = new java.util.concurrent.atomic.AtomicReference[String]()
+    val succeeded = new java.util.concurrent.atomic.AtomicInteger(0)
+    val ofGroup = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).map(_.getProperty("spark.jobGroup.id")).contains(group.get))
+          ofGroup.add(js.jobId)
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        if (ofGroup.contains(je.jobId) && je.jobResult == JobSucceeded) succeeded.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // the body runs on the driver, so a captured latch holds it; its
+      // count is an AQE map-stage job, then a result job, and its map
+      // tasks outlast the listener's reaction to the stage's start
+      val id = tracker.start {
+        gate.await()
+        spark.range(0, 64, 1, 4).mapPartitions { it => Thread.sleep(10000); it }.count()
+        ()
+      }
+      group.set(id)
+      tracker.cancel(id)
+      gate.countDown()
+      assert(tracker.await(id, 60000L), "cancelled job never reached a terminal state")
+      val st = tracker.stats(id).get
+      assert(st.status == "failed", s"expected failed, got ${st.status}")
+      assert(st.failure.exists(_.toLowerCase.contains("cancel")),
+        s"cause should name the cancellation, got ${st.failure}")
+      ListenerBusDrain(spark.sparkContext)
+      assert(succeeded.get == 0, s"${succeeded.get} Spark job(s) of the cancelled group succeeded")
+      tracker.done(id)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      tracker.shutdown()
+    }
+  }
+
+  test("JobTracker.run cancels a job still running at its timeout; the next run completes") {
+    import spark.implicits._
+    val tracker = new JobTracker(spark)
+    CancelProbe.running.set(false)
+    val t0 = System.nanoTime()
+    val st = tracker.run({
+      spark.range(0, 8, 1, 4).mapPartitions { it =>
+        CancelProbe.running.set(true)
+        Thread.sleep(30000)
+        it
+      }.count()
+      ()
+    }, timeoutMs = 2000L)
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(CancelProbe.running.get, "job was not running at its timeout")
+    assert(st.status == "failed", s"expected failed, got ${st.status}")
+    assert(st.failure.exists(_.toLowerCase.contains("cancel")),
+      s"cause should name the cancellation, got ${st.failure}")
+    assert(secs < 20, f"run returned after $secs%.1f s; the 30 s tasks were not cancelled")
+    assert(tracker.stats(st.jobId).isEmpty, "run must release the job's tracking state")
+    val next = tracker.run({ spark.range(10).count(); () }, timeoutMs = 60000L)
+    assert(next.status == "completed" && next.sparkJobs >= 1, s"next run: $next")
     tracker.shutdown()
   }
 
