@@ -51,6 +51,10 @@ import graft.mr.JobTracker
   * is taken from a cleared store so the cold construction cost stays
   * on record.
   *
+  * Rows share one session with nothing cleared between them: reused
+  * frames are [[operators.Checkpoints.cut]]s, freed by the
+  * ContextCleaner, so no row inherits cached plans of earlier ones.
+  *
   * Output: one JSON line on stdout —
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
   * Failed queries report -1, budget-skipped ones -2; both are
@@ -163,23 +167,13 @@ object Bench {
     val tracker = new JobTracker(spark)
     def timedRun(name: String): Double = {
       @volatile var secs = 0.0
-      try {
-        val st = tracker.run({
-          val t0 = System.nanoTime()
-          force(name)
-          secs = (System.nanoTime() - t0) / 1e9
-        }, Driver.queryTimeoutMs)
-        st.failure.foreach(f => throw new RuntimeException(f))
-        secs
-      } finally {
-        // drop plan-level caches (Pin.corpus persists) so each row
-        // measures in a clean cache state — persisted frames from
-        // earlier rows otherwise pile up and turn late heavy queries
-        // spill-bound (measured: dedup_containment 24 s isolated vs
-        // 67 s late in the sequence). Session memos are untouched:
-        // they hold localCheckpointed RDD blocks, not plan caches.
-        spark.catalog.clearCache()
-      }
+      val st = tracker.run({
+        val t0 = System.nanoTime()
+        force(name)
+        secs = (System.nanoTime() - t0) / 1e9
+      }, Driver.queryTimeoutMs)
+      st.failure.foreach(f => throw new RuntimeException(f))
+      secs
     }
 
     val partial = new java.io.PrintWriter(

@@ -44,24 +44,21 @@ object CandidateMass {
     val nVecs = emb.count()
 
     val shingled = operators.DedupOps.docShingles(spark, sfDir)
-      .localCheckpoint(true)
+      .transform(operators.Checkpoints.cut)
     val minhash = operators.DedupOps.minhashCandidates(shingled).count()
-    shingled.unpersist()
 
     val simGeo = operators.DedupOps.simhashGeometryFor(spark, sfDir)
     val simSigs = operators.DedupOps
       .simhashSigs(docs.select($"doc_id", $"text"), simGeo)
-      .localCheckpoint(true)
+      .transform(operators.Checkpoints.cut)
     val simhash = operators.DedupOps.simhashCandidates(simSigs, simGeo).count()
-    simSigs.unpersist()
 
     // per-corpus geometry (n-aware unless a dial pins it) — the same
     // resolution the dedup/attach serve paths use, so the counters
     // measure the geometry the engine would actually deploy here
     val embGeo = operators.DedupOps.embGeometryFor(spark, sfDir)
-    val embSigs = operators.DedupOps.embSigs(emb, embGeo).localCheckpoint(true)
+    val embSigs = operators.DedupOps.embSigs(emb, embGeo).transform(operators.Checkpoints.cut)
     val embedding = operators.DedupOps.embCandidates(embSigs, embGeo).count()
-    embSigs.unpersist()
 
     // the streaming attach face: candidates the arrival split pays
     // against the frozen base (the per-arrival cost unit) — served
@@ -100,7 +97,7 @@ object CandidateMass {
         .withColumn("cos",
           graft.functions.VectorExpressions.cosine_sim($"orig", $"pv"))
         .where($"cos" >= 0.99)
-        .localCheckpoint(true)
+        .transform(operators.Checkpoints.cut)
       val nElig = plants.count()
       val arrivals = plants
         .select(($"src" + stride).as("vec_id"), $"pv".as("embedding"))
@@ -108,7 +105,6 @@ object CandidateMass {
         .attachCandidatesAgainst(emb.select($"vec_id", $"embedding"), attachGeo)(arrivals)
         .where($"nbr" === $"vec_id" - stride)
         .select($"vec_id").distinct().count()
-      plants.unpersist()
       val recall =
         if (nElig == 0) -1.0
         else math.floor(found.toDouble / nElig * 10000 + 0.5) / 10000

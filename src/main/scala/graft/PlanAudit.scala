@@ -298,12 +298,15 @@ object PlanAudit {
         // the df/rank stage runs ONCE behind the eager checkpoint —
         // both prefix and posting branches must read the materialized
         // ranked frame, not recompute it (the cappedPairs double-eval
-        // lesson); the rep min-agg recomputes over the PINNED members
-        // cache (pinning the agg output itself measured 13 s → 29 s
-        // at the stress decade — join-planning perturbation)
+        // lesson); the rep min-agg recomputes over the CUT members
+        // frame (materializing the agg output itself measured 13 s →
+        // 29 s at the stress decade — join-planning perturbation).
+        // Six reads: as many as the members cache had scans when it
+        // was a persisted plan
         "ranked postings checkpointed once" -> (p =>
           "Scan ExistingRDD\\[key".r.findAllIn(p).size >= 2),
-        "members served from cache" -> (_.contains("InMemoryTableScan"))),
+        "members read from a cut" -> (p =>
+          "Scan ExistingRDD\\[fp".r.findAllIn(p).size >= 6)),
       "pipeline_curate" -> Map(
         // the decontamination gram join keeps the benchmark set (the
         // small side by construction) broadcast; no stage of the
@@ -1054,22 +1057,34 @@ object PlanAudit {
             "windowspecdefinition\\(doc_id".r.findAllIn(p).size),
         "no cartesian" -> (p => !p.contains("CartesianProduct"))))
 
-    var failures = 0
-    audits.foreach { case (name, checks) =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      // AQE prints the pre-execution plan without codegen stage marks,
-      // so append the codegen-mode explain (which compiles the stages)
-      // and every file scan's full root paths (locations print cut)
-      val executed = df.queryExecution.executedPlan
+    // AQE prints the pre-execution plan without codegen stage marks,
+    // so append the codegen-mode explain (which compiles the stages)
+    // and every file scan's full root paths (locations print cut)
+    def planText(qe: org.apache.spark.sql.execution.QueryExecution): String = {
+      val executed = qe.executedPlan
       val scanRoots = new org.apache.spark.sql.execution.adaptive
           .AdaptiveSparkPlanHelper {}.collect(executed) {
         case f: org.apache.spark.sql.execution.FileSourceScanExec =>
           f.relation.location.rootPaths.mkString("\n")
       }
-      val plan = executed.toString + "\n" +
-        df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("codegen")) +
+      executed.toString + "\n" +
+        qe.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("codegen")) +
         "\n" + scanRoots.mkString("\n")
+    }
+    // a cut prints as `Scan ExistingRDD`, hiding the subtree it
+    // materialized: the checks of these rows, whose reused corpus
+    // frames are cut, also read the plan of every frame the row cut
+    // while it was built
+    val readsCuts = Set("dedup_minhash_lsh", "dedup_embedding", "dedup_incremental",
+      "ann_bq_topk", "emb_matryoshka_eval", "dedup_containment", "pipeline_curate",
+      "dedup_semantic", "dedup_minhash_calibration", "text_minhash_decontaminate")
+
+    var failures = 0
+    audits.foreach { case (name, checks) =>
+      val cuts = scala.collection.mutable.ArrayBuffer.empty[String]
+      val df = operators.Checkpoints.observing(qe => if (readsCuts(name)) cuts += planText(qe))(
+        SparkEntry.queries(name)(spark, sfDir))
+      val plan = (planText(df.queryExecution) +: cuts).mkString("\n")
       println(s"== $name")
       checks.foreach { case (label, check) =>
         val ok = check(plan)

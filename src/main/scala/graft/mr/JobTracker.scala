@@ -32,12 +32,13 @@ final class JobTracker(spark: SparkSession) {
       startMs: Long,
       endMs: Long,
       sparkJobs: Int,
-      tasks: Int,
       failure: Option[String] = None,
-      taskDurationsMs: Vector[Long] = Vector.empty,
-      // (executorId, durationMs) pairs — the statsManager.go:117 per-NODE
-      // profile: which worker ran how many tasks, how slow its tail is
+      // one (executorId, durationMs) pair per finished task — the
+      // statsManager.go:117 per-NODE profile: which worker ran how many
+      // tasks, how slow its tail is
       taskExecutors: Vector[(String, Long)] = Vector.empty) {
+    def tasks: Int = taskExecutors.size
+    def taskDurationsMs: Vector[Long] = taskExecutors.map(_._2)
     def wallMs: Long = (if (endMs == 0L) System.currentTimeMillis() else endMs) - startMs
     def taskP50Ms: Long = percentile(taskDurationsMs, 0.50)
     def taskP95Ms: Long = percentile(taskDurationsMs, 0.95)
@@ -95,11 +96,8 @@ final class JobTracker(spark: SparkSession) {
       val group = stageToJob.get(te.stageId)
       if (group != null && te.taskInfo != null) {
         jobs.computeIfPresent(group, (_, st) =>
-          st.copy(
-            tasks = st.tasks + 1,
-            taskDurationsMs = st.taskDurationsMs :+ te.taskInfo.duration,
-            taskExecutors = st.taskExecutors :+
-              ((te.taskInfo.executorId, te.taskInfo.duration))))
+          st.copy(taskExecutors = st.taskExecutors :+
+            ((te.taskInfo.executorId, te.taskInfo.duration))))
       }
     }
   }
@@ -108,7 +106,7 @@ final class JobTracker(spark: SparkSession) {
   /** Launch `body` (which must run Spark action(s)) as a tracked job. */
   def start(body: => Unit): String = {
     val jobId = UUID.randomUUID().toString
-    jobs.put(jobId, JobStats(jobId, "starting", System.currentTimeMillis(), 0L, 0, 0))
+    jobs.put(jobId, JobStats(jobId, "starting", System.currentTimeMillis(), 0L, 0))
     val signal = new CompletableFuture[Unit]()
     finished.put(jobId, signal)
     pool.submit(new Runnable {

@@ -523,7 +523,7 @@ object AnnOps {
     // tiny corpora (specs) train on everything; the sample path is
     // the one that matters at scale
     val sample =
-      Pin.corpus(if (quarter.count() >= PqCodes * 2L) quarter else vecs)
+      Checkpoints.cut(if (quarter.count() >= PqCodes * 2L) quarter else vecs)
     var cb: Codebook = sample
       .orderBy(fnvOf(concat(lit("i"), $"vec_id".cast("string")))
         .bitwiseAND(lit((1L << 20) - 1)), $"vec_id")
@@ -552,7 +552,6 @@ object AnnOps {
       }
       cb = next
     }
-    sample.unpersist()
     cb
   }
 
@@ -793,7 +792,7 @@ object AnnOps {
         .select($"pid", $"vec_id".as("nid"), cosine_sim($"pe", $"embedding").as("sim")),
       RecallPanelK)
       .select($"pid", $"nid", $"rnk".as("re"))
-    val matched = iv.join(ex, Seq("pid", "nid")).localCheckpoint(true)
+    val matched = iv.join(ex, Seq("pid", "nid")).transform(Checkpoints.cut)
     val ks = (1 to RecallPanelK).toDF("k")
     ks.crossJoin(matched)
       .groupBy($"k")
@@ -934,7 +933,7 @@ object AnnOps {
     val assigned = routeWithFrozenQuantizer(s, dir)(
       Tables.embeddings(s, dir).select($"vec_id", $"embedding"))
     val counts = assigned.groupBy($"cell").agg(count(lit(1)).as("n_vecs"))
-      .localCheckpoint(true) // two consumers: the total probe + output
+      .transform(Checkpoints.cut) // two consumers: the total probe + output
     val tot = counts.agg(sum($"n_vecs")).head.getLong(0)
     counts.select($"cell".cast("long").as("cell"), $"n_vecs",
         rnd($"n_vecs".cast("double") * k / tot, 4).as("load"))
@@ -1037,7 +1036,7 @@ object AnnOps {
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding",
         sigHalf($"embedding", 0).as("lo"), sigHalf($"embedding", 32).as("hi"))
-      .transform(Pin.corpus)
+      .transform(Checkpoints.cut)
     val p = emb.where($"vec_id" < NumProbes)
       .select($"vec_id".as("pid"), $"embedding".as("pe"),
         $"lo".as("plo"), $"hi".as("phi"))
@@ -1122,7 +1121,7 @@ object AnnOps {
     val corpus = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding", q.assign($"embedding").as("cell"),
         sigHalf($"embedding", 0).as("lo"), sigHalf($"embedding", 32).as("hi"))
-      .transform(Pin.corpus)
+      .transform(Checkpoints.cut)
     val p = corpus.where($"vec_id" < NumProbes)
       .select($"vec_id".as("pid"), $"embedding".as("pe"),
         $"lo".as("plo"), $"hi".as("phi"))
@@ -1160,7 +1159,7 @@ object AnnOps {
         .select($"pid", $"vec_id".as("nid"),
           cosine_sim($"pe", $"embedding").as("sim")), K)
       .select($"pid", $"nid")
-      .localCheckpoint(true) // K·probes rows, reused by 3 hit joins
+      .transform(Checkpoints.cut) // K·probes rows, reused by 3 hit joins
     val vecs = Tables.embeddings(s, dir)
       .select($"vec_id".as("nid"), $"embedding".as("ne"))
     // hnsw-beam at the same budget (r9 verdict #8): candidates = the
@@ -1186,7 +1185,7 @@ object AnnOps {
       .unionByName(hnswCands.withColumn("method", lit("hnsw_beam")))
       .unionByName(ivfCands.withColumn("method", lit("ivf_only")))
       .unionByName(ivfbqCands.withColumn("method", lit("ivfbq")))
-      .localCheckpoint(true) // two consumers: the rerank + n_cands
+      .transform(Checkpoints.cut) // two consumers: the rerank + n_cands
     val served = graft.plans.TopK.perKey(
       tagged
         .join(vecs, "nid")
@@ -1248,7 +1247,7 @@ object AnnOps {
       orderCols = Seq("sim_r" -> false, "nid" -> true),
       k = K)
       .select($"d", $"pid", $"nid", $"fsim")
-      .transform(Pin.corpus)
+      .transform(Checkpoints.cut)
     val fullTop = topd.where($"d" === MatryoshkaDims.max)
       .select($"pid", $"nid")
     val hits = topd.join(fullTop, Seq("pid", "nid"))

@@ -59,7 +59,7 @@ object Blocking {
     // callers) would evaluate twice, once per branch
     val seq = keyed.select(col("key"), col(idCol))
       .withColumn("__i", row_number().over(w))
-      .localCheckpoint(true)
+      .transform(Checkpoints.cut)
     // a < b within a block ⟹ a is the lower sequence number, so
     // "lower side is an anchor" is exactly "left side drawn from the
     // anchor set" — blocks ≤ cap reduce to the full self-join

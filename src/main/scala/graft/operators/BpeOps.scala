@@ -233,7 +233,7 @@ object BpeOps {
     * disjoint batch in one scan. */
   private[operators] def trainMergeBatches(docs: DataFrame)
       : Seq[Seq[(Long, String, String, String, Long)]] = {
-    var vocab = charVocab(docs).transform(Pin.corpus)
+    var vocab = charVocab(docs).transform(Checkpoints.cut)
     var rank = 0L
     val out = scala.collection.mutable.ArrayBuffer
       .empty[Seq[(Long, String, String, String, Long)]]
@@ -244,10 +244,8 @@ object BpeOps {
           rank += 1
           (rank, a, b, a + b, pc)
         }
-        val prev = vocab
         vocab = applyBatch(vocab, batch.map(p => (p._1, p._2)))
-          .transform(Pin.corpus)
-        prev.unpersist()
+          .transform(Checkpoints.cut)
       }
     }
     out.toSeq

@@ -1,9 +1,14 @@
 package graft.operators
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.QueryExecution
 
-/** Lineage-cut policy for the iterative index builds (suffix
-  * doubling, NSW candidate rounds, span merges).
+/** The one way `src/main` materializes a frame it reads more than
+  * once (index-build rounds, multi-consumer intermediates, reused
+  * corpus frames). A cut is an RDD whose blocks the ContextCleaner
+  * frees once the frame is unreachable; nothing enters the
+  * CacheManager, which every session shares, matches plans by root
+  * path rather than file fingerprint, and never forgets an entry.
   *
   * Default is `localCheckpoint(eager)` — the right call under one
   * driver: zero I/O to a shared store, blocks live on the executors.
@@ -15,11 +20,10 @@ import org.apache.spark.sql.Dataset
   * gone).
   *
   * The escape hatch: set `GRAFT_RELIABLE_CHECKPOINT_DIR` to a
-  * durable scheme path (`hdfs://…`, `s3a://…`) and every cut in the
-  * expensive builds goes through a RELIABLE `checkpoint(eager)` —
-  * blocks re-readable after executor loss, at the cost of a write
-  * per round. Exactly the knob a preemptible-fleet deployment flips;
-  * local runs never pay it.
+  * durable scheme path (`hdfs://…`, `s3a://…`) and every cut goes
+  * through a RELIABLE `checkpoint(eager)` — blocks re-readable after
+  * executor loss, at the cost of a write per cut. Exactly the knob a
+  * preemptible-fleet deployment flips; local runs never pay it.
   */
 object Checkpoints {
   /** Test-visible override (the Fs.overrideIndexRoot discipline). */
@@ -30,6 +34,14 @@ object Checkpoints {
     sys.env.get("GRAFT_RELIABLE_CHECKPOINT_DIR").filter(_.nonEmpty)
 
   def reliableDir: Option[String] = overrideDir.orElse(envDir)
+
+  private val observer = new ThreadLocal[QueryExecution => Unit]
+
+  /** Run `body` with `f` seeing the plan of every frame this thread
+    * cuts, just before the cut runs: a cut prints as `Scan
+    * ExistingRDD`, hiding that plan from its consumer's (PlanAudit). */
+  def observing[A](f: QueryExecution => Unit)(body: => A): A =
+    try { observer.set(f); body } finally observer.remove()
 
   /** Qualify `dir` the way setCheckpointDir records it:
     * `setCheckpointDir` stores the fully qualified path (e.g.
@@ -62,15 +74,18 @@ object Checkpoints {
     * durable store by one frame per cut — deployments flipping
     * GRAFT_RELIABLE_CHECKPOINT_DIR on should set the cleaner conf
     * next to it, or point the dir at a TTL'd bucket prefix. */
-  def cut[T](ds: Dataset[T]): Dataset[T] = reliableDir match {
-    case None => ds.localCheckpoint(true)
-    case Some(dir) =>
-      val sc = ds.sparkSession.sparkContext
-      // compare in QUALIFIED space: getCheckpointDir returns the
-      // fully qualified UUID subdir, so a bare dir never prefixes it
-      val q = qualified(sc, dir)
-      if (!sc.getCheckpointDir.exists(c => c == q || c.startsWith(q + "/")))
-        sc.setCheckpointDir(dir)
-      ds.checkpoint(true)
+  def cut[T](ds: Dataset[T]): Dataset[T] = {
+    Option(observer.get).foreach(_(ds.queryExecution))
+    reliableDir match {
+      case None => ds.localCheckpoint(true)
+      case Some(dir) =>
+        val sc = ds.sparkSession.sparkContext
+        // compare in QUALIFIED space: getCheckpointDir returns the
+        // fully qualified UUID subdir, so a bare dir never prefixes it
+        val q = qualified(sc, dir)
+        if (!sc.getCheckpointDir.exists(c => c == q || c.startsWith(q + "/")))
+          sc.setCheckpointDir(dir)
+        ds.checkpoint(true)
+    }
   }
 }

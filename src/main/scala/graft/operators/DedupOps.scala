@@ -128,7 +128,7 @@ object DedupOps {
   /** MinHash + banded LSH near-dup pairs, verified at jaccard >= 0.5.
     * B=16 bands of r=4 ⇒ candidate threshold ≈ (1/16)^(1/4) ≈ 0.5. */
   val dedupMinhashLsh: QueryFn = (s, dir) => {
-    val docs = docShingles(s, dir).transform(Pin.corpus)
+    val docs = docShingles(s, dir).transform(Checkpoints.cut)
     minhashPairs(docs, tau = 0.5)
   }
 
@@ -145,7 +145,7 @@ object DedupOps {
     * index; this adds two broadcast-able doc→source joins on the
     * PAIR set and a ≤|sources|² agg. */
   val dedupSourceMatrix: QueryFn = (s, dir) => {
-    val docs = docShingles(s, dir).transform(Pin.corpus)
+    val docs = docShingles(s, dir).transform(Checkpoints.cut)
     val pairs = minhashPairs(docs, tau = 0.5)
     val src = graft.Tables.documents(s, dir).select(col("doc_id"), col("source"))
     val counts = src.groupBy(col("source")).agg(count(lit(1)).as("nd"))
@@ -178,7 +178,7 @@ object DedupOps {
     * signature joins — nothing pairwise beyond the candidate set. */
   val dedupMinhashCalibration: QueryFn = (s, dir) => {
     import s.implicits._
-    val docs = docShingles(s, dir).transform(Pin.corpus)
+    val docs = docShingles(s, dir).transform(Checkpoints.cut)
     val sigged = docs.select($"doc_id",
       graft.functions.VectorExpressions
         .minhash_sig($"sh", minhashParams(NumPerms)).as("sig"))
@@ -299,7 +299,7 @@ object DedupOps {
     import s.implicits._
     val geo = simhashGeometryFor(s, dir) // n-aware unless pinned
     val (words, _, tau) = geo
-    val sigs = simhashSigs(Tables.documents(s, dir), geo).transform(Pin.corpus)
+    val sigs = simhashSigs(Tables.documents(s, dir), geo).transform(Checkpoints.cut)
     val pairs = simhashCandidates(sigs, geo)
     val a = sigs.select($"doc_id".as("doc_a") +:
       (0 until words).map(w => col(s"sig$w").as(s"sa$w")): _*)
@@ -382,8 +382,8 @@ object DedupOps {
     val key = dir + graft.mr.Fs.fingerprint(dir + "/documents.parquet") + ":tau50"
     val Seq(pairs, labels) = IndexStore.frames(
       s, "jaccard_cc", key, Seq("pairs", "labels")) {
-      val p = jaccardPairs(docShingles(s, dir).transform(Pin.corpus), tau = 0.5)
-        .localCheckpoint(true)
+      val p = jaccardPairs(docShingles(s, dir).transform(Checkpoints.cut), tau = 0.5)
+        .transform(Checkpoints.cut)
       val universe = Tables.documents(s, dir).select(col("doc_id"))
       val l = connectedComponents(
         p.select(col("doc_a"), col("doc_b")), universe)
@@ -512,7 +512,7 @@ object DedupOps {
     val exDf = ex.join(dfreq, "key")
       .withColumn("pr", row_number().over(byPosting))
       .withColumn("rn", row_number().over(byRarity))
-      .localCheckpoint(true)
+      .transform(Checkpoints.cut)
     val prefix = exDf
       .where(col("rn") <= col("sz") - ceil(col("sz") * tau) + 1)
       .select(col("key"), col("doc_id").as("doc_a"), col("sz").as("sz_a"),
@@ -574,13 +574,13 @@ object DedupOps {
       docs: DataFrame, tau: Double): DataFrame = {
     val keyed = docs.withColumn("fp",
       concat_ws(":", size(col("sh")), xxhash64(col("sh"))))
-    val members = keyed.select(col("fp"), col("doc_id")).transform(Pin.corpus)
-    // reps is deliberately NOT pinned: its consumers recompute the
-    // min-agg, but over the CACHED members frame — four cheap
-    // (fp, doc_id) passes. Pinning the aggregate's OUTPUT instead
+    val members = keyed.select(col("fp"), col("doc_id")).transform(Checkpoints.cut)
+    // reps is deliberately NOT cut: its consumers recompute the
+    // min-agg, but over the cut members frame — four cheap
+    // (fp, doc_id) passes. Caching the aggregate's OUTPUT instead
     // measured 13 s → 29 s at the stress decade (the InMemoryRelation
-    // perturbs join planning inside the eager posting-join checkpoint);
-    // cache the cheap input, let Catalyst replan the tiny aggregate.
+    // perturbed join planning inside the eager posting-join cut);
+    // cut the cheap input, let Catalyst replan the tiny aggregate.
     val reps = members.groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
     val repPairs = containmentPairs(
       keyed.join(reps, Seq("fp", "doc_id")).select(col("doc_id"), col("sh")), tau)
@@ -599,7 +599,7 @@ object DedupOps {
   }
 
   val dedupContainment: QueryFn = (s, dir) =>
-    containmentPairsByContent(docShingles(s, dir).transform(Pin.corpus), tau = 0.6)
+    containmentPairsByContent(docShingles(s, dir).transform(Checkpoints.cut), tau = 0.6)
 
   /** Incremental dedup: a NEW batch (doc_id % 5 == 4, ~20% of the
     * corpus — a deterministic stand-in for "today's partition")
@@ -652,7 +652,7 @@ object DedupOps {
     // doc, so the inner join drops them while `sz` still counts them.
     val newCg = shingled(newDocs)
       .withColumn("cfp", IncrementalIndex.contentFp($"sh"))
-      .transform(Pin.corpus)
+      .transform(Checkpoints.cut)
     val newMembers = newCg.select($"cfp", $"doc_id")
     val newReps = newMembers.groupBy($"cfp").agg(min($"doc_id").as("doc_id"))
     val newSh = newCg.join(newReps, Seq("cfp", "doc_id"))
@@ -838,7 +838,7 @@ object DedupOps {
       .select(greatest(col("doc_a"), col("doc_b")).as("u"),
         least(col("doc_a"), col("doc_b")).as("v"))
       .where(col("u") =!= col("v")).distinct()
-      .localCheckpoint(true)
+      .transform(Checkpoints.cut)
 
     // large-star: every node links its strictly-LARGER neighbors to
     // the minimum of its neighborhood (incl. itself) — long paths
@@ -870,7 +870,7 @@ object DedupOps {
     var rounds = 0
     val maxRounds = 50 // O(log d): 50 covers any graph that fits on disk
     while (!converged && rounds < maxRounds) {
-      val next = smallStar(largeStar(edges)).distinct().localCheckpoint(true)
+      val next = smallStar(largeStar(edges)).distinct().transform(Checkpoints.cut)
       val nextFp = fingerprint(next)
       edges = next
       converged = nextFp == fp
@@ -907,11 +907,11 @@ object DedupOps {
     val docs = Tables.documents(s, dir).select($"doc_id", $"text")
     // stage 1: exact — keep min doc_id per normalized-text fingerprint.
     // exactGroups is consumed three times (survivor join, lineage
-    // join) — cache the small grouped frame, not the raw text.
+    // join) — cut the small grouped frame, not the raw text.
     val withFp = docs.withColumn("fp", md5(graft.functions.Cols.normText($"text")))
     val exactGroups = withFp.groupBy($"fp")
       .agg(min($"doc_id").as("doc_id"), count(lit(1)).as("n_copies"))
-      .transform(Pin.corpus)
+      .transform(Checkpoints.cut)
     val survivors = withFp.join(exactGroups.select($"fp", $"doc_id"), Seq("fp", "doc_id"))
       .select($"doc_id", $"text")
     // stages 2+3 serve from the memoized full-corpus chain
@@ -1005,7 +1005,7 @@ object DedupOps {
   val dedupEmbedding: QueryFn = (s, dir) => {
     import s.implicits._
     val geo = embGeometryFor(s, dir) // n-aware unless pinned
-    val sigged = embSigs(Tables.embeddings(s, dir), geo).transform(Pin.corpus)
+    val sigged = embSigs(Tables.embeddings(s, dir), geo).transform(Checkpoints.cut)
     val pairs = embCandidates(sigged, geo)
     val a = sigged.select($"vec_id".as("vec_a"), $"embedding".as("emb_a"))
     val b = sigged.select($"vec_id".as("vec_b"), $"embedding".as("emb_b"))
@@ -1120,7 +1120,7 @@ object DedupOps {
     val assigned = KMeansOps.assignments(s, dir)
       .select($"vec_id", $"embedding", $"cluster_id",
         pmod($"vec_id", lit(nb.toLong)).as("__semblk"))
-      .transform(Pin.corpus)
+      .transform(Checkpoints.cut)
     val partnerBlocks = array((0 until nb).map(j => lit(j.toLong)): _*)
     // A carries its own block and explodes the PARTNER's; B the
     // mirror — pair (a, b) meets on exactly one (cluster, ba, bb) key

@@ -544,7 +544,7 @@ object EventAnalytics {
     val cents = Tables.events(s, dir)
       .select($"event_type",
         floor($"value" * 100 + 0.5).cast("long").as("c"))
-      .localCheckpoint(true)
+      .transform(Checkpoints.cut)
     val bounds = cents.groupBy($"event_type")
       .agg(count(lit(1)).as("n"), min($"c").as("lo"), max($"c").as("hi"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -642,7 +642,7 @@ object EventAnalytics {
     import s.implicits._
     val du = Tables.events(s, dir)
       .select(to_date($"ts").as("d"), $"user_id").distinct()
-      .localCheckpoint(true)
+      .transform(Checkpoints.cut)
     val firstDay = du.groupBy($"user_id").agg(min($"d").as("d0"))
     val today = du.join(firstDay, "user_id")
     val yesterday = du.select(date_add($"d", 1).as("d"), $"user_id".as("y_uid"))
@@ -686,7 +686,7 @@ object EventAnalytics {
       .where($"p" > $"s0")
       .groupBy($"user_id").agg(min($"p" - $"s0").as("gap_us"))
       .select($"user_id", floor($"gap_us" / lit(60000000L)).cast("long").as("m"))
-      .localCheckpoint(true)
+      .transform(Checkpoints.cut)
     val stats = lat.agg(count(lit(1)).as("n"), min($"m").as("lo"), max($"m").as("hi"))
       .head()
     val (n, lo0, hi0) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
@@ -889,7 +889,7 @@ object EventAnalytics {
     import s.implicits._
     val cents = Tables.events(s, dir)
       .select($"event_type", floor($"value" * 100 + 0.5).cast("long").as("c"))
-      .localCheckpoint(true)
+      .transform(Checkpoints.cut)
     val bounds = cents.groupBy($"event_type")
       .agg(count(lit(1)).as("n"), min($"c").as("lo"), max($"c").as("hi"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -936,7 +936,7 @@ object EventAnalytics {
       .select($"l_returnflag",
         floor($"l_quantity" * 100 + 0.5).cast("long").as("q"),
         floor($"l_extendedprice" * 100 + 0.5).cast("long").as("w"))
-      .localCheckpoint(true)
+      .transform(Checkpoints.cut)
     val bounds = cents.groupBy($"l_returnflag")
       .agg(count(lit(1)).as("n"), sum($"w").as("tw"),
         min($"q").as("lo"), max($"q").as("hi"))
@@ -1173,7 +1173,7 @@ object EventAnalytics {
       .distinct()
     val sk = graft.plans.TopK.perKey(
       hashed, Seq("event_type"), Seq("hu" -> true), KmvAlgK)
-      .localCheckpoint(true) // tiny; read by both pair branches
+      .transform(Checkpoints.cut) // tiny; read by both pair branches
     val types = sk.select($"event_type").distinct()
     val tp = types.select($"event_type".as("ta"))
       .crossJoin(broadcast(types.select($"event_type".as("tb"))))
@@ -1455,13 +1455,13 @@ object EventAnalytics {
     val fp = ev.where($"event_type" === "purchase")
       .groupBy($"user_id")
       .agg(min(struct($"ts", $"event_id")).as("fp"))
-      .localCheckpoint(true) // three consumers below
+      .transform(Checkpoints.cut) // three consumers below
     // pre-conversion journey: non-purchase events strictly before the
     // first purchase (all of them for never-converting users)
     val j = ev.join(fp, Seq("user_id"), "left")
       .where($"event_type" =!= "purchase" &&
         ($"fp".isNull || struct($"ts", $"event_id") < $"fp"))
-      .localCheckpoint(true) // two windows + the empty-journey anti-join
+      .transform(Checkpoints.cut) // two windows + the empty-journey anti-join
     val wAsc = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
     val wDesc = Window.partitionBy($"user_id").orderBy($"ts".desc, $"event_id".desc)
     val stepped = j.select($"user_id", $"event_type".as("cur"),
@@ -1556,7 +1556,7 @@ object EventAnalytics {
       .groupBy($"user_id")
       .agg(date_trunc("hour", min($"ts")).as("f"),
         date_trunc("hour", max($"ts")).as("l"))
-      .localCheckpoint(true) // two consumers: the max-hour probe + users
+      .transform(Checkpoints.cut) // two consumers: the max-hour probe + users
     val ml = ue.agg(max($"l")).head.getTimestamp(0)
     // hour-truncated timestamps ⇒ second diffs are exact multiples
     // of 3600 on both engines (unix_timestamp vs epoch replay)

@@ -70,7 +70,7 @@ object GraphOps {
     // attribute self-join resolution and re-derivation of the edge agg
     sym.join(out, "u")
       .select($"u", $"v", ($"w" / $"wout").as("p"))
-      .localCheckpoint(true)
+      .transform(Checkpoints.cut)
   }
 
   val qPagerank: QueryFn = (s, dir) => {
@@ -185,7 +185,7 @@ object GraphOps {
     * is a TakeOrderedAndProject, not a global sort. */
   val qClusteringCoeff: QueryFn = (s, dir) => {
     import s.implicits._
-    val edges = copurchaseEdges(s, dir).localCheckpoint(true)
+    val edges = copurchaseEdges(s, dir).transform(Checkpoints.cut)
     val deg = edges.select($"u".as("node"))
       .unionByName(edges.select($"v".as("node")))
       .groupBy($"node").agg(count(lit(1)).as("d"))
@@ -303,7 +303,7 @@ object GraphOps {
       : org.apache.spark.sql.DataFrame = {
     val sp = edgesIn.sparkSession
     import sp.implicits._
-    var edges = edgesIn.localCheckpoint(true)
+    var edges = edgesIn.transform(Checkpoints.cut)
     var before = edges.count()
     var changed = true
     var rounds = 0
@@ -316,7 +316,7 @@ object GraphOps {
         .join(keep.select($"node".as("u")), "u")
         .join(keep.select($"node".as("v")), "v")
         .select($"u", $"v")
-        .localCheckpoint(true)
+        .transform(Checkpoints.cut)
       val after = pruned.count()
       changed = after != before
       before = after
@@ -347,7 +347,7 @@ object GraphOps {
       .select(
         when(before, col("u")).otherwise(col("v")).as("src"),
         when(before, col("v")).otherwise(col("u")).as("dst"))
-      .localCheckpoint(true)
+      .transform(Checkpoints.cut)
     val adj = o.groupBy(col("src")).agg(collect_list(col("dst")).as("nbrs"))
     val tris = o
       .join(adj.select(col("src"), col("nbrs").as("na")), "src")
@@ -387,7 +387,7 @@ object GraphOps {
     val e = copurchaseEdges(s, dir)
     val sym = e.select($"u".cast("long").as("u"), $"v".cast("long").as("v"))
     val symBoth = sym.unionByName(sym.select($"v".as("u"), $"u".as("v")))
-      .localCheckpoint(true)
+      .transform(Checkpoints.cut)
     val seedRow = symBoth.agg(min($"u")).head()
     if (seedRow.isNullAt(0))
       // no edges at this scale → empty reach report (typed)
@@ -435,7 +435,7 @@ object GraphOps {
     val und = e0.unionByName(e0.select($"pb".as("pa"), $"pa".as("pb"), $"no"))
       .select($"pa".as("u"), $"pb".as("v"),
         (lit(1.0) / $"no".cast("double")).as("w"))
-      .localCheckpoint(true)
+      .transform(Checkpoints.cut)
     val seedRow = op.agg(min($"l_partkey")).head()
     if (seedRow.isNullAt(0))
       und.select($"u".as("part"), $"w".as("dist")).limit(0)
@@ -447,7 +447,7 @@ object GraphOps {
           .select($"v".as("node"), ($"dist" + $"w").as("dist"))
         dist = dist.unionByName(relaxed)
           .groupBy($"node").agg(min($"dist").as("dist"))
-          .localCheckpoint(true)
+          .transform(Checkpoints.cut)
       }
       dist.select($"node".as("part"), rnd($"dist", 6).as("dist"))
         .orderBy($"part")
@@ -468,10 +468,10 @@ object GraphOps {
       val next = frontier.join(symBoth, frontier("node") === symBoth("u"))
         .select($"v".as("node")).distinct()
         .join(dist, col("node") === dist("l_partkey"), "left_anti")
-        .localCheckpoint(true)
+        .transform(Checkpoints.cut)
       dist = dist
         .unionByName(next.select($"node".as("l_partkey"), lit(h.toLong).as("dist")))
-        .localCheckpoint(true)
+        .transform(Checkpoints.cut)
       frontier = next
     }
     dist
@@ -632,7 +632,7 @@ object GraphOps {
     import s.implicits._
     val e = copurchaseEdges(s, dir)
     val sym = e.unionByName(e.select($"v".as("u"), $"u".as("v")))
-      .localCheckpoint(true)
+      .transform(Checkpoints.cut)
     lpaLabels(sym, LpaRounds)
       .groupBy($"lbl".as("community"))
       .agg(count(lit(1)).as("n_nodes"),
@@ -657,7 +657,7 @@ object GraphOps {
     * node-keyed join for d_c; m rides a 1-row broadcast. */
   val qGraphModularity: QueryFn = (s, dir) => {
     import s.implicits._
-    val e = copurchaseEdges(s, dir).localCheckpoint(true)
+    val e = copurchaseEdges(s, dir).transform(Checkpoints.cut)
     val sym = e.unionByName(e.select($"v".as("u"), $"u".as("v")))
     val fin = lpaLabels(sym, LpaRounds)
     val m = e.agg(count(lit(1)).as("me"))
@@ -695,7 +695,7 @@ object GraphOps {
         .groupBy(col("u"), col("lbl")).agg(count(lit(1)).as("c"))
         .groupBy(col("u")).agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
         .select(col("u").as("node"), (-col("m.nl")).as("lbl"))
-        .localCheckpoint(true)
+        .transform(Checkpoints.cut)
     }
     labels
   }

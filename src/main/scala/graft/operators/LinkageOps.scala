@@ -43,7 +43,7 @@ object LinkageOps {
       s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
     candMemo.getOrElseUpdate(
       s, dir + graft.mr.Fs.fingerprint(dir + "/customer.parquet"),
-      scoredCandidatesUncached(s, dir).localCheckpoint(true))
+      scoredCandidatesUncached(s, dir).transform(Checkpoints.cut))
 
   private def scoredCandidatesUncached(
       s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {

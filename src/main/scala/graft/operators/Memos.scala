@@ -13,9 +13,11 @@ import org.apache.spark.sql.SparkSession
   * collected session can never bequeath its id to a successor, and
   * the map itself holds no session alive.
   *
-  * Eviction: past [[Memo.Cap]] keys the eldest entry is dropped;
-  * dropping the last reference to a checkpointed frame hands its
-  * blocks to Spark's ContextCleaner, which unpersists them on GC — so
+  * Eviction: past [[Memo.Cap]] keys the eldest entry is dropped. A
+  * memoized frame reads parquet or [[Checkpoints.cut]] blocks, never
+  * a CacheManager entry, and dropping the last reference to a cut
+  * frame hands its blocks to Spark's ContextCleaner, which frees them
+  * on GC — so
   * a long-lived session cycling through many corpora is bounded by
   * Cap live entries, not by its uptime. */
 object Memos {

@@ -274,7 +274,7 @@ object ModelOps {
       .select($"user_id", $"b",
         (pmod(h("log"), lit(4L)) + lit(1L)).as("numer"),
         pmod(h("pi"), lit(1024L)).as("score"))
-      .localCheckpoint(true) // three consumers: denom, policy, join
+      .transform(Checkpoints.cut) // three consumers: denom, policy, join
     val denom = arms.groupBy($"user_id").agg(sum($"numer").as("den"))
     val pi = graft.plans.TopK.perKey(
         arms.select($"user_id", $"b", $"score"),

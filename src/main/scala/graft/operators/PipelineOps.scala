@@ -384,7 +384,7 @@ object PipelineOps {
     // regex tokenization and the model agg each run once (guide §5;
     // the plan otherwise re-derived them per consumer: 8 parquet
     // scans / 20 exchanges, plans/r14/text_lm_score_before.txt —
-    // pinning the exploded stream itself A/B'd flat, its persist
+    // pinning the exploded stream itself A/B'd flat, its block
     // write costs what the recompute did)
     val toksd = Tables.documents(s, dir)
       .select($"doc_id", $"lang", normTokens($"text").as("toks"))
@@ -538,7 +538,7 @@ object PipelineOps {
     * check.py enforces a ≥ 5-row floor on this gate row (the r12
     * survival-curve discipline). */
   val textMinhashDecontaminate: QueryFn = (s, dir) =>
-    minhashDecontaminateOver(decontamCorpus(s, dir).transform(Pin.corpus))
+    minhashDecontaminateOver(decontamCorpus(s, dir).transform(Checkpoints.cut))
 
   /** The gate's planted shingle corpus — documents ∪ token-dropout
     * paraphrases; spec-visible so the brute-force equality check
@@ -746,13 +746,13 @@ object PipelineOps {
     val docs = Tables.documents(s, dir).select($"doc_id", $"source", $"lang", $"text")
 
     // stage 1: quality — same predicate as textGopherRules.keep,
-    // computed as a BOOLEAN COLUMN behind a persist barrier rather
+    // computed as a BOOLEAN COLUMN behind a cut barrier rather
     // than a WHERE over the flag expressions: filter pushdown
     // otherwise substitutes the full flag trees into the predicate —
     // ~7 normTokens + 2 wordNgrams evaluations PER ROW (HOFs skip
     // codegen, so no CSE rescues it; measured 8.4 s of the funnel's
     // 11.5 at sf0.1, vs 1.5 s for the identical flags as projection
-    // outputs in text_gopher_rules). The pinned flag frame is the
+    // outputs in text_gopher_rules). The cut flag frame is the
     // funnel's reuse point anyway (quality count + three downstream
     // stages), so the barrier costs nothing extra.
     val flagged = docs
@@ -769,7 +769,7 @@ object PipelineOps {
         ($"n_tokens" >= 20 && $"n_tokens" <= 80 &&
           $"mwl" >= 4.0 && $"mwl" <= 5.0 && $"dup2" <= 0.05 && $"stop_hits" >= 1)
           .as("keep"))
-      .transform(Pin.corpus)
+      .transform(Checkpoints.cut)
     val quality = flagged.where($"keep").select($"doc_id", $"source", $"lang", $"text")
 
     // stage 2: decontamination — benchmark docs (doc_id%10==9) leave
@@ -783,14 +783,14 @@ object PipelineOps {
       .join(broadcast(bench), "ng").select($"doc_id").distinct()
     val decont = quality.where($"doc_id" % 10 =!= 9)
       .join(contaminated, Seq("doc_id"), "left_anti")
-      .transform(Pin.corpus)
+      .transform(Checkpoints.cut)
 
     // stage 3: exact dedup among survivors
     val withFp = decont.withColumn("fp", md5(normText($"text")))
     val exactKeep = withFp.groupBy($"fp").agg(min($"doc_id").as("doc_id"))
     val exact = withFp.join(exactKeep, Seq("fp", "doc_id"))
       .select($"doc_id", $"source", $"lang", $"text")
-      .transform(Pin.corpus)
+      .transform(Checkpoints.cut)
 
     // stage 4: near dedup — the memoized FULL-corpus exact pair set
     // restricted to stage-3 survivors (lossless: the prefix filter is
@@ -1085,7 +1085,7 @@ object PipelineOps {
         rnd(($"n_docs" - $"df" + lit(0.5)) / ($"df" + lit(0.5)) *
           ($"tf" * lit(Bm25K1 + 1)) / denom, 6).as("score_r"),
         rel.as("rel"))
-      .localCheckpoint(true) // two consumers: the ranking + the ideal
+      .transform(Checkpoints.cut) // two consumers: the ranking + the ideal
     // exact integer discounts: 27720/(rank+1), rank 1..10
     val disc = typedLit(Seq(13860L, 9240L, 6930L, 5544L, 4620L,
       3960L, 3465L, 3080L, 2772L, 2520L))

@@ -953,7 +953,7 @@ object RelationalExt {
       .select(substring(($"o_totalprice".cast("decimal(18,2)") * 100)
         .cast("long").cast("string"), 1, 1).as("digit"))
       .groupBy($"digit").agg(count(lit(1)).as("n"))
-      .localCheckpoint(true) // two consumers: total + output
+      .transform(Checkpoints.cut) // two consumers: total + output
     val total = digits.agg(sum($"n")).head.getLong(0)
     digits.select($"digit", $"n",
         // integral `div`, never float division + floor: a quotient a

@@ -94,7 +94,7 @@ object StreamQueries {
     val out = try {
       val q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()
       try q.processAllAvailable() finally q.stop()
-      s.table(name).localCheckpoint(true)
+      s.table(name).transform(Checkpoints.cut)
     } finally s.conf.set("spark.sql.shuffle.partitions", prevWidth)
     s.catalog.dropTempView(name)
     out

@@ -142,7 +142,7 @@ object SupplyOps {
     val pairs = perOrderPairs
       .groupBy($"a", $"b").agg(count(lit(1)).as("sup"))
       .where($"sup" >= 2)
-      .select($"a", $"b").localCheckpoint(true)
+      .select($"a", $"b").transform(Checkpoints.cut)
     // candidate {a,b,c}: frequent {a,b} + frequent {a,c} (b < c),
     // kept only if {b,c} is frequent too (full downward closure)
     val cands = pairs.as("p1")

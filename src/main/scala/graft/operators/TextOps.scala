@@ -1042,7 +1042,7 @@ object TextOps {
     }.toDF("media_id", "hs")
       // pinned: the band explode and BOTH verify joins read this, and
       // each row costs a real encode+decode
-      .localCheckpoint(true)
+      .transform(Checkpoints.cut)
     // band keys under the [[phashGeometry]] dial (default: the
     // historical four 16-bit bands of the one-word 8x8 aHash; wide:
     // four 32-bit bands of the 8x16 grid — same content cells per
@@ -1681,7 +1681,7 @@ object TextOps {
     val bands = bits
       .groupBy($"media_id", ($"pos" / bb).cast("long").as("band"))
       .agg(sum($"bit" * expr(s"shiftleft(1L, pos % $bb)")).as("bv"))
-      .localCheckpoint(true)
+      .transform(Checkpoints.cut)
     val sig = bands.groupBy($"media_id")
       .agg(sort_array(collect_list(struct($"band", $"bv"))).as("sgs"))
       .select($"media_id", expr("transform(sgs, x -> x.bv)").as("sg"))

@@ -79,4 +79,26 @@ class SurveyRegistrySpec extends AnyFunSuite {
       assert(reads.size == 1, s"$v read at: $reads")
     }
   }
+
+  test("src/main materializes a reused frame only through Checkpoints.cut") {
+    def sources(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) sources(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+      }
+    val root = new java.io.File("src/main/scala")
+    val materializers = """localCheckpoint\(|\.checkpoint\(|persist\(|\.cache\(\)|clearCache""".r
+    val pinObject = """\bobject\s+Pin\b""".r
+    val (sites, pins) = sources(root).map { f =>
+      val src = scala.io.Source.fromFile(f)("UTF-8")
+      val text = try src.mkString finally src.close()
+      val path = root.toPath.relativize(f.toPath).toString
+      (Option.when(materializers.findFirstIn(text).isDefined)(path),
+        Option.when(pinObject.findFirstIn(text).isDefined)(path))
+    }.unzip
+    assert(sites.flatten.toSet == Set("graft/operators/Checkpoints.scala"),
+      s"files that materialize frames: ${sites.flatten.sorted}")
+    assert(pins.flatten.isEmpty, s"a Pin object is defined in: ${pins.flatten}")
+    assert(scala.util.Try(Class.forName("graft.operators.Pin$")).isFailure,
+      "graft.operators.Pin is still on the classpath")
+  }
 }

@@ -4,17 +4,25 @@ import java.nio.file.Files
 
 import scala.sys.process._
 
+import org.apache.spark.sql.CachedPlans
+
 import graft.operators.GeometryContext
 
 /** The DuckDB correctness gate under the suite: `Verify.dump` writes
   * every registry row at sf0.001 on the shared session, and
-  * `tools/check.py` compares each against its oracle SQL. */
+  * `tools/check.py` compares each against its oracle SQL. The dump
+  * leaves no entry in the context's CacheManager, which every
+  * session shares and nothing in the program empties. */
 class VerifyGateSpec extends SparkTestBase {
 
   test("every registry row matches its DuckDB oracle at sf0.001") {
     val out = Files.createTempDirectory("graft-verify-gate")
     try {
+      // counted, not isEmpty: earlier specs may leave cached plans
+      val cachedBefore = CachedPlans(spark)
       val dumped = Verify.dump(spark, sfDir, out.toString, None)
+      assert(CachedPlans(spark) == cachedBefore,
+        s"Verify.dump added ${CachedPlans(spark) - cachedBefore} CacheManager entries")
       val log = new StringBuilder
       val exit = Seq("python3", "tools/check.py", sfDir, out.toString) !
         ProcessLogger(l => log ++= l + "\n", l => log ++= l + "\n")

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.functions.transform
+
 import graft.SparkTestBase
 
 /** The reliable-checkpoint escape hatch (r6 verdict #4): with a
@@ -63,5 +65,35 @@ class CheckpointsSpec extends SparkTestBase {
       assert(reliable == local,
         "reliable-checkpoint build diverged from the localCheckpoint build")
     } finally Checkpoints.overrideDir = None
+  }
+
+  test("a corpus file swapped under a served path is read afresh by a new session") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-swap-corpus")
+    val fresh = java.nio.file.Files.createTempDirectory("graft-swap-fresh")
+    val emb = dir.resolve("embeddings.parquet")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sfDir, "embeddings.parquet"), emb)
+    // the second corpus: per-dimension scaling moves the signatures
+    // and the cosine ranking
+    graft.Tables.embeddings(spark, sfDir)
+      .select($"vec_id",
+        transform($"embedding", (x, i) => (x * (i % 5 + 1)).cast("float")).as("embedding"),
+        $"label")
+      .coalesce(1).write.parquet(fresh.resolve("embeddings.parquet").toString)
+    val part = java.nio.file.Files.list(fresh.resolve("embeddings.parquet")).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".parquet")).head
+    def rows(s: org.apache.spark.sql.SparkSession, d: java.nio.file.Path) =
+      AnnOps.annBqTopk(s, d.toString).collect().toSeq.map(_.toString).sorted
+    val first = rows(spark, dir)
+    // a regenerated corpus arrives: the file is replaced outside
+    // Spark's writer, so nothing in Spark hears of it
+    val staged = dir.resolve("embeddings.parquet.next")
+    java.nio.file.Files.copy(part, staged)
+    java.nio.file.Files.move(staged, emb, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    val second = rows(spark.newSession(), dir)
+    assert(second == rows(spark, fresh), "the swapped corpus was served the first corpus' rows")
+    assert(second != first, "the second corpus must rank differently")
   }
 }

@@ -4,7 +4,7 @@
    Compares each <outDir>/<name> parquet against DuckDB running
    oracle_sql.json on the same sfDir tables.
 """
-import json, sys, glob, os
+import json, sys, glob, os, time
 import duckdb
 import pandas as pd
 
@@ -56,6 +56,7 @@ ROW_FLOORS = {
 }
 
 fails, passes = [], []
+replay_s = {}  # per-row DuckDB oracle replay wall time
 for name in sorted(oracle):
     sql = oracle[name]
     pdir = f"{out_dir}/{name}"
@@ -63,10 +64,13 @@ for name in sorted(oracle):
         fails.append((name, "no spark output")); continue
     files = glob.glob(f"{pdir}/*.parquet")
     got = pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)
+    t0 = time.perf_counter()
     try:
         exp = con.sql(sql).df()
     except Exception as e:
         fails.append((name, f"oracle sql error: {e}")); continue
+    finally:
+        replay_s[name] = time.perf_counter() - t0
     got = got.reindex(sorted(got.columns), axis=1)
     exp = exp.reindex(sorted(exp.columns), axis=1)
     if list(got.columns) != list(exp.columns):
@@ -91,6 +95,10 @@ for name in sorted(oracle):
         fails.append((name, str(e).split("\n")[0] +
                       " (first diff: " + first_diff(gs, es) + ")"))
 
+slowest = sorted(replay_s.items(), key=lambda kv: -kv[1])[:10]
+print(f"oracle replay: {sum(replay_s.values()):.1f} s over {len(replay_s)} rows; "
+      "slowest: " + ", ".join(f"{n} {s:.1f} s" for n, s in slowest),
+      file=sys.stderr)
 print(f"PASS {len(passes)}: {' '.join(passes)}")
 for n, msg in fails:
     print(f"FAIL {n}: {msg[:500]}")
