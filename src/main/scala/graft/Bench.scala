@@ -13,7 +13,8 @@ import graft.mr.JobTracker
   * the sbt run was killed mid-list and the round had NO perf
   * artifact):
   *  - each query runs as one [[mr.JobTracker.run]] job, cancelled
-  *    after SPARK_GRAFT_QUERY_TIMEOUT ([[Driver.queryTimeoutMs]]);
+  *    after SPARK_GRAFT_QUERY_TIMEOUT ([[Driver.queryTimeoutMs]]); a row's
+  *    seconds are its `JobStats.wallMs` (hand-off and listener drain included);
   *  - a global deadline (SPARK_GRAFT_BENCH_BUDGET, default 480 s of
   *    query time) skips the remainder rather than blowing the budget,
   *    so the final stdout JSON line always lands;
@@ -162,18 +163,13 @@ object Bench {
             .write.format("noop").mode("overwrite").save()
       }
 
-    /** Seconds `force(name)` took, as a tracked job cancelled at the
-      * row timeout; throws with the job's failure cause. */
+    /** Seconds `force(name)` took as a tracked job cancelled at the
+      * row timeout (its `wallMs`); throws with the job's failure cause. */
     val tracker = new JobTracker(spark)
     def timedRun(name: String): Double = {
-      @volatile var secs = 0.0
-      val st = tracker.run({
-        val t0 = System.nanoTime()
-        force(name)
-        secs = (System.nanoTime() - t0) / 1e9
-      }, Driver.queryTimeoutMs)
+      val st = tracker.run(force(name), Driver.queryTimeoutMs)
       st.failure.foreach(f => throw new RuntimeException(f))
-      secs
+      st.wallMs / 1e3
     }
 
     val partial = new java.io.PrintWriter(

@@ -14,10 +14,12 @@ import org.apache.spark.sql.SparkSession
   *   Run(body, timeout)       (start, await, kill at the timeout, done)
   *   Status(jobId) → Boolean  (isCompleted)
   *   Done(jobId)              (frees tracking state)
-  *   Stats(jobId)             (wall time, Spark job and launched-task counts,
-  *                             per-task duration p50/p95 — the
-  *                             statsManager.go:30 per-task timings —
-  *                             and the failure cause when one exists)
+  *   Stats(jobId)             ([[JobStats]]: status, wall time, Spark job
+  *                             count, failure cause, and per finished task
+  *                             — the statsManager.go:30 per-task timings —
+  *                             executor, duration, map or result task, run
+  *                             and GC time, shuffle-write bytes and records,
+  *                             spill; final once the job is terminal)
   *
   * Scheduling, retry, and failure detection — which the reference
   * implements with pings and task reassignment (mapreduce.go:347) —
@@ -26,6 +28,9 @@ import org.apache.spark.sql.SparkSession
   */
 final class JobTracker(spark: SparkSession) {
 
+  final case class TaskStats(executorId: String, durationMs: Long, isMap: Boolean,
+      runMs: Long, gcMs: Long, shuffleBytes: Long, shuffleRecords: Long, spillBytes: Long)
+
   final case class JobStats(
       jobId: String,
       status: String, // starting | working | completed | failed
@@ -33,12 +38,10 @@ final class JobTracker(spark: SparkSession) {
       endMs: Long,
       sparkJobs: Int,
       failure: Option[String] = None,
-      // one (executorId, durationMs) pair per finished task — the
-      // statsManager.go:117 per-NODE profile: which worker ran how many
-      // tasks, how slow its tail is
-      taskExecutors: Vector[(String, Long)] = Vector.empty) {
-    def tasks: Int = taskExecutors.size
-    def taskDurationsMs: Vector[Long] = taskExecutors.map(_._2)
+      taskStats: Vector[TaskStats] = Vector.empty) {
+    def terminal: Boolean = status == "completed" || status == "failed"
+    def tasks: Int = taskStats.size
+    def taskDurationsMs: Vector[Long] = taskStats.map(_.durationMs)
     def wallMs: Long = (if (endMs == 0L) System.currentTimeMillis() else endMs) - startMs
     def taskP50Ms: Long = percentile(taskDurationsMs, 0.50)
     def taskP95Ms: Long = percentile(taskDurationsMs, 0.95)
@@ -47,57 +50,61 @@ final class JobTracker(spark: SparkSession) {
       * (task count, p50 ms, p95 ms). On a real cluster this is the
       * straggler-spotting panel; on local[32] it is one row ("driver"). */
     def executorProfile: Map[String, (Int, Long, Long)] =
-      taskExecutors.groupBy(_._1).map { case (exec, ts) =>
-        val ds = ts.map(_._2)
+      taskStats.groupBy(_.executorId).map { case (exec, ts) =>
+        val ds = ts.map(_.durationMs)
         exec -> ((ds.size, percentile(ds, 0.50), percentile(ds, 0.95)))
       }
+    // nearest rank; 0 when there are no tasks
     private def percentile(xs: Vector[Long], q: Double): Long =
-      if (xs.isEmpty) 0L
-      else {
-        val sorted = xs.sorted
-        sorted(math.min(sorted.size - 1, math.ceil(q * sorted.size).toInt - 1).max(0))
-      }
+      xs.sorted.lift((math.ceil(q * xs.size).toInt - 1).max(0)).getOrElse(0L)
   }
 
-  private val jobs = new ConcurrentHashMap[String, JobStats]()
-  // stage → owning job group, so task-end events (which carry only a
-  // stageId) can be attributed to the tracked job
-  private val stageToJob = new ConcurrentHashMap[Int, String]()
-  // Spark job → owning group while the listener has seen its start but
-  // not its end; the worker waits for a group's entries to drain so its
-  // stats are complete before the job is reported terminal
-  private val openSparkJobs = new ConcurrentHashMap[Int, String]()
-  // completed by the worker once the job's terminal state is recorded
-  private val finished = new ConcurrentHashMap[String, CompletableFuture[Unit]]()
-  // jobs whose cancel was requested; see [[cancel]]
-  private val cancelled = ConcurrentHashMap.newKeySet[String]()
+  // One tracked job. Its stats change under its lock, and only until it
+  // is terminal. `open` (Spark jobs whose start the listener saw, not yet
+  // their end) and `stages` are its index entries while it runs.
+  private final class Tracked(@volatile var stats: JobStats) {
+    @volatile var cancelled = false
+    val finished = new CompletableFuture[JobStats]()
+    val open, stages = collection.mutable.Set.empty[Int]
+  }
+
+  private val jobs = new ConcurrentHashMap[String, Tracked]()
+  // task-end events carry only a stage id and job-end events only a
+  // Spark job id; these find the running job they belong to
+  private val byStage = new ConcurrentHashMap[Int, Tracked]()
+  private val bySparkJob = new ConcurrentHashMap[Int, Tracked]()
   private val pool = Executors.newCachedThreadPool()
 
   private val listener = new SparkListener {
-    override def onJobStart(js: SparkListenerJobStart): Unit = {
-      val group = Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-      if (group != null && cancelled.contains(group))
-        spark.sparkContext.cancelJob(js.jobId, s"part of cancelled job group $group")
-      if (group != null && jobs.containsKey(group)) {
-        js.stageInfos.foreach(si => stageToJob.put(si.stageId, group))
-        openSparkJobs.put(js.jobId, group)
-        jobs.computeIfPresent(group, (_, st) => st.copy(
-          status = "working",
-          sparkJobs = st.sparkJobs + 1))
-      }
-    }
+    override def onJobStart(js: SparkListenerJobStart): Unit =
+      Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .flatMap(group => Option(jobs.get(group))).foreach { t =>
+          if (t.cancelled)
+            spark.sparkContext.cancelJob(js.jobId, s"part of cancelled job group ${t.stats.jobId}")
+          t.synchronized { if (!t.stats.terminal) {
+            js.stageInfos.foreach { si => byStage.put(si.stageId, t); t.stages += si.stageId }
+            bySparkJob.put(js.jobId, t)
+            t.open += js.jobId
+            t.stats = t.stats.copy(status = "working", sparkJobs = t.stats.sparkJobs + 1)
+          } }
+        }
     override def onJobEnd(je: SparkListenerJobEnd): Unit =
-      if (openSparkJobs.remove(je.jobId) != null) openSparkJobs.synchronized {
-        openSparkJobs.notifyAll()
+      Option(bySparkJob.remove(je.jobId)).foreach { t =>
+        t.synchronized { t.open -= je.jobId; t.notifyAll() }
       }
     // counted per finished task, not from the job's stage list: stages
     // skipped because their output already exists launch no tasks
     override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val group = stageToJob.get(te.stageId)
-      if (group != null && te.taskInfo != null) {
-        jobs.computeIfPresent(group, (_, st) =>
-          st.copy(taskExecutors = st.taskExecutors :+
-            ((te.taskInfo.executorId, te.taskInfo.duration))))
+      val t = byStage.get(te.stageId)
+      if (t != null && te.taskInfo != null) {
+        val m = Option(te.taskMetrics) // absent when a task fails before reporting any
+        val task = TaskStats(te.taskInfo.executorId, te.taskInfo.duration,
+          te.taskType == "ShuffleMapTask", m.fold(0L)(_.executorRunTime), m.fold(0L)(_.jvmGCTime),
+          m.fold(0L)(_.shuffleWriteMetrics.bytesWritten),
+          m.fold(0L)(_.shuffleWriteMetrics.recordsWritten), m.fold(0L)(_.diskBytesSpilled))
+        t.synchronized {
+          if (!t.stats.terminal) t.stats = t.stats.copy(taskStats = t.stats.taskStats :+ task)
+        }
       }
     }
   }
@@ -106,46 +113,45 @@ final class JobTracker(spark: SparkSession) {
   /** Launch `body` (which must run Spark action(s)) as a tracked job. */
   def start(body: => Unit): String = {
     val jobId = UUID.randomUUID().toString
-    jobs.put(jobId, JobStats(jobId, "starting", System.currentTimeMillis(), 0L, 0))
-    val signal = new CompletableFuture[Unit]()
-    finished.put(jobId, signal)
-    pool.submit(new Runnable {
-      override def run(): Unit = {
-        spark.sparkContext.setJobGroup(jobId, s"graft-mr-$jobId", interruptOnCancel = true)
-        try {
-          // keep the cause: the reference surfaces job failure state
-          // to Status() pollers, and a swallowed message made the r2
-          // tracker useless for diagnosing WHY (VERDICT r2 item 3)
-          val failure =
-            try { body; None }
-            catch {
-              case e: Throwable => Some(Option(e.getMessage).getOrElse(e.getClass.getName))
-            }
-          awaitListener(jobId)
-          jobs.computeIfPresent(jobId, (_, st) => st.copy(
-            status = if (failure.isEmpty) "completed" else "failed",
-            endMs = System.currentTimeMillis(), failure = failure))
-        } finally {
-          spark.sparkContext.clearJobGroup()
-          signal.complete(())
-        }
+    val t = new Tracked(JobStats(jobId, "starting", System.currentTimeMillis(), 0L, 0))
+    jobs.put(jobId, t)
+    pool.execute { () =>
+      spark.sparkContext.setJobGroup(jobId, s"graft-mr-$jobId", interruptOnCancel = true)
+      try {
+        // keep the cause: the reference surfaces job failure state
+        // to Status() pollers, and a swallowed message made the r2
+        // tracker useless for diagnosing WHY (VERDICT r2 item 3)
+        val failure =
+          try { body; None }
+          catch {
+            case e: Throwable => Some(Option(e.getMessage).getOrElse(e.getClass.getName))
+          }
+        finish(t, failure)
+      } finally {
+        spark.sparkContext.clearJobGroup()
+        t.finished.complete(t.stats)
       }
-    })
+    }
     jobId
   }
 
-  /** Listener events are delivered asynchronously, but Spark posts a
+  /** Record the terminal state and drop the job's index entries.
+    * Listener events are delivered asynchronously, but Spark posts a
     * job's task-end events before its job-end event, and both before
     * the action returns. Waiting until every Spark job of the group
     * whose start the listener saw has also ended therefore makes the
     * job's stats complete before it is reported terminal. Bounded, so
     * a stalled listener bus can only delay the report. */
-  private def awaitListener(jobId: String): Unit = {
+  private def finish(t: Tracked, failure: Option[String]): Unit = t.synchronized {
     val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(2)
-    openSparkJobs.synchronized {
-      while (openSparkJobs.containsValue(jobId) && System.nanoTime() < deadline)
-        openSparkJobs.wait(math.max(1L, TimeUnit.NANOSECONDS.toMillis(deadline - System.nanoTime())))
-    }
+    while (t.open.nonEmpty && System.nanoTime() < deadline)
+      t.wait(math.max(1L, TimeUnit.NANOSECONDS.toMillis(deadline - System.nanoTime())))
+    t.stats = t.stats.copy(status = if (failure.isEmpty) "completed" else "failed",
+      endMs = System.currentTimeMillis(), failure = failure)
+    // conditional: a later job may own a stage this one also listed
+    t.stages.foreach(byStage.remove(_, t))
+    t.open.foreach(bySparkJob.remove(_, t))
+    t.stages.clear(); t.open.clear()
   }
 
   /** Per-job cancel — parity with the reference's `Kill()`
@@ -162,33 +168,26 @@ final class JobTracker(spark: SparkSession) {
     * an unknown or already-terminal job is a no-op (idempotent, like
     * calling Kill on a dead node). */
   def cancel(jobId: String): Unit =
-    if (Option(jobs.get(jobId)).exists(s =>
-        s.status == "starting" || s.status == "working")) {
-      cancelled.add(jobId)
+    Option(jobs.get(jobId)).filterNot(_.stats.terminal).foreach { t =>
+      t.cancelled = true
       spark.sparkContext.cancelJobGroupAndFutureJobs(jobId)
     }
 
   /** Parity with MapReduceNode.Status — has the job completed? */
-  def status(jobId: String): Boolean =
-    Option(jobs.get(jobId)).exists(s => s.status == "completed" || s.status == "failed")
+  def status(jobId: String): Boolean = stats(jobId).exists(_.terminal)
 
-  def stats(jobId: String): Option[JobStats] = Option(jobs.get(jobId))
+  def stats(jobId: String): Option[JobStats] = Option(jobs.get(jobId)).map(_.stats)
 
   /** Parity with MapReduceNode.Done — release tracking state. */
-  def done(jobId: String): Unit = {
-    jobs.remove(jobId)
-    finished.remove(jobId)
-    cancelled.remove(jobId)
-    stageToJob.entrySet().removeIf(e => e.getValue == jobId)
-  }
+  def done(jobId: String): Unit = jobs.remove(jobId)
 
   /** Block until the job completes or `timeoutMs` passes; returns
     * [[status]]. Wakes on the worker's completion signal rather than
     * polling (the reference's test polls Status in a sleep loop,
     * pkg_test.go:73). */
   def await(jobId: String, timeoutMs: Long = 120000L): Boolean = {
-    Option(finished.get(jobId)).foreach { f =>
-      try f.get(timeoutMs, TimeUnit.MILLISECONDS)
+    Option(jobs.get(jobId)).foreach { t =>
+      try t.finished.get(timeoutMs, TimeUnit.MILLISECONDS)
       catch { case _: TimeoutException => () }
     }
     status(jobId)
@@ -199,10 +198,12 @@ final class JobTracker(spark: SparkSession) {
   def run(body: => Unit, timeoutMs: Long): JobStats = {
     val jobId = start(body)
     try {
-      if (!await(jobId, timeoutMs)) { cancel(jobId); finished.get(jobId).get() }
-      jobs.get(jobId)
+      if (!await(jobId, timeoutMs)) cancel(jobId)
+      jobs.get(jobId).finished.get()
     } finally done(jobId)
   }
+
+  private[mr] def sizes: (Int, Int, Int) = (jobs.size, byStage.size, bySparkJob.size) // records, index entries
 
   def shutdown(): Unit = {
     pool.shutdown()

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -31,15 +30,18 @@ import graft.functions.Cols.{rnd, xsum}
   * anywhere); reads are the vectorized sources with pushdown —
   * `src_partitioned_sink` must show `PartitionFilters` (pruning at
   * the manifest, the 100 TB table-layout contract) and the csv read
-  * pushes its filter into the scan. Temp dirs are per-sfDir and
-  * rewritten (`overwrite`) each run, so re-runs and concurrent SFs
-  * never cross-contaminate.
+  * pushes its filter into the scan. Temp dirs are per SparkContext and
+  * per sfDir ([[ioDir]]) and rewritten (`overwrite`) each run, so only
+  * two concurrent runs of one row in one JVM can collide.
   */
 object SourceSinkOps {
   import graft.SparkEntry.QueryFn
 
-  private def ioDir(sfDir: String, leaf: String): String =
-    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+  // under Spark's driver temp dir: one per SparkContext, so no other
+  // JVM writes there, and deleted only when the context stops, after
+  // the returned frames (which read these files lazily) are done
+  private[graft] def ioDir(sfDir: String, leaf: String): String =
+    java.nio.file.Paths.get(org.apache.spark.SparkFiles.getRootDirectory(),
       "graft-io-" + graft.mr.Fs.pathKey(sfDir), leaf).toString
 
   /** lineitem → headered CSV → schema'd read (filter pushed to the

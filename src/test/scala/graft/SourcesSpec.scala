@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.FileTime
 
 import org.apache.spark.sql.functions._
 
@@ -166,6 +167,22 @@ class SourcesSpec extends SparkTestBase {
       .anyMatch(k => k.contains("/orders/") && k.endsWith(".parquet")))
   }
 
+  test("src_* rows write under a directory this JVM created, not a host-wide one") {
+    operators.SourceSinkOps.srcCsvRoundtrip(spark, sfDir).collect()
+    val out = Paths.get(operators.SourceSinkOps.ioDir(sfDir, "lineitem_csv"))
+    assert(Files.isDirectory(out), s"$out was not written")
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    // the per-scale-factor dir that every JVM on the host used to share
+    val shared = tmp.resolve("graft-io-" + graft.mr.Fs.pathKey(sfDir))
+    assert(!out.startsWith(shared), s"$out is under the shared $shared")
+    // out is <root>/graft-io-<sf>/<leaf>, and the root is this JVM's own
+    val root = out.getParent.getParent
+    assert(root != tmp, s"$root is the host-wide temp dir")
+    val jvmStart = java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
+    assert(Files.getAttribute(root, "creationTime").asInstanceOf[FileTime].toMillis >= jvmStart,
+      s"$root predates this JVM")
+  }
+
   test("src_sequencefile round-trips every row through mixed-codec containers") {
     import org.apache.hadoop.io.{LongWritable, Text}
     import spark.implicits._
@@ -173,11 +190,10 @@ class SourcesSpec extends SparkTestBase {
     // keys deflate) and returns the rollup — then re-read at ROW
     // grain and prove the full key→payload set survived losslessly
     operators.SourceSinkOps.srcSequenceFile(spark, sfDir).collect()
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-io-" + graft.mr.Fs.pathKey(sfDir)).toString
+    val plain = operators.SourceSinkOps.ioDir(sfDir, "orders_seq_plain")
+    val deflate = operators.SourceSinkOps.ioDir(sfDir, "orders_seq_defl")
     val back = spark.sparkContext
-      .sequenceFile(s"$base/orders_seq_plain,$base/orders_seq_defl",
+      .sequenceFile(s"$plain,$deflate",
         classOf[LongWritable], classOf[Text])
       .map { case (k, v) => (k.get, v.toString) }
       .collect().toMap
@@ -195,8 +211,8 @@ class SourcesSpec extends SparkTestBase {
     def parts(d: String) = fs.listStatus(
         new org.apache.hadoop.fs.Path(d))
       .filter(_.getPath.getName.startsWith("part-")).map(_.getPath)
-    assert(parts(s"$base/orders_seq_plain").nonEmpty)
-    val defl = parts(s"$base/orders_seq_defl")
+    assert(parts(plain).nonEmpty)
+    val defl = parts(deflate)
     assert(defl.nonEmpty)
     val head = new Array[Byte](256)
     val in = fs.open(defl.head)

@@ -72,6 +72,10 @@ class SurveyRegistrySpec extends AnyFunSuite {
     val groupOwners = sites("""setJobGroup|cancelJobGroup\w*""").toSet
     assert(groupOwners == Set("graft/mr/JobTracker.scala"),
       s"files naming setJobGroup/cancelJobGroup*: ${groupOwners.toSeq.sorted}")
+    // and one source of job statistics: the tracker's listener
+    val listeners = sites("""SparkListener|addSparkListener""").toSet
+    assert(listeners == Set("graft/mr/JobTracker.scala"),
+      s"files naming SparkListener/addSparkListener: ${listeners.toSeq.sorted}")
     val builders = sites("""SparkSession\s*\.\s*builder""")
     assert(builders.size == 1, s"SparkSession.builder sites: $builders")
     Seq("SPARK_GRAFT_CPUS", "SPARK_GRAFT_QUERY_TIMEOUT").foreach { v =>
