@@ -15,7 +15,7 @@ import graft.mr.JobTracker
   *  - each query runs as one [[mr.JobTracker.run]] job, cancelled
   *    after SPARK_GRAFT_QUERY_TIMEOUT ([[Driver.queryTimeoutMs]]); a row's
   *    seconds are its `JobStats.wallMs` (hand-off and listener drain included);
-  *  - a global deadline (SPARK_GRAFT_BENCH_BUDGET, default 480 s of
+  *  - a global deadline (SPARK_GRAFT_BENCH_BUDGET, default 560 s of
   *    query time) skips the remainder rather than blowing the budget,
   *    so the final stdout JSON line always lands;
   *  - per-query timings flush incrementally to stderr and to

@@ -16,13 +16,16 @@ object Driver {
 
   /** A local session with `cpus` cores. Unreliable mode
     * (`GRAFT_CHAOS` > 0, [[mr.Chaos]]) gets 4 task attempts; a clean
-    * run keeps fail-fast, so a real bug cannot retry invisibly. */
+    * run keeps fail-fast, so a real bug cannot retry invisibly. A
+    * NANOS parquet timestamp loads as Long ([[Tables.normalizeTs]]).
+    * Registry code changes no setting of the session it is handed. */
   def session(cpus: Int = cpus): SparkSession = {
     val s = SparkSession.builder()
       .master(if (mr.Chaos.rate > 0) s"local[$cpus, 4]" else s"local[$cpus]")
       .config("spark.plugins", "graft.mr.ChaosPlugin")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -50,7 +50,7 @@ object Tables {
   /** Normalize the events `ts` column to a first-class TimestampType
     * (for window/watermark use) regardless of how the parquet surfaced
     * it. The generator has shipped `ts` as TIMESTAMP(NANOS) (loads as
-    * raw Long under the legacy flag → truncate to µs, the same
+    * raw Long under [[Driver.session]]'s legacy flag → truncate to µs, the same
     * truncation DuckDB applies) and as TIMESTAMP(MICROS,
     * isAdjustedToUTC=false) (loads as TIMESTAMP_NTZ under Spark 4's
     * NTZ inference → reinterpret in the session TZ, which every graft
@@ -65,11 +65,8 @@ object Tables {
       throw new IllegalStateException(s"unsupported events.ts dtype: $other")
   }
 
-  def events(s: SparkSession, d: String): DataFrame = {
-    // harmless where ts is already µs; makes NANOS images load ts as Long
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(load(s, d, "events"))
-  }
+  /** A NANOS `ts` loads only on a session built like [[Driver.session]]. */
+  def events(s: SparkSession, d: String): DataFrame = normalizeTs(load(s, d, "events"))
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 }

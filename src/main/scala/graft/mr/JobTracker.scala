@@ -24,7 +24,9 @@ import org.apache.spark.sql.SparkSession
   * Scheduling, retry, and failure detection — which the reference
   * implements with pings and task reassignment (mapreduce.go:347) —
   * belong to the Spark scheduler; this class only *observes* it via a
-  * SparkListener keyed on the job group, which only this class sets.
+  * SparkListener keyed on a job tag, which only this class sets: a
+  * stream's micro-batch jobs keep the tag of the thread that started
+  * the stream, but not its job group (kept for `spark.jobGroup.id` readers).
   */
 final class JobTracker(spark: SparkSession) {
 
@@ -77,10 +79,10 @@ final class JobTracker(spark: SparkSession) {
 
   private val listener = new SparkListener {
     override def onJobStart(js: SparkListenerJobStart): Unit =
-      Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        .flatMap(group => Option(jobs.get(group))).foreach { t =>
+      Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.tags"))).toSeq
+        .flatMap(_.split(",")).flatMap(tag => Option(jobs.get(tag))).headOption.foreach { t =>
           if (t.cancelled)
-            spark.sparkContext.cancelJob(js.jobId, s"part of cancelled job group ${t.stats.jobId}")
+            spark.sparkContext.cancelJob(js.jobId, s"part of cancelled job ${t.stats.jobId}")
           t.synchronized { if (!t.stats.terminal) {
             js.stageInfos.foreach { si => byStage.put(si.stageId, t); t.stages += si.stageId }
             bySparkJob.put(js.jobId, t)
@@ -117,6 +119,7 @@ final class JobTracker(spark: SparkSession) {
     jobs.put(jobId, t)
     pool.execute { () =>
       spark.sparkContext.setJobGroup(jobId, s"graft-mr-$jobId", interruptOnCancel = true)
+      spark.sparkContext.addJobTag(jobId)
       try {
         // keep the cause: the reference surfaces job failure state
         // to Status() pollers, and a swallowed message made the r2
@@ -128,6 +131,7 @@ final class JobTracker(spark: SparkSession) {
           }
         finish(t, failure)
       } finally {
+        spark.sparkContext.removeJobTag(jobId)
         spark.sparkContext.clearJobGroup()
         t.finished.complete(t.stats)
       }
@@ -138,7 +142,7 @@ final class JobTracker(spark: SparkSession) {
   /** Record the terminal state and drop the job's index entries.
     * Listener events are delivered asynchronously, but Spark posts a
     * job's task-end events before its job-end event, and both before
-    * the action returns. Waiting until every Spark job of the group
+    * the action returns. Waiting until every Spark job with the tag
     * whose start the listener saw has also ended therefore makes the
     * job's stats complete before it is reported terminal. Bounded, so
     * a stalled listener bus can only delay the report. */
@@ -157,11 +161,11 @@ final class JobTracker(spark: SparkSession) {
   /** Per-job cancel — parity with the reference's `Kill()`
     * (mapreduce.go:385), re-expressed for Spark's execution model:
     * the reference tears a whole NODE down and lets ping-reassign
-    * clean up; here a tracked job is one job group, and
+    * clean up; here a tracked job is one job group and tag, and
     * `cancelJobGroupAndFutureJobs` interrupts every Spark job it owns
     * and refuses its later ones (job ids are fresh UUIDs: a group is
-    * never reused). Spark refuses only result jobs, so the listener
-    * also cancels the AQE map-stage jobs that start in the group. The
+    * never reused). Spark refuses only result jobs of the group, so the
+    * listener cancels any other job that starts with the tag. The
     * worker thread's failure path then records the terminal state,
     * so pollers see `failed` with the cancellation cause — cancel
     * requests the stop, the normal lifecycle reports it. Cancelling
@@ -171,6 +175,7 @@ final class JobTracker(spark: SparkSession) {
     Option(jobs.get(jobId)).filterNot(_.stats.terminal).foreach { t =>
       t.cancelled = true
       spark.sparkContext.cancelJobGroupAndFutureJobs(jobId)
+      spark.sparkContext.cancelJobsWithTag(jobId)
     }
 
   /** Parity with MapReduceNode.Status — has the job completed? */

@@ -807,13 +807,14 @@ object AnnOps {
     * `spark.sql` user gets the native codegen [[graft.functions
     * .CosineSim]] without touching the Scala DSL (the
     * `GraftExtensions` injection path, exercised imperatively so a
-    * plain gate session works). Shares `ann_bruteforce_topk`'s
-    * oracle verbatim: same plan class, same result, different
-    * front door. */
+    * plain gate session works; on a clone of `s`). Shares
+    * `ann_bruteforce_topk`'s oracle verbatim: same plan class, same
+    * result, different front door. */
   val qSqlCosineTopk: QueryFn = (s, dir) => {
-    graft.functions.VectorExpressions.register(s)
-    Tables.embeddings(s, dir).createOrReplaceTempView("emb_v")
-    s.sql(
+    val child = org.apache.spark.sql.graft.ColumnBridge.cloneSession(s)
+    graft.functions.VectorExpressions.register(child)
+    Tables.embeddings(child, dir).createOrReplaceTempView("emb_v")
+    child.sql(
       s"""WITH probes AS (SELECT vec_id AS pid, embedding AS pe FROM emb_v WHERE vec_id < ${NumProbes}),
          |cands AS (
          |  SELECT pid, e.vec_id AS nid, cosine_sim(pe, e.embedding) AS sim

@@ -562,14 +562,11 @@ object RelationalExt {
     * expressions via injectFunction, operators via
     * injectOptimizerRule + strategy. */
   val qSqlTopkRewrite: QueryFn = (s, dir) => {
-    // demo runs in a CLONED session (shared SparkContext, isolated
-    // experimental methods + temp views): registering the rewrite on
-    // the shared session would silently re-plan every later query in
-    // the run that matches the Filter(rn<=k)-over-row_number idiom,
-    // making plan audits and bench timings order-dependent. Snapshot/
-    // restore can't work here — `sql()` optimizes lazily, so the rule
-    // must still be registered when the gate executes the frame.
-    val s2 = s.newSession()
+    // the rule and the view go on a clone of `s`, which the frame
+    // plans on: on `s` the rule would re-plan every later query that
+    // matches the Filter(rn<=k)-over-row_number idiom, and `sql()`
+    // optimizes lazily, so it must outlive this call
+    val s2 = org.apache.spark.sql.graft.ColumnBridge.cloneSession(s)
     graft.plans.TopK.enableRewrite(s2)
     Tables.events(s2, dir).createOrReplaceTempView("events_v")
     s2.sql(

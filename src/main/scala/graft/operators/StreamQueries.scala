@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.Tables
 import graft.functions.Cols.rnd
@@ -58,11 +59,8 @@ object StreamQueries {
     * cost, never content — and each gate face starts from a fresh
     * temp checkpoint, so no checkpoint ever sees two widths. */
   private def stateParts(s: SparkSession, srcDir: String): Int = {
-    // r14 ADVICE: sum RECURSIVELY (a nested landing dir undercounted
-    // bytes) and clamp in LONG space BEFORE narrowing — the old
-    // (bytes / 32MB).toInt overflowed the Long.MaxValue error
-    // fallback to a negative int, clamping the intended-conservative
-    // fallback to the 4-partition floor instead of the session width
+    // recursive (landing dirs nest); clamped in Long space, so the
+    // unreadable-dir fallback lands on the session width
     val bytes =
       try {
         def walk(f: java.io.File): Long =
@@ -77,27 +75,22 @@ object StreamQueries {
   }
 
   /** Run a finite streaming query to completion into a memory sink
-    * and return the sink rows. Drops any previous run's sink view
-    * first so re-runs in one session (Verify then Bench) are clean.
-    * The rows are pinned into SPILLABLE block storage and the sink
-    * view dropped before returning (r9): a memory sink left
-    * registered holds its rows on the driver heap for the rest of
-    * the JVM, and thirteen faces of that stack up in one bench
-    * process — the stress run OOMed at 73 rows before this.
-    * `srcDir` feeds [[stateParts]]; the session width is restored
-    * after the stream stops so batch plans never see the dial. */
+    * and return the sink rows, planned on `s`. The stream and its
+    * sink view run on a clone of `s` with [[stateParts]] shuffle
+    * partitions, so `s` never sees that width and concurrent runs do
+    * not collide. The rows are pinned into SPILLABLE block storage
+    * and the sink view dropped before returning (r9): a registered
+    * memory sink holds its rows on the driver heap, and thirteen of
+    * them OOMed the stress run at 73 rows. */
   private def runToTable(s: SparkSession, name: String, df: DataFrame,
       mode: String, srcDir: String): DataFrame = {
-    s.catalog.dropTempView(name)
-    val prevWidth = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", stateParts(s, srcDir).toString)
-    val out = try {
-      val q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(name).transform(Checkpoints.cut)
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevWidth)
-    s.catalog.dropTempView(name)
-    out
+    val child = ColumnBridge.cloneSession(s)
+    child.conf.set("spark.sql.shuffle.partitions", stateParts(s, srcDir).toString)
+    val q = ColumnBridge.ofRows(child, df.queryExecution.analyzed)
+      .writeStream.format("memory").queryName(name).outputMode(mode).start()
+    try q.processAllAvailable() finally q.stop()
+    try ColumnBridge.ofRows(s, child.table(name).transform(Checkpoints.cut).queryExecution.analyzed)
+    finally child.catalog.dropTempView(name)
   }
 
   /** Tumbling 1-hour panes: counts + exact decimal-accumulated sums

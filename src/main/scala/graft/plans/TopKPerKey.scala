@@ -180,9 +180,7 @@ object TopK {
     * imperatively (the gate's plain sessions have no extensions
     * config; `GraftExtensions` injects the same pair declaratively). */
   def enableRewrite(spark: org.apache.spark.sql.SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
+    addStrategy(spark)
     if (!spark.experimental.extraOptimizations.contains(TopKRewrite))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ TopKRewrite
@@ -195,10 +193,7 @@ object TopK {
       k: Int): DataFrame = {
     require(k > 0)
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-    }
+    addStrategy(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(name: String): Attribute =
       analyzed.output.find(_.name == name).getOrElse(
@@ -210,4 +205,9 @@ object TopK {
     val plan = TopKPerKeyPlan(keyCols.map(attr), ordering, k, analyzed)
     org.apache.spark.sql.graft.ColumnBridge.ofRows(spark, plan)
   }
+
+  /** Only adds: a second call changes nothing. */
+  private def addStrategy(spark: org.apache.spark.sql.SparkSession): Unit =
+    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ TopKStrategy
 }

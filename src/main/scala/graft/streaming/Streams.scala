@@ -67,7 +67,6 @@ object Streams {
     * parquet files (the restart/recovery spec feeds one file per
     * micro-batch through this). */
   def eventsStreamFrom(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // The file source needs a user-supplied schema; probe the landing
     // dir's actual ts dtype with a batch read (cheap: footer only) so
     // the same code streams Long-nanos and NTZ-micros files alike. An

@@ -5,13 +5,18 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Spark 4 removed the public `Column(expr)` constructor (Connect
-  * refactor); the classic bridge lives behind `private[sql]`. This is
-  * the standard extension-library shim: a tiny forwarder compiled
-  * into the `org.apache.spark.sql` namespace. */
+  * refactor); the classic bridge and `cloneSession` live behind
+  * `private[sql]`. This is the standard extension-library shim: a
+  * tiny forwarder compiled into the `org.apache.spark.sql` namespace. */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A child with a copy of the caller's conf, functions, temp views
+    * and strategies: what it changes, `spark` never sees. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
 }

@@ -24,6 +24,8 @@ object SparkTestBase {
       .config("spark.plugins", "graft.mr.ChaosPlugin")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
+      // as graft.Driver.session: parquet TIMESTAMP(NANOS) loads as Long
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

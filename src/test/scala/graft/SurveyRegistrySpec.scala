@@ -22,6 +22,23 @@ class SurveyRegistrySpec extends AnyFunSuite {
     section2.flatMap(l => row.findFirstMatchIn(l).map(_.group(1))).toSet
   }
 
+  /** (path under src/main/scala, text) of every main source file. */
+  private lazy val mainTexts: Seq[(String, String)] = {
+    def sources(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) sources(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+      }
+    val root = new java.io.File("src/main/scala")
+    sources(root).map { f =>
+      val src = scala.io.Source.fromFile(f)("UTF-8")
+      try root.toPath.relativize(f.toPath).toString -> src.mkString finally src.close()
+    }
+  }
+
+  /** The main source file of each match of `pattern`, once per match. */
+  private def sites(pattern: String): Seq[String] = mainTexts.flatMap { case (path, text) =>
+    pattern.r.findAllIn(text).map(_ => path) }
+
   test("every SURVEY §2 row is a registered query, and vice versa") {
     val registered = SparkEntry.queries.keySet
     val undocumented = registered diff surveyKeys
@@ -42,33 +59,14 @@ class SurveyRegistrySpec extends AnyFunSuite {
   }
 
   test("src/main reads only the deployment GRAFT_* settings") {
-    def scalaFiles(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
-        if (f.isDirectory) scalaFiles(f)
-        else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-      }
     val knob = """\bGRAFT_[A-Z_]+""".r
-    val names = scalaFiles(new java.io.File("src/main/scala")).flatMap { f =>
-      val src = scala.io.Source.fromFile(f)("UTF-8")
-      try knob.findAllIn(src.mkString).toList finally src.close()
-    }.toSet
+    val names = mainTexts.flatMap { case (_, text) => knob.findAllIn(text) }.toSet
     assert(names == Set("GRAFT_CHAOS", "GRAFT_INDEX_ROOT",
       "GRAFT_RELIABLE_CHECKPOINT_DIR"),
       s"GRAFT_* names in src/main/scala: ${names.toSeq.sorted}")
   }
 
   test("src/main has one job-group owner, one session builder and one read of each driver setting") {
-    def sources(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
-        if (f.isDirectory) sources(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-      }
-    val root = new java.io.File("src/main/scala")
-    val texts = sources(root).map { f =>
-      val src = scala.io.Source.fromFile(f)("UTF-8")
-      try root.toPath.relativize(f.toPath).toString -> src.mkString finally src.close()
-    }
-    def sites(pattern: String): Seq[String] = texts.flatMap { case (path, text) =>
-      pattern.r.findAllIn(text).map(_ => path) }
     val groupOwners = sites("""setJobGroup|cancelJobGroup\w*""").toSet
     assert(groupOwners == Set("graft/mr/JobTracker.scala"),
       s"files naming setJobGroup/cancelJobGroup*: ${groupOwners.toSeq.sorted}")
@@ -84,24 +82,22 @@ class SurveyRegistrySpec extends AnyFunSuite {
     }
   }
 
+  test("src/main scopes session state only through a clone, and only JobTracker tags jobs") {
+    val children = sites("""newSession\(""")
+    assert(children.isEmpty, s"newSession( in: $children")
+    val nanos = sites("nanosAsLong").toSet
+    assert(nanos == Set("graft/Driver.scala"), s"files naming nanosAsLong: ${nanos.toSeq.sorted}")
+    val taggers = sites("""addJobTag|cancelJobsWithTag""").toSet
+    assert(taggers == Set("graft/mr/JobTracker.scala"),
+      s"files naming addJobTag/cancelJobsWithTag: ${taggers.toSeq.sorted}")
+  }
+
   test("src/main materializes a reused frame only through Checkpoints.cut") {
-    def sources(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
-        if (f.isDirectory) sources(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-      }
-    val root = new java.io.File("src/main/scala")
-    val materializers = """localCheckpoint\(|\.checkpoint\(|persist\(|\.cache\(\)|clearCache""".r
-    val pinObject = """\bobject\s+Pin\b""".r
-    val (sites, pins) = sources(root).map { f =>
-      val src = scala.io.Source.fromFile(f)("UTF-8")
-      val text = try src.mkString finally src.close()
-      val path = root.toPath.relativize(f.toPath).toString
-      (Option.when(materializers.findFirstIn(text).isDefined)(path),
-        Option.when(pinObject.findFirstIn(text).isDefined)(path))
-    }.unzip
-    assert(sites.flatten.toSet == Set("graft/operators/Checkpoints.scala"),
-      s"files that materialize frames: ${sites.flatten.sorted}")
-    assert(pins.flatten.isEmpty, s"a Pin object is defined in: ${pins.flatten}")
+    val materializers = sites("""localCheckpoint\(|\.checkpoint\(|persist\(|\.cache\(\)|clearCache""").toSet
+    assert(materializers == Set("graft/operators/Checkpoints.scala"),
+      s"files that materialize frames: ${materializers.toSeq.sorted}")
+    val pins = sites("""\bobject\s+Pin\b""").toSet
+    assert(pins.isEmpty, s"a Pin object is defined in: $pins")
     assert(scala.util.Try(Class.forName("graft.operators.Pin$")).isFailure,
       "graft.operators.Pin is still on the classpath")
   }

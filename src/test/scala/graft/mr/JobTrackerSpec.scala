@@ -1,11 +1,11 @@
 package graft.mr
 
 import org.apache.spark.{ListenerBusDrain, TaskKilled}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
-import graft.{SparkTestBase, Tables}
+import graft.{SparkEntry, SparkTestBase, Tables}
 
 /** JobTracker's bounds (one record per job, index entries only while a
   * job runs, stats final once terminal) and its per-task metrics. */
@@ -96,6 +96,26 @@ class JobTrackerSpec extends SparkTestBase {
       assert(st.taskStats.map(_.shuffleBytes).sum > 0)
       assert(st.taskStats.forall(t => t.runMs >= 0 && t.gcMs >= 0 && t.spillBytes >= 0))
     } finally tracker.shutdown()
+  }
+
+  test("a streaming row's stats count every Spark job of the row, micro-batches included") {
+    val tracker = new JobTracker(spark)
+    val seen = new java.util.concurrent.atomic.AtomicInteger(0)
+    val counter = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = seen.incrementAndGet()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      val st = tracker.run(
+        { SparkEntry.queries("stream_window_stats")(spark, sfDir).collect(); () }, 120000L)
+      ListenerBusDrain(spark.sparkContext)
+      assert(st.status == "completed", s"job: $st")
+      assert(st.sparkJobs == seen.get, s"tracked ${st.sparkJobs} of the ${seen.get} Spark jobs the row ran")
+    } finally {
+      spark.sparkContext.removeSparkListener(counter)
+      tracker.shutdown()
+    }
   }
 }
 
